@@ -1,39 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
-  * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query seconds.
-  * local[32] with shuffle partitions matched to cores (not 200) and AQE on —
-  * the same knobs that matter on a real cluster, scaled to one box.
+  * `SPARK_GRAFT_SF_DIR` and prints one JSON line with per-query seconds,
+  * on a `graft.Session` with `SPARK_GRAFT_CPUS` cores.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // Static conf, root cause of the round-5 "q35 41.9s in the driver
-      // harness" cliff: the registry's ~125 queries generate ~1,600
-      // distinct codegen classes per pass, but Spark's JVM-global
-      // generated-class cache holds only 100 entries by default — so
-      // the warmup passes and every timed sample re-Janino-compile and
-      // re-JIT the ENTIRE suite (~126 MiB of native code per pass,
-      // measured via graft.JitProbe). Three-plus passes of that churn
-      // overflow any default-sized (240m) JIT code cache, the sweeper
-      // starts flushing, and every query registered after the giant
-      // q35/q36 classes runs 2-3x interpreted. With the cache sized to
-      // the working set, repeat passes compile ZERO new classes (q35:
-      // 84 -> 0), so warmup costs are paid once and a 240m cache holds
-      // the single compiled generation comfortably.
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheMaxEntries.toString)
-      .getOrCreate()
+    val cpus = Session.cores
+    val spark = Session.local("graft-bench", cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // The noop sink evaluates EVERY output column; count() would let
@@ -297,8 +272,7 @@ object Bench {
     }.mkString("{", ",", "}")
     // Run conditions travel WITH the record (round-9 VERDICT item 3:
     // a steady baseline is only comparable under stated conditions).
-    // cpus is quoted as a JSON string — a non-numeric SPARK_GRAFT_CPUS
-    // (e.g. "*") must not produce an unparseable record.
+    // cpus stays a quoted JSON string: the record's shape is frozen.
     val endLoad = loadavg1()
     val conditions =
       f"""{"cpus":"$cpus%s","warmup_passes":"sf0.001 + sf0.01, all queries","per_query_prewarm":"timed, counted when within 20%% of sample 2","jit_quiesce_ms":8000,"min_of":"2-5 incl steady-hint tiebreaker","loadavg_at_end":$endLoad%.1f,"ext_taint_cores":$ExtTaint%.1f}"""

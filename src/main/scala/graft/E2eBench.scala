@@ -42,16 +42,7 @@ object E2eBench {
   def main(args: Array[String]): Unit = {
     val nZips = args.lift(0).map(_.toInt).getOrElse(64)
     val perZip = args.lift(1).map(_.toInt).getOrElse(1250)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-e2e-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheMaxEntries.toString)
-      .getOrCreate()
+    val spark = Session.local("graft-e2e-bench")
     spark.sparkContext.setLogLevel("WARN")
     val r = run(spark, nZips, perZip)
     println(f"""{"metric":"e2e","zips":${r.nZips},"notices":${r.notices},"ok":${r.nOk},"parse_errors":${r.nErr},"extract_sec":${r.tExtract}%.1f,"merge_sec":${r.tMerge}%.1f,"csv_sec":${r.tCsv}%.1f,"total_sec":${r.tExtract + r.tMerge + r.tCsv}%.1f,"shuffle_w_kib":${r.shufWKib},"shuffle_r_kib":${r.shufRKib}}""")

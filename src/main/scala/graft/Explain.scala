@@ -1,18 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: `runMain graft.Explain [queryName...]` prints the
   * formatted physical plan of each named query (default: a scan+agg, a
   * star join, and a text projection) on sf0.001 — the fast way to check
   * pushdown, pruning, broadcast choices, and codegen spans. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.local("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q01_pricing_agg", "q03_region_revenue", "q21_token_stats")

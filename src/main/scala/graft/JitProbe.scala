@@ -5,7 +5,6 @@ import java.lang.management.ManagementFactory
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic: per-query JIT / codegen pressure.
   *
@@ -31,20 +30,7 @@ object JitProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-jitprobe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // static conf: match Bench; override via SPARK_GRAFT_CONF to A/B
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheMaxEntries.toString)
-    // A/B experiments: SPARK_GRAFT_CONF="key=value;key=value"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = Session.local("graft-jitprobe", conf = Session.envConf)
     spark.sparkContext.setLogLevel("WARN")
     val jit = ManagementFactory.getCompilationMXBean
 

@@ -1,149 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch profiler: noop-sink timing for a subset of registered queries.
-  * Usage: runMain graft.Prof q42_xml_flatten q35_ocds_flatten */
+  * Usage: runMain graft.Prof q42_xml_flatten q35_ocds_flatten
+  * (`SPARK_GRAFT_CONF="key=value;..."` adds session settings for A/Bs) */
 object Prof {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val builder = SparkSession.builder()
-      .appName("graft-prof").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", false)
-      // static conf: match Bench (repeat passes reuse generated classes)
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheMaxEntries.toString)
-    // A/B experiments: SPARK_GRAFT_CONF="key=value;key=value"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+    val spark = Session.local("graft-prof", conf = Session.envConf)
     spark.sparkContext.setLogLevel("WARN")
-    val byName: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      SparkEntry.queries ++ Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame](
-        // 1<<20, not Int.MaxValue: seg+7 must not wrap (slice length)
-        "q224_seg_off" -> ((s, d) => ops.Dedup.q224Pipeline(s, d, 1 << 20)),
-        "xml_construct" -> ((s, d) => ops.Xml.docsTable(s, d)),
-        "json_construct" -> ((s, d) => ops.Ocds.releaseJson(s, d)),
-        "q46_scan_only" -> { (s, d) =>
-          import org.apache.spark.sql.functions._
-          import graft.functions.TextFunctions._
-          Tables.documents(s, d)
-            .select(col("doc_id"),
-              explode(shingles(tokens(col("text")), 5)).as("sx"))
-            .select(col("doc_id"), hex32(col("sx")).as("h"))
-            .groupBy("doc_id").agg(min(col("h")).as("m"))
-        },
-        "q46_sig16_expr" -> { (s, d) =>
-          import org.apache.spark.sql.functions._
-          import graft.functions.TextFunctions._
-          Tables.documents(s, d)
-            .select(col("doc_id"),
-              shingleHashes(shingles(tokens(col("text")), 5)).as("hs"))
-            .select(col("doc_id"),
-              array_join(transform(minhashSigFromHashes(col("hs"), 16),
-                _.cast("string")), ",").as("sig"))
-        },
-        "q46_sig16_native" -> { (s, d) =>
-          import org.apache.spark.sql.functions._
-          import graft.functions.TextFunctions._
-          Tables.documents(s, d)
-            .select(col("doc_id"), tokens(col("text")).as("toks"))
-            .select(col("doc_id"),
-              array_join(transform(expr("graft_minhash(toks)"),
-                _.cast("string")), ",").as("sig"))
-        },
-        // round-12 fused-fingerprint diagnostics: is the sh column
-        // evaluated once (guarded projection) or inlined twice?
-        "fpx_sh_only" -> { (s, d) =>
-          import org.apache.spark.sql.functions._
-          import graft.functions.TextFunctions._
-          graft.Q.stageBarrier(Tables.documents(s, d))
-            .select(col("doc_id"), tokens(col("text")).as("toks"))
-            .select(col("doc_id"),
-              array_distinct(tokenShingleHashes(col("toks"))).as("sh"))
-        },
-        "fpx_fused" -> { (s, d) =>
-          import org.apache.spark.sql.functions._
-          import graft.functions.TextFunctions._
-          graft.Q.stageBarrier(Tables.documents(s, d))
-            .select(col("doc_id"), tokens(col("text")).as("toks"))
-            .select(col("doc_id"),
-              array_distinct(tokenShingleHashes(col("toks"))).as("sh"))
-            .withColumn("sig", expr("graft_minhash_hashes(sh)"))
-        },
-        "fpx_two_exprs" -> { (s, d) =>
-          import org.apache.spark.sql.functions._
-          import graft.functions.TextFunctions._
-          graft.Q.stageBarrier(Tables.documents(s, d))
-            .select(col("doc_id"), tokens(col("text")).as("toks"))
-            .select(col("doc_id"),
-              array_distinct(tokenShingleHashes(col("toks"))).as("sh"),
-              expr("graft_minhash(toks)").as("sig"))
-        },
-        "q28_hash_stage" -> { (s, d) =>
-          import org.apache.spark.sql.functions._
-          import graft.functions.TextFunctions._
-          Tables.documents(s, d)
-            .select(col("doc_id"),
-              transform(array_distinct(tokens(col("text"))), t => hex32(t)).as("hs"))
-            .select(col("doc_id"), expr("graft_simhash(hs)").as("code"))
-        },
-        // round-13 A/B: q125's two rank spellings, independent of the
-        // size gate — the registered query picks one by corpus size
-        "q125_rank_global" -> ((s, d) => ops.Similarity.q125RankGlobal(s, d)),
-        "q125_rank_dist" -> ((s, d) => ops.Similarity.q125RankDistributed(s, d)),
-        // round-13 A/B: q313's pre-round-13 from-scratch audit leg
-        // (full base+admitted recompute) vs the registered store-band
-        // reuse shape
-        "q313_scratch_full" -> ((s, d) => ops.Dedup.q313Audit(s, d, reuseStoreBands = false)),
-        // round-13 A/B: q313's pre-fusion report tail (ten
-        // single-aggregate union legs + ckA/after checkpoints) vs the
-        // registered one-pass-per-relation stack() report
-        "q313_report_legs" -> ((s, d) =>
-          ops.Dedup.q313Audit(s, d, reuseStoreBands = true, fusedReport = false)),
-        // round-13 A/B: q74's pre-fusion per-stage count legs (3 scans
-        // of the checkpointed funnel) vs the registered one-pass report
-        "q74_stage_legs" -> ((s, d) =>
-          ops.Clean.q74Funnel(s, d, fusedReport = false)),
-        // round-13 A/B: does q313's decision table still earn its
-        // checkpoint once the fused report is its only consumer context?
-        "q313_dec_nockpt" -> ((s, d) =>
-          ops.Dedup.q313Audit(s, d, reuseStoreBands = true, ckptDec = false)),
-        // round-13 A/B: q220's pre-round-13 distributed power-iteration
-        // unroll vs the registered bounded-collect + local iteration
-        "q220_power_dist" -> ((s, d) => ops.Similarity.q220PowerDistributed(s, d)),
-        // round-13 A/B: q237's pre-round-13 distributed greedy rounds
-        // vs the registered bounded-collect + local replay
-        "q237_greedy_dist" -> ((s, d) => ops.Similarity.q237GreedyDistributed(s, d)),
-        "q36_pruned" -> { (s, d) =>
-          import org.apache.spark.sql.functions._
-          import org.apache.spark.sql.types._
-          val slim = StructType(Seq(StructField("releases", ArrayType(
-            StructType(Seq(StructField("ocid", StringType)))))))
-          val corrupted = ops.Ocds.releaseJson(s, d)
-            .withColumn("release_json",
-              when(col("o_orderkey") % 97 === 0,
-                concat(lit("{corrupt::"), col("release_json"))).otherwise(col("release_json")))
-          corrupted
-            .select(try_element_at(from_json(col("release_json"), slim)
-              .getField("releases"), lit(1)).as("r"))
-            .select(when(col("r").getField("ocid").isNull, "parse_error").otherwise("ok").as("status"),
-              col("r").getField("ocid").isNotNull.as("parsed"))
-            .groupBy("status")
-            .agg(count(lit(1)).as("n"), count(when(col("parsed"), 1)).as("n_parsed"))
-            .orderBy("status")
-        })
-    if (args.contains("simhash_plan")) {
-      import org.apache.spark.sql.functions._
-      import graft.functions.TextFunctions._
-      val hs = Tables.documents(spark, sf).limit(20)
-        .select(col("doc_id"),
-          shingleHashes(array_distinct(shingles(tokens(col("text")), 5))).as("hs"))
-      val both = hs.select(col("doc_id"), expr("graft_simhash(hs)").as("native"))
-      println(both.queryExecution.executedPlan.toString)
-      spark.stop(); return
-    }
+    val byName = SparkEntry.queries
     // shuffle-volume listener: measured evidence for the per-operator
     // scale claims ("one 64-row shuffle", "ids only, never arrays") —
     // bytes written to / read from shuffle per profiled run

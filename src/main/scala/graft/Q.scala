@@ -10,8 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    doc: String = "")
+    oracle: Option[String])
 
 object Q {
   def apply(name: String, oracle: String)(fn: (SparkSession, String) => DataFrame): Q =
@@ -36,26 +35,19 @@ object Q {
     * splits — every production layout, and any multi-file fixture from
     * `graft.Split` — the barrier is a no-op and the redundant exchange
     * disappears; the repartition fires only on low-split inputs, where
-    * it's the difference between 1 busy core and 32. `SPARK_GRAFT_BARRIER`
-    * = `on`/`off` forces either leg (the A/B lever the keep-or-delete
-    * measurement used; `auto` is the default and the shipped behavior).
+    * it's the difference between 1 busy core and 32.
     */
   def stageBarrier(df: DataFrame): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    sys.env.getOrElse("SPARK_GRAFT_BARRIER", "auto") match {
-      case "off" => df
-      case "on"  => df.repartition(n)
-      case _ =>
-        // Leaf FILE count, not plan partition count: Spark byte-range-
-        // splits even a one-row-group file into ~n plan partitions, but
-        // every split except the one holding the row group reads zero
-        // rows — so partition count over-reports real parallelism on
-        // exactly the low-split layouts the barrier exists for. File
-        // count under-reports only for few-files-many-row-groups
-        // layouts, where the cost is one redundant small shuffle (the
-        // pre-round-8 behavior everywhere). Listing is cached in the
-        // session's FileIndex; no job runs.
-        if (df.inputFiles.length >= n) df else df.repartition(n)
-    }
+    // Leaf FILE count, not plan partition count: Spark byte-range-
+    // splits even a one-row-group file into ~n plan partitions, but
+    // every split except the one holding the row group reads zero
+    // rows — so partition count over-reports real parallelism on
+    // exactly the low-split layouts the barrier exists for. File
+    // count under-reports only for few-files-many-row-groups
+    // layouts, where the cost is one redundant small shuffle (the
+    // pre-round-8 behavior everywhere). Listing is cached in the
+    // session's FileIndex; no job runs.
+    if (df.inputFiles.length >= n) df else df.repartition(n)
   }
 }

@@ -89,15 +89,7 @@ object ScaleUp {
     val factor = args.lift(2).map(_.toInt).getOrElse(16)
     val mode = args.lift(3).getOrElse("")
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scaleup")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheMaxEntries.toString)
-      .getOrCreate()
+    val spark = Session.local("graft-scaleup")
     spark.sparkContext.setLogLevel("WARN")
     run(spark, src, dest, factor, mode)
     spark.stop()

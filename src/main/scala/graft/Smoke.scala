@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Mirrors the driver's smoke gate: `SparkEntry.entry(spark)` must return
   * rows > 0 on sf0.001. Prints the count and the formatted physical plan.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-smoke")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-smoke")
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     df.explain("formatted")

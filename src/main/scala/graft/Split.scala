@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Rewrites a fixture tree as MULTI-FILE, MULTI-ROW-GROUP tables — the
   * round-7 VERDICT's top item. The driver ships every table as one
   * parquet file with one row group, so scans plan single-partition and
@@ -25,13 +23,7 @@ object Split {
     val dest = args.lift(1).getOrElse("/tmp/sf0.01-split")
     val nFiles = args.lift(2).map(_.toInt).getOrElse(8)
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-split")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-split")
     spark.sparkContext.setLogLevel("WARN")
     // events.ts round-trips in its source physical encoding: a nanos
     // INT64 file passes through as BIGINT, a timestamp[us] file as NTZ

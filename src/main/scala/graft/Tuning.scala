@@ -15,8 +15,8 @@ package graft
   * the cache's reach fails CI instead of the driver bench.
   */
 object Tuning {
-  /** Codegen class-cache entries for every long-lived session (Bench /
-    * Verify / Prof / JitProbe and the shared test session). Measured:
+  /** Codegen class-cache entries for every session graft.Session
+    * builds (the mains and the shared test session). Measured:
     * ~13 generated classes per registered query on average (682 WSCG
     * spans + standalone projection/ordering/predicate classes ≈ 1,600
     * for 125 queries); the worst single query (q35, 124-column OCDS

@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // static conf: the 125-query registry generates ~1,600 distinct
-      // codegen classes per pass; the default 100-entry class cache
-      // evicts them all between passes (see Bench.scala for the full
-      // story), so re-runs re-compile everything
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheMaxEntries.toString)
-      .getOrCreate()
+    val spark = Session.local("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q91_x,q92_y restricts the dump for fast iteration;

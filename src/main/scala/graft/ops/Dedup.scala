@@ -108,9 +108,6 @@ object Dedup {
     df.coalesce(n).localCheckpoint()
   }
 
-  private def sigTableOf(docs: DataFrame): DataFrame =
-    tightCheckpoint(docs.withColumn("sig", expr("graft_minhash(toks)")))
-
   /** ONE fused fingerprint pass (round-12 optimization, guide §1.2/§2.4:
     * don't compute the same expensive thing twice): (doc_id, n_tok, sh,
     * sig) where `sh` is the distinct 5-shingle hash set (the verify
@@ -1222,11 +1219,10 @@ object Dedup {
        |JOIN nfp na ON na.doc_id = doc_a
        |JOIN nfp nb ON nb.doc_id = doc_b
        |ORDER BY doc_a, doc_b""") { (s, d) =>
-    q224Pipeline(s, d, WinnowSeg)
+    q224Pipeline(s, d)
   }
 
-  /** q224 body with the chunk stride exposed for Prof A/Bs. */
-  private[graft] def q224Pipeline(s: SparkSession, d: String, seg: Int): DataFrame = {
+  private def q224Pipeline(s: SparkSession, d: String): DataFrame = {
     // Checkpoint the fingerprints: the df-count leg and the semi-join
     // leg otherwise RECOMPUTE the whole hash+window pass (their
     // exchanges differ — partial-agg above one, bare fp under the
@@ -1248,8 +1244,8 @@ object Dedup {
     // zipf tree's x8 tail (~800 tokens > seg+7) engages it. Either way
     // the fingerprint set is IDENTICAL (DedupSpec pins segment-merge ==
     // whole-doc), so the oracle never sees the difference.
-    val fp = winnowFingerprints(corpus(s, d), seg,
-        split = maxTokLen(s, d) > seg + 7)
+    val fp = winnowFingerprints(corpus(s, d), WinnowSeg,
+        split = maxTokLen(s, d) > WinnowSeg + 7)
       .repartition(nShuf, col("f")).localCheckpoint()
     val df = fp.groupBy("f").agg(count(lit(1)).as("dfc"))
       .filter(col("dfc") <= 20).select("f")
@@ -1599,29 +1595,21 @@ object Dedup {
        |  UNION ALL SELECT 'store_match', (SELECT CASE WHEN a = s THEN 1 ELSE 0 END FROM ck)
        |)
        |ORDER BY metric""".stripMargin) { (s, d) =>
-    q313Audit(s, d, reuseStoreBands = true)
+    q313Audit(s, d)
   }
 
-  /** q313's body, parameterised on the from-scratch leg's store side:
-    * `reuseStoreBands = true` (the registered round-13 shape) reuses the
-    * shared fingerprint checkpoint's band rows for the unchanged store
-    * and recomputes only the admitted batch docs from tokens;
-    * `false` is the pre-round-13 shape (full base+admitted recompute),
-    * kept as the graft.Prof A/B baseline. `fusedReport = false` keeps
-    * the pre-fusion report tail (ten single-aggregate union legs) as the
-    * other Prof A/B baseline. */
+  /** q313's body. `fusedReport = false` keeps the pre-fusion report
+    * tail (ten single-aggregate union legs) as the oracle DedupSpec
+    * compares the fused report against. */
   private[graft] def q313Audit(s: SparkSession, d: String,
-      reuseStoreBands: Boolean, fusedReport: Boolean = true,
-      ckptDec: Boolean = true): DataFrame = {
+      fusedReport: Boolean = true): DataFrame = {
     val mc = mergeCorpus(s, d)
     // ONE fused fingerprint pass for the decision + append legs (was
     // four sig/shingle passes — round-12 optimization, same algebra)
     val fpAll = fpTableOf(mc)
     val idxFp = fpAll.filter(col("doc_id") < 1000000L)
     val batFp = fpAll.filter(col("doc_id") >= 1000000L)
-    val decPlain = mergeDecisions(idxFp, batFp)
-    val dec = if (ckptDec) decPlain.localCheckpoint() // 3 readers
-      else decPlain
+    val dec = mergeDecisions(idxFp, batFp).localCheckpoint() // 3 readers
     val adm = dec.filter(col("decision") === "new").select("doc_id")
     val before = bandRowsOf(idxFp).select("doc_id", "bkey")
     val appended = bandRowsOf(batFp).select("doc_id", "bkey").join(adm, "doc_id")
@@ -1631,32 +1619,24 @@ object Dedup {
     val after = if (fusedReport) afterPlain
       else afterPlain.localCheckpoint() // 3 readers in the legs spelling
     // the from-scratch leg RECOMPUTES signatures from tokens for the
-    // ADMITTED docs (a fresh sigTableOf pipeline — deliberately NOT the
+    // ADMITTED docs (a fresh graft_minhash pass — deliberately NOT the
     // shared fpAll checkpoint), so the checksum equality still tests the
     // append algebra on the rows the append actually added. The store
     // side reuses the shared fingerprint checkpoint: its band rows are
     // the SAME `before` relation on both sides of the comparison, and
-    // round 12 already pinned graft_minhash_hashes∘distinct ==
-    // graft_minhash bit-equality (PlanSpec), so recomputing the
-    // unchanged store contributed identical checksum terms at corpus
-    // cost — the one full tokenize+md5 pass this query still paid
-    // (round 13, guide §1.2: don't recompute what a checkpoint holds).
-    val scratch =
-      if (reuseStoreBands)
-        // no checkpoint on the recompute: the scratch leg has ONE reader
-        // (the checksum aggregate), so sigTableOf's checkpoint would be
-        // a pure extra sequential job. The aliased `sig` projection
-        // keeps graft_minhash evaluated once per row under the four
-        // bandKey references (CollapseProject's non-cheap-used-twice
-        // guard — the q224 rule).
-        before.unionByName(
-          bandRowsOf(mc.join(adm, "doc_id")
-              .select(col("doc_id"), expr("graft_minhash(toks)").as("sig")))
-            .select("doc_id", "bkey"))
-      else {
-        val keep = idxFp.select("doc_id").unionByName(adm)
-        bandRowsOf(sigTableOf(mc.join(keep, "doc_id"))).select("doc_id", "bkey")
-      }
+    // PlanSpec pins graft_minhash_hashes∘distinct == graft_minhash
+    // bit-equality, so recomputing the unchanged store would only add
+    // identical checksum terms at corpus cost.
+    //
+    // No checkpoint on the recompute: the scratch leg has ONE reader
+    // (the checksum aggregate), so a checkpoint would be a pure extra
+    // sequential job. The aliased `sig` projection keeps graft_minhash
+    // evaluated once per row under the four bandKey references
+    // (CollapseProject's non-cheap-used-twice guard — the q224 rule).
+    val scratch = before.unionByName(
+      bandRowsOf(mc.join(adm, "doc_id")
+          .select(col("doc_id"), expr("graft_minhash(toks)").as("sig")))
+        .select("doc_id", "bkey"))
     val ckOf: Column =
       coalesce(sum(hex32(concat(col("doc_id").cast("string"), lit("_"), col("bkey")))), lit(0L))
     if (fusedReport) {

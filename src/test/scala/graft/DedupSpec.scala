@@ -299,9 +299,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("q313: fused one-pass report is row-identical to the union-legs spelling") {
-    val fused = ops.Dedup.q313Audit(spark, sf, reuseStoreBands = true)
-    val legs = ops.Dedup.q313Audit(spark, sf,
-      reuseStoreBands = true, fusedReport = false)
+    val fused = ops.Dedup.q313Audit(spark, sf)
+    val legs = ops.Dedup.q313Audit(spark, sf, fusedReport = false)
     assert(fused.dtypes.toSeq == legs.dtypes.toSeq)
     assert(fused.exceptAll(legs).isEmpty && legs.exceptAll(fused).isEmpty)
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 
@@ -32,9 +34,18 @@ class JitCanarySpec extends SparkSpec {
         s"no longer covers a full compiled generation (budget $need). " +
         "Raise Tuning.codegenCacheMaxEntries or the suite re-enters the " +
         "round-5 recompile/code-cache-flush cliff.")
-    // the shared test session must actually carry the static conf
-    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries")
-      === Tuning.codegenCacheMaxEntries.toString)
+    // the shared test session must carry every setting graft.Session
+    // puts on a session (the static codegen cache size among them), so a
+    // test session built outside the factory fails here
+    Session.settings(4).foreach { case (k, v) =>
+      assert(spark.conf.getOption(k) === Some(v), s"shared session conf $k")
+    }
+    // and graft.Session is the only place src/main builds a session
+    val builders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+      .map(_.getFileName.toString).toList
+    assert(builders === List("Session.scala"))
   }
 
   test("no whole-stage-codegen span exceeds the source-size ceiling") {
