@@ -1,6 +1,7 @@
 package graft
 
-/** Scratch profiler: noop-sink timing for a subset of registered queries.
+/** Scratch profiler: noop-sink timing and Spark job count for a subset of
+  * registered queries.
   * Usage: runMain graft.Prof q42_xml_flatten q35_ocds_flatten
   * (`SPARK_GRAFT_CONF="key=value;..."` adds session settings for A/Bs) */
 object Prof {
@@ -21,6 +22,9 @@ object Prof {
     // (the listener fires on success) so the ADAPTIVE final plan, not
     // the initial one, is what's scanned.
     val skewNodes = new java.util.concurrent.atomic.AtomicInteger
+    // Spark jobs per profiled run: eager checkpoints, broadcasts and
+    // collects each launch their own, so a job diet shows here per query
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
@@ -41,6 +45,9 @@ object Prof {
       Int, java.util.concurrent.ConcurrentLinkedQueue[Double]]
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
         override def onTaskEnd(
             te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
           if (te.taskInfo != null)
@@ -65,7 +72,7 @@ object Prof {
       // independent of what ran before it (same rationale as Bench)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      shufWrite.set(0); shufRead.set(0); stages.clear(); skewNodes.set(0)
+      shufWrite.set(0); shufRead.set(0); stages.clear(); skewNodes.set(0); jobs.set(0)
       taskSecs.clear()
       val t0 = System.nanoTime()
       byName(name)(spark, sf).write.format("noop").mode("overwrite").save()
@@ -90,7 +97,7 @@ object Prof {
       val stragStr = strag.map { case (r, sid, mx, med) =>
         f"straggler=$r%.1fx(s$sid max=$mx%.1fs med=$med%.1fs)" }
         .getOrElse("straggler=1.0x")
-      println(f"[prof] $name%-24s $sec%.2f s  shuffle w=${shufWrite.get / 1024}%d KiB r=${shufRead.get / 1024}%d KiB skew=${skewNodes.get}%d $stragStr")
+      println(f"[prof] $name%-24s $sec%.2f s  jobs=${jobs.get}%d shuffle w=${shufWrite.get / 1024}%d KiB r=${shufRead.get / 1024}%d KiB skew=${skewNodes.get}%d $stragStr")
       val heavy = stages.asScala.toSeq.sortBy(-_._3).take(6)
         .map { case (id, n, s) => f"s$id:$n%dt/$s%.1fs" }.mkString(" ")
       println(s"[prof-stages] $name $heavy")

@@ -26,15 +26,32 @@ object Dedup {
   /** Corpus with synthesized duplicates: (doc_id, toks). The barrier
     * spreads the single-row-group scan across cores so the signature /
     * shingle stages downstream parallelize (see Text.docs). */
-  def corpus(s: SparkSession, d: String): DataFrame = {
-    val base = graft.Q.stageBarrier(Tables.documents(s, d))
+  def corpus(s: SparkSession, d: String): DataFrame = corpusLegs(s, d, copyLegs)
+
+  /** The near copies (first token dropped) and the exact copies. */
+  private val copyLegs: Seq[(Column, Long, Column)] = Seq(
+    (col("doc_id") % 5 === 0, 1000000L, slice(col("toks"), lit(2), size(col("toks")))),
+    (col("doc_id") % 7 === 0, 2000000L, col("toks")))
+
+  /** The base docs plus one synthetic leg per (keep predicate, id
+    * offset, toks) over the base (doc_id, toks), all from ONE scan and
+    * ONE barrier exchange: each base row explodes into the tags of the
+    * legs that keep it, and each tag picks its leg's id and tokens. A
+    * union of per-leg filters instead would get each leg's `doc_id %
+    * k` filter pushed below the exchange, planning one scan + exchange
+    * per leg. */
+  private def corpusLegs(s: SparkSession, d: String,
+      legs: Seq[(Column, Long, Column)]): DataFrame = {
+    val tag = col("_leg")
+    def pick(base: Column, f: ((Column, Long, Column)) => Column): Column =
+      legs.zipWithIndex.foldLeft(base) { case (c, (leg, i)) => when(tag === i + 1, f(leg)).otherwise(c) }
+    graft.Q.stageBarrier(Tables.documents(s, d))
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-    val near = base.filter(col("doc_id") % 5 === 0)
-      .select((col("doc_id") + 1000000L).as("doc_id"),
-        slice(col("toks"), lit(2), size(col("toks"))).as("toks"))
-    val exact = base.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 2000000L).as("doc_id"), col("toks"))
-    base.unionByName(near).unionByName(exact)
+      .withColumn("_leg", explode(array(lit(0) +: legs.zipWithIndex.map {
+        case ((keep, _, _), i) => when(keep, lit(i + 1)) }: _*)))
+      .filter(tag.isNotNull)
+      .select((col("doc_id") + pick(lit(0L), leg => lit(leg._2))).as("doc_id"),
+        pick(col("toks"), _._3).as("toks"))
   }
 
   // ---- DuckDB mirrors of the corpus and the signature primitives ----
@@ -381,22 +398,23 @@ object Dedup {
     * SYMMETRIC (both directions present); labels are node ids and the
     * component label is the component's minimum id. Convergence is
     * detected by the label sum (labels only decrease, so an unchanged
-    * sum IS the fixpoint — one scalar aggregate per round instead of a
-    * join-diff); hitting the round cap without converging throws
-    * rather than silently emitting wrong labels. */
+    * sum IS the fixpoint): each round's checkpoint job also returns the
+    * per-partition sums ([[graft.Materialize.sumLong]]), so detection
+    * costs no job of its own. The sum overflows loudly, as ANSI SUM
+    * does. Hitting the round cap without converging throws rather than
+    * silently emitting wrong labels. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 50): DataFrame = {
-    var labels = nodes.select(col("id"), col("id").as("comp")).localCheckpoint()
-    var converged = false
-    var rounds = 0
     // sum(comp) over an EMPTY node set is NULL — an empty graph is a
     // (trivially converged) fixpoint, not a crash (q252's core set can
     // be empty at tiny scale factors)
-    def compSum(df: DataFrame): Long = {
-      val r = df.agg(sum(col("comp"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
+    def checkpointSum(df: DataFrame): (DataFrame, Long) = {
+      val (snap, total) = graft.Materialize.sumLong(df, "comp")
+      (snap, total.getOrElse(0L))
     }
-    var prevSum = compSum(labels)
+    var (labels, prevSum) = checkpointSum(nodes.select(col("id"), col("id").as("comp")))
+    var converged = false
+    var rounds = 0
     while (!converged && rounds < maxRounds) {
       val neighborMin = edges
         .join(labels, col("a") === col("id"))
@@ -406,12 +424,10 @@ object Dedup {
       // pointer jumping: every comp value is itself a node id (min over
       // ids seen), so the self-join shortcuts each label to its label's
       // label, halving the remaining hop distance to the component min
-      val next = propagated.as("l")
+      val (next, nextSum) = checkpointSum(propagated.as("l")
         .join(propagated.select(col("id").as("pid"), col("comp").as("pcomp")).as("p"),
           col("l.comp") === col("p.pid"))
-        .select(col("l.id").as("id"), least(col("l.comp"), col("pcomp")).as("comp"))
-        .localCheckpoint()
-      val nextSum = compSum(next)
+        .select(col("l.id").as("id"), least(col("l.comp"), col("pcomp")).as("comp")))
       converged = nextSum == prevSum
       prevSum = nextSum
       labels = next
@@ -1056,7 +1072,7 @@ object Dedup {
     // separator above '0' would invert those pairs vs the oracle
     val ranked = Graph.rankIds(
       noisy.withColumn("srt", concat(col("nm"), lit("!"),
-        lpad(col("k").cast("string"), 12, "0"))), "srt", "rk")
+        lpad(col("k").cast("string"), 12, "0"))), "srt", "rk")._1
       .select(col("k"), col("nm"), col("rk"))
     val left = ranked.select(col("k").as("a_key"), col("nm").as("a_nm"),
       col("rk").as("ra"), (col("rk") / w).cast("long").as("blk"))
@@ -1363,14 +1379,10 @@ object Dedup {
     * resolution leg is non-trivial (near/exact copies always have an
     * index-side match and exit at the probe). */
   private[graft] def mergeCorpus(s: SparkSession, d: String): DataFrame = {
-    val all = corpus(s, d)
-    val b0 = all.filter(col("doc_id") < 1000000L && col("doc_id") % 11 === 0)
     val halfLen = expr("(size(toks)+1) div 2")
-    val halfA = b0.select((col("doc_id") + 3000000L).as("doc_id"),
-      slice(col("toks"), lit(1), halfLen).as("toks"))
-    val halfB = b0.select((col("doc_id") + 4000000L).as("doc_id"),
-      slice(col("toks"), lit(1), halfLen - 1).as("toks"))
-    all.unionByName(halfA).unionByName(halfB)
+    corpusLegs(s, d, copyLegs ++ Seq(
+      (col("doc_id") % 11 === 0, 3000000L, slice(col("toks"), lit(1), halfLen)),
+      (col("doc_id") % 11 === 0, 4000000L, slice(col("toks"), lit(1), halfLen - 1))))
   }
 
   /** DuckDB mirror of [[mergeCorpus]] (extends DCorpus — keep in sync). */
@@ -1523,13 +1535,16 @@ object Dedup {
       batchDocs: DataFrame): (Int, DataFrame) = {
     val store = graft.sources.Versioned.read(spark, dir).localCheckpoint()
     val bat = fingerprintStore(batchDocs).localCheckpoint()
-    val dec = mergeDecisions(store, bat)
-      .localCheckpoint() // read for the admit filter AND returned
-    val admitted = bat.join(
-      dec.filter(col("decision") === "new").select("doc_id"), "doc_id")
+    // read for the admit filter AND returned; its checkpoint job also
+    // counts the novel docs (every decision row is a batch doc)
+    val decided = mergeDecisions(store, bat)
+    val di = decided.schema.fieldIndex("decision")
+    val isNew = org.apache.spark.unsafe.types.UTF8String.fromString("new")
+    val (dec, nNew) = graft.Materialize.count(decided)(r => r.getUTF8String(di) == isNew)
     val v =
-      if (admitted.isEmpty) graft.sources.Versioned.latestVersion(dir).getOrElse(0)
-      else graft.sources.Versioned.commitAppend(spark, dir, admitted)
+      if (nNew == 0) graft.sources.Versioned.latestVersion(dir).getOrElse(0)
+      else graft.sources.Versioned.commitAppend(spark, dir, bat.join(
+        dec.filter(col("decision") === "new").select("doc_id"), "doc_id"))
     (v, dec)
   }
 

@@ -26,51 +26,45 @@ object Graph {
     * whatever the boundaries are; at 10⁷+ hosts this scales where the
     * empty-frame window funnels all rows through one task.
     *
-    * Entirely in the DataFrame layer (round-7 VERDICT item 5 — the
-    * previous `rdd.zipWithIndex` spelling cost an extra job plus an
-    * InternalRow→Row round trip outside codegen):
     * `monotonically_increasing_id()` evaluated above the range exchange
     * is `partitionId << 33 | rowOffsetInPartition`, with the offset
-    * following the sorted row order — decompose it, aggregate per-
-    * partition row counts (≤ numPartitions rows), turn them into base
-    * offsets with a cumulative sum over that tiny frame, and broadcast-
-    * join the bases back. The two references to `sorted` share one
-    * shuffle via exchange reuse (numPartitions is pinned so AQE cannot
-    * re-coalesce the sides differently).
+    * following the sorted row order. The sorted frame is checkpointed
+    * through [[graft.Materialize.fold]], whose one job also returns each
+    * partition's (partition id, row count); the driver turns those into
+    * base offsets, and the id is a projection over the snapshot with the
+    * bases as a literal array — no second pass over the rows, no join.
+    * Every id comes from that one snapshot, so no plan re-runs the range
+    * exchange (whose boundary sampling is seeded by the RDD id, so two
+    * runs can partition differently — q205 once got duplicate ranks
+    * when exchange reuse failed between two readers of the sort).
+    *
+    * Returns the ranked frame and its row count.
     *
     * PRECONDITION (keep this helper library-internal): `key` must be
     * globally distinct and non-null — callers pass groupBy output or a
     * composite key made unique by construction (q205's name|custkey).
     * With duplicate keys the within-partition order of ties (and hence
     * their ranks) would be arbitrary; nulls would sort first. */
-  private[ops] def rankIds(df: DataFrame, key: String, idCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private[graft] def rankIds(df: DataFrame, key: String, idCol: String): (DataFrame, Long) = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // localCheckpoint is LOAD-BEARING: `sorted` is read twice (bases +
-    // final join), and without materialization the two subtrees can
-    // canonicalize differently (e.g. column pruning narrows one side's
-    // scan), defeating exchange reuse — each side then re-executes
-    // repartitionByRange, whose boundary SAMPLING is seeded by the RDD
-    // id, yielding two different partitionings and corrupt ranks
-    // (duplicates + gaps; q205 exposed this with a scan-rooted input —
-    // aggregate-rooted inputs like q128's had happened to reuse). One
-    // materialized snapshot makes both passes read identical partitions.
     val sorted = df.repartitionByRange(n, col(key)).sortWithinPartitions(key)
       .withColumn("_mid", monotonically_increasing_id())
-      .withColumn("_pid", shiftright(col("_mid"), 33))
-      .withColumn("_off", col("_mid").bitwiseAND(lit((1L << 33) - 1)))
-      .localCheckpoint()
-    // ≤ n rows: the cumulative-sum window over _pid is a deliberate
-    // single-task pass over partition COUNTS, not data.
-    val bases = sorted.groupBy("_pid").agg(count(lit(1)).as("_n"))
-      .withColumn("_base",
-        coalesce(sum("_n").over(
-          Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select("_pid", "_base")
-    sorted.join(broadcast(bases), "_pid")
-      .withColumn(idCol, col("_base") + col("_off"))
-      .drop("_pid", "_mid", "_off", "_base")
+    val mi = sorted.schema.fieldIndex("_mid")
+    // (partition id, rows) per non-empty partition
+    val (snap, sizes) = graft.Materialize.fold(sorted) { it =>
+      if (!it.hasNext) None
+      else { val pid = it.next().getLong(mi) >>> 33; Some((pid, 1L + it.size)) }
+    }
+    val counts = sizes.flatten.sortBy(_._1)
+    // bases(pid) = rows in all lower partitions
+    val bases = Array.fill(counts.lastOption.fold(0)(_._1.toInt + 1))(0L)
+    counts.foldLeft(0L) { case (base, (pid, rows)) => bases(pid.toInt) = base; base + rows }
+    val ranked = snap
+      .withColumn(idCol, element_at(typedLit(bases.toSeq),
+          (shiftright(col("_mid"), 33) + 1).cast("int"))
+        + col("_mid").bitwiseAND(lit((1L << 33) - 1)))
+      .drop("_mid")
+    (ranked, counts.map(_._2).sum)
   }
 
   /** Damped PageRank power iteration in integer micro-units:
@@ -147,14 +141,12 @@ object Graph {
          |ORDER BY rank_micro DESC, host"""
     }) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val hosts = rankIds(
+    val (hosts, nh) = rankIds(
       docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-    val nh = hosts.agg(count(lit(1)).as("n"))
     val links = docs
       .join(broadcast(hosts.select("source", "hid")), "source")
-      .crossJoin(broadcast(nh)) // 1-row host count: scale-safe scalar
       .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % col("n")): _*)).as("dst"))
+        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
     val edges = links.groupBy("src", "dst").agg(count(lit(1)).as("w"))
     val deg = hosts.select(col("hid"), (col("n_docs") * 3).as("outdeg"))
     val ranks = powerIterate(hosts.select("hid"), edges, deg, iters = 3)
@@ -227,14 +219,12 @@ object Graph {
       |FROM hosts h LEFT JOIN credit c USING (hid)
       |ORDER BY host""") { (s, d) =>
     val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val hosts = rankIds(
+    val (hosts, nh) = rankIds(
       docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-    val nh = hosts.agg(count(lit(1)).as("n"))
     val links = docs
       .join(broadcast(hosts.select("source", "hid")), "source")
-      .crossJoin(broadcast(nh))
       .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % col("n")): _*)).as("dst"))
+        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
     // edge-cardinality tables referenced multiply below — materialize
     // once (ue feeds degree + orientation; o feeds both wedge legs and
     // the closing-edge probe)
@@ -441,14 +431,12 @@ object Graph {
          |ORDER BY host"""
     }) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val hosts = rankIds(
+    val (hosts, nh) = rankIds(
       docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-    val nh = hosts.agg(count(lit(1)).as("n"))
     val links = docs
       .join(broadcast(hosts.select("source", "hid")), "source")
-      .crossJoin(broadcast(nh)) // 1-row host count: scale-safe scalar
       .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % col("n")): _*)).as("dst"))
+        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
     val edges = links.distinct()
     var dist = hosts.filter(col("hid") % 7 === 0)
       .select(col("hid"), lit(0L).as("dist"))
@@ -519,14 +507,12 @@ object Graph {
       |  END AS assortativity_milli
       |FROM m""") { (s, d) =>
     val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val hosts = rankIds(
+    val (hosts, nh) = rankIds(
       docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-    val nh = hosts.agg(count(lit(1)).as("n"))
     val links = docs
       .join(broadcast(hosts.select("source", "hid")), "source")
-      .crossJoin(broadcast(nh)) // 1-row host count: scale-safe scalar
       .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % col("n")): _*)).as("dst"))
+        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
     val ue = links.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -555,20 +541,18 @@ object Graph {
     * hosts = distinct `source` values ranked to dense ids, links = 3
     * md5-derived directed edges per document (multi-edges kept — callers
     * dedup as their semantics require). The ONLY corpus-cardinality
-    * stage is the link-extraction scan; hosts and the 1-row count are
-    * broadcast. Identical construction to q128/q160/q198/q209 (kept
+    * stage is the link-extraction scan; hosts are broadcast and the host
+    * count is a literal (rankIds returns it). Identical construction to q128/q160/q198/q209 (kept
     * inline there — their oracles were written against it first). */
   private def hostLinkGraph(s: org.apache.spark.sql.SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val hosts = rankIds(
+    val (hosts, nh) = rankIds(
       docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-    val nh = hosts.agg(count(lit(1)).as("n"))
     val links = docs
       .join(broadcast(hosts.select("source", "hid")), "source")
-      .crossJoin(broadcast(nh)) // 1-row host count: scale-safe scalar
       .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % col("n")): _*)).as("dst"))
+        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
     (hosts, links)
   }
 
@@ -670,8 +654,9 @@ object Graph {
     * degree table is computed anyway — so the helper asserts it and
     * FAILS LOUD when the unroll was too shallow for the graph's peel
     * depth (a 100x-diameter graph at the fixture's round budget),
-    * instead of silently returning a non-core superset. One extra
-    * node-cardinality count, no extra peel round. */
+    * instead of silently returning a non-core superset. The count is
+    * folded into the final degree table's checkpoint job: no extra job,
+    * no extra peel round. */
   private[graft] def kcoreSurvivors(nodes: DataFrame, und: DataFrame,
       k: Int, rounds: Int): DataFrame = {
     def aliveDeg(alive: DataFrame): DataFrame = und
@@ -694,10 +679,10 @@ object Graph {
       // queries. If round budgets grow, unpersist round r-1's
       // checkpointed RDD here once round r materializes.
     }
-    val fin = aliveDeg(alive)
-      .select(col("u").as("v"), col("dg").as("core_degree"))
-      .localCheckpoint() // read by the guard count AND the caller
-    val stray = fin.filter(col("core_degree") < k).count()
+    // the guard's count comes out of fin's own checkpoint job
+    val finDeg = aliveDeg(alive).select(col("u").as("v"), col("dg").as("core_degree"))
+    val di = finDeg.schema.fieldIndex("core_degree")
+    val (fin, stray) = graft.Materialize.count(finDeg)(_.getLong(di) < k)
     if (stray != 0) throw new IllegalStateException(
       s"k-core peel not at fixpoint after $rounds rounds: $stray survivors " +
         s"still below degree $k — raise the round budget for this graph")
@@ -718,7 +703,8 @@ object Graph {
     *
     * Scale posture: link extraction is the only corpus-cardinality
     * stage; score tables are host-cardinality and BROADCAST into the
-    * edge list; per-half-round max is a 1-row scalar (broadcast). */
+    * edge list; each half-round's max comes back from its checkpoint
+    * job and enters the rescale as a literal. */
   val q212Hits: Q = Q(
     "q212_hits",
     s"""WITH d AS (
@@ -769,36 +755,32 @@ object Graph {
     * run `rounds` full rounds of a(v) = Σ h(u), rescale to ppm of max,
     * h(u) = Σ a(v), rescale — returning (hid, auth_ppm, hub_ppm) with
     * 0 for hosts no edge reaches. Score tables are node-cardinality →
-    * broadcast into the edge list; the per-half-round max is a 1-row
-    * scalar. */
+    * broadcast into the edge list. */
   private[graft] def hitsScores(hosts: DataFrame, edges: DataFrame,
       rounds: Int): DataFrame = {
     // One max-normalized half-round: fold `score` through the edge list
-    // in direction (from → to), then rescale to ppm of the max.
+    // in direction (from → to), checkpoint the raw sums — the same job
+    // returns their max — then rescale to ppm of that max as a
+    // projection over the snapshot, with the max as a literal. The
+    // checkpoint makes every score table a one-shot input to the next
+    // round instead of re-deriving the whole chain per reference (on a
+    // cluster: a per-iteration checkpoint of a host-cardinality table,
+    // standard iterative-algorithm hygiene, as in connectedComponents).
+    // Each half-round's plan embeds the previous max as a literal, so
+    // the four plans differ in that constant and compile separately.
     def halfRound(score: DataFrame, from: String, to: String): DataFrame = {
       val raw = edges
         .join(broadcast(score.withColumnRenamed("hid", from)), from)
         .groupBy(col(to).as("hid")).agg(sum("x").as("raw"))
-      val mx = raw.agg(max("raw").as("mx"))
-      raw.crossJoin(broadcast(mx)) // 1-row max: scale-safe scalar
-        .select(col("hid"), expr("raw * 1000000 div mx").as("x"))
+      val (snap, mx) = graft.Materialize.maxLong(raw, "raw")
+      snap.select(col("hid"),
+        mx.fold(lit(null).cast("long"))(m => expr(s"raw * 1000000 div $m")).as("x"))
     }
-    // Each half-round is localCheckpoint'd: beyond making every score
-    // table a one-shot input to the next round (instead of re-deriving
-    // the whole chain per reference), the checkpoint boundary keeps all
-    // four half-rounds STRUCTURALLY IDENTICAL plans (RDD scan → bcast
-    // join → agg → scalar rescale), so they share one set of generated
-    // classes instead of four nested-depth variants — measured: the
-    // unrolled spelling kept C2 churning for ~8 executions (jit= 3-5 s
-    // per run, wall 3.5 s settling to 2.7 only after ~10 runs); the
-    // staged spelling compiles once and reuses. On a cluster this is a
-    // per-iteration checkpoint of a host-cardinality table — standard
-    // iterative-algorithm hygiene (same as connectedComponents).
-    var h = hosts.select(col("hid"), lit(1000000L).as("x")).localCheckpoint()
+    var h = hosts.select(col("hid"), lit(1000000L).as("x"))
     var a: DataFrame = null
     (1 to rounds).foreach { _ =>
-      a = halfRound(h, "src", "dst").localCheckpoint()
-      h = halfRound(a, "dst", "src").localCheckpoint()
+      a = halfRound(h, "src", "dst")
+      h = halfRound(a, "dst", "src")
     }
     hosts.select("hid")
       .join(a.withColumnRenamed("x", "a"), Seq("hid"), "left")
@@ -1103,31 +1085,27 @@ object Graph {
          |ORDER BY ppr_micro DESC, host"""
     }) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val hosts = rankIds(
+    val (hosts, nh) = rankIds(
       docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-      .localCheckpoint() // host cells: links, deg, seed mass, export read it
-    val nh = hosts.agg(count(lit(1)).as("n"))
     val links = docs
       .join(broadcast(hosts.select("source", "hid")), "source")
-      .crossJoin(broadcast(nh)) // 1-row host count: scale-safe scalar
       .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % col("n")): _*)).as("dst"))
+        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
     val edges = links.groupBy("src", "dst").agg(count(lit(1)).as("w"))
       .localCheckpoint() // host-graph cells: every round reads it
     val deg = hosts.select(col("hid"), (col("n_docs") * 3).as("outdeg"))
-    var r = hosts.crossJoin(broadcast(nh))
-      .select(col("hid"),
-        when(col("hid") === 0, lit(1000000L) * col("n")).otherwise(0L).as("r"))
+    var r = hosts.select(col("hid"),
+      when(col("hid") === 0, lit(1000000L) * nh).otherwise(0L).as("r"))
     (1 to 3).foreach { _ =>
       val contrib = edges
         .join(broadcast(r.select(col("hid").as("src"), col("r").as("pr"))), "src")
         .join(broadcast(deg.select(col("hid").as("src"), col("outdeg"))), "src")
         .groupBy("dst")
         .agg(sum(expr("w * (pr div outdeg)")).as("c"))
-      r = hosts.select("hid").crossJoin(broadcast(nh))
+      r = hosts.select("hid")
         .join(contrib.select(col("dst").as("hid"), col("c")), Seq("hid"), "left")
         .select(col("hid"),
-          (when(col("hid") === 0, lit(150000L) * col("n")).otherwise(0L)
+          (when(col("hid") === 0, lit(150000L) * nh).otherwise(0L)
             + expr("(850 * coalesce(c, CAST(0 AS BIGINT))) div 1000")).as("r"))
     }
     hosts.join(r, "hid")

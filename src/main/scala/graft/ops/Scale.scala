@@ -145,10 +145,13 @@ object Scale {
     * a contiguous slice of one-or-more languages), sort within
     * partitions, then reconstruct the within-language rank from tiny
     * per-(partition, language) stats — count and first-row offset, at
-    * most partitions x languages rows — cumulated per language and
-    * broadcast back. Rows never move twice; the heavy data sees one
-    * range exchange, reused by both the stats pass and the join-back
-    * (numPartitions pinned so AQE cannot re-coalesce the sides apart).
+    * most partitions x languages rows. The sorted frame is checkpointed
+    * through graft.Materialize.fold, whose one job also returns those
+    * stats; the driver cumulates them per language and the rank is a
+    * broadcast join of that small table onto the snapshot. Both the
+    * stats and the ranks come from the one snapshot, so no plan re-runs
+    * the range exchange (whose boundary sampling could partition a
+    * second run differently). Rows never move twice.
     * Ties are impossible: doc_id is in the sort key on both engines. */
   val q146StratifiedSplit: Q = Q(
     "q146_stratified_split",
@@ -167,30 +170,38 @@ object Scale {
       |       WHEN rk * 10 < tot * 9 THEN 'val'
       |       ELSE 'test' END AS split
       |FROM ranked ORDER BY lang, doc_id""") { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
+    import s.implicits._
     val keyed = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
         graft.functions.TextFunctions.hex32(
           concat(lit("split_"), col("doc_id").cast("string"))).as("ord"))
     val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sorted = keyed
+    val sortedDf = keyed
       .repartitionByRange(n, col("lang"), col("ord"), col("doc_id"))
       .sortWithinPartitions("lang", "ord", "doc_id")
       .withColumn("_mid", monotonically_increasing_id())
       .withColumn("_pid", shiftright(col("_mid"), 33))
       .withColumn("_off", col("_mid").bitwiseAND(lit((1L << 33) - 1)))
-    // <= numPartitions x languages rows: stats, not data.
-    val stats = sorted.groupBy("_pid", "lang")
-      .agg(count(lit(1)).as("_n"), min(col("_off")).as("_minoff"))
-    val bases = stats.withColumn("_base",
-      coalesce(sum("_n").over(
-        Window.partitionBy("lang").orderBy("_pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val totals = stats.groupBy("lang").agg(sum("_n").as("_tot"))
+    val Seq(li, pi, oi) = Seq("lang", "_pid", "_off").map(sortedDf.schema.fieldIndex)
+    // per partition, one (partition id, lang, rows, first offset) per
+    // language: a language's rows are contiguous in a sorted partition
+    val (sorted, stats) = graft.Materialize.fold(sortedDf) { it =>
+      val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
+      it.foreach { r =>
+        val lang = if (r.isNullAt(li)) null else r.getUTF8String(li).toString
+        if (runs.isEmpty || runs.last._2 != lang) runs += ((r.getLong(pi), lang, 1L, r.getLong(oi)))
+        else runs(runs.length - 1) = runs.last.copy(_3 = runs.last._3 + 1)
+      }
+      runs.toArray
+    }
+    val bases = stats.flatten.toSeq.groupBy(_._2).toSeq.flatMap { case (lang, rs) =>
+      val sortedRuns = rs.sortBy(_._1)
+      val tot = sortedRuns.map(_._3).sum
+      sortedRuns.scanLeft(0L)(_ + _._3).zip(sortedRuns).map { case (base, (pid, _, _, minOff)) =>
+        (pid, lang, base, minOff, tot) }
+    }.toDF("_pid", "lang", "_base", "_minoff", "_tot")
     sorted
-      .join(broadcast(bases.select("_pid", "lang", "_base", "_minoff")),
-        Seq("_pid", "lang"))
-      .join(broadcast(totals), Seq("lang"))
+      .join(broadcast(bases), Seq("_pid", "lang"))
       .withColumn("rank_in_lang", col("_base") + col("_off") - col("_minoff"))
       .select(col("lang"), col("doc_id"), col("rank_in_lang"),
         when(col("rank_in_lang") * 10 < col("_tot") * 8, "train")

@@ -1,11 +1,16 @@
 package org.apache.spark.sql.graft
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Bridge into the `private[sql]` Dataset constructor so graft's custom
-  * logical operators (plans.TopKPerGroupPlan) can be wrapped back into a
-  * public DataFrame — the standard extension-library shim; nothing else
+/** Bridge into `private[sql]` APIs: the Dataset constructor, so graft's
+  * custom logical operators (plans.TopKPerGroupPlan) can be wrapped back
+  * into a public DataFrame, and the checkpoint internals behind
+  * graft.Materialize — the standard extension-library shim; nothing else
   * may live in this package. */
 object PlanShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -19,4 +24,23 @@ object PlanShim {
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
   def expression(c: org.apache.spark.sql.Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** `Dataset.localCheckpoint(eager = true)` with the eager job doing
+    * double duty: the same `runJob` that caches every partition also
+    * returns `f` of each partition's rows (graft.Materialize.fold). Runs
+    * under one SQL execution id, named like the built-in checkpoint, so
+    * QueryExecutionListeners see the plan exactly as they see a
+    * `localCheckpoint()`. */
+  def checkpointFold[A: ClassTag](df: DataFrame, f: Iterator[InternalRow] => A)
+      : (DataFrame, Array[A]) = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val qe = ds.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+      val rdd = qe.executedPlan.execute().map(_.copy()).localCheckpoint()
+      val parts = ds.sparkSession.sparkContext.runJob(rdd, f)
+      val snap = org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+        LogicalRDD.fromDataset(rdd, ds, ds.isStreaming))
+      (snap, parts)
+    }
+  }
 }

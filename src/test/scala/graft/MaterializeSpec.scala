@@ -1,0 +1,125 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
+/** graft.Materialize: the scalar a checkpoint job folds out of its rows
+  * must equal the separate aggregate it replaces, and the helpers built
+  * on it (rankIds, q146, connectedComponents) must not depend on how
+  * Spark happens to execute the plan. */
+class MaterializeSpec extends SparkSpec {
+
+  private def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  test("fold scalars equal the separate aggregates, empty and all-NULL included") {
+    val full = spark.range(0, 1000, 1, 7)
+      .select(((col("id") * 7919) % 1000 - 300).as("x"), lit(null).cast("long").as("nul"))
+    val empty = full.filter(lit(false))
+    for (df <- Seq(full, empty); c <- Seq("x", "nul")) {
+      val exp = df.agg(sum(c), max(c), count(when(col(c) > 100, 1))).head()
+      def opt(i: Int) = if (exp.isNullAt(i)) None else Some(exp.getLong(i))
+      val (s1, sm) = Materialize.sumLong(df, c)
+      val (s2, mx) = Materialize.maxLong(df, c)
+      val i = df.schema.fieldIndex(c)
+      val (s3, n) = Materialize.count(df)(r => !r.isNullAt(i) && r.getLong(i) > 100)
+      assert(sm == opt(0), s"sum($c)")
+      assert(mx == opt(1), s"max($c)")
+      assert(n == exp.getLong(2), s"count($c > 100)")
+      // the snapshots hold the frame's rows
+      Seq(s1, s2, s3).foreach(snap => assert(rows(snap) == rows(df)))
+    }
+  }
+
+  test("sumLong overflows loudly, as ANSI SUM does") {
+    // overflow inside one partition and across partitions
+    for (parts <- Seq(1, 2)) {
+      val big = spark.range(0, 4, 1, parts).select(lit(Long.MaxValue / 2).as("x"))
+      val e = intercept[Exception](Materialize.sumLong(big, "x"))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+    }
+  }
+
+  test("rankIds equals row_number() - 1 with exchange reuse off and with AQE off") {
+    val df = spark.range(0, 1000, 1, 7).select(((col("id") * 7919) % 1000).cast("string").as("k"))
+    val exp = rows(df.withColumn("rk",
+      row_number().over(Window.orderBy("k")) - 1))
+    for (conf <- Seq("spark.sql.exchange.reuse" -> "false",
+        "spark.sql.adaptive.enabled" -> "false")) withConf(conf) {
+      val (ranked, n) = ops.Graph.rankIds(df, "k", "rk")
+      assert(n == 1000L, conf)
+      assert(rows(ranked.select("k", "rk")) == exp, conf)
+    }
+  }
+
+  test("q146 gives the same rows with exchange reuse off") {
+    val q = SparkEntry.queries("q146_stratified_split")
+    val on = rows(q(spark, sf))
+    val off = withConf("spark.sql.exchange.reuse" -> "false")(rows(q(spark, sf)))
+    assert(off == on)
+    // and they are the per-language row_number ranks
+    val exp = rows(Tables.documents(spark, sf)
+      .select(col("doc_id"), col("lang"), functions.TextFunctions.hex32(
+        concat(lit("split_"), col("doc_id").cast("string"))).as("ord"))
+      .withColumn("rank_in_lang", row_number().over(
+        Window.partitionBy("lang").orderBy("ord", "doc_id")) - 1)
+      .withColumn("tot", count(lit(1)).over(Window.partitionBy("lang")))
+      .select(col("lang"), col("doc_id"), col("rank_in_lang"),
+        when(col("rank_in_lang") * 10 < col("tot") * 8, "train")
+          .when(col("rank_in_lang") * 10 < col("tot") * 9, "val")
+          .otherwise("test").as("split")))
+    assert(on == exp)
+  }
+
+  test("connectedComponents on an empty node set returns an empty result") {
+    import spark.implicits._
+    val nodes = Seq.empty[Long].toDF("id")
+    val edges = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(ops.Dedup.connectedComponents(nodes, edges).isEmpty)
+  }
+
+  test("job-count pins: q212 and q312 at sf0.01") {
+    // measured on this 4-core session when each scalar moved into its
+    // checkpoint job (before: q212 50, q312 56)
+    val pins = Seq("q212_hits" -> 29, "q312_dedup_merge" -> 45)
+    val sf01 = new java.io.File(sf).getParent + "/sf0.01"
+    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[
+      String, java.util.concurrent.atomic.AtomicInteger]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
+          jobsByGroup.computeIfAbsent(g, _ => new java.util.concurrent.atomic.AtomicInteger)
+            .incrementAndGet()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val got = pins.map { case (name, _) =>
+        val gid = s"jobpin-$name"
+        spark.sparkContext.setJobGroup(gid, name, interruptOnCancel = false)
+        try SparkEntry.queries(name)(spark, sf01)
+          .write.format("noop").mode("overwrite").save()
+        finally spark.sparkContext.clearJobGroup()
+        // the jobs are done; only listener-event delivery can lag
+        def total = Option(jobsByGroup.get(gid)).map(_.get).getOrElse(0)
+        var prev = -1; var spins = 0
+        while (prev != total && spins < 50) { prev = total; Thread.sleep(100); spins += 1 }
+        name -> total
+      }.toMap
+      info(s"jobs per run: $got")
+      val over = pins.filter { case (name, pin) => got(name) > pin }
+      assert(over.isEmpty, s"jobs per run $got exceed the pins $pins")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+}

@@ -33,7 +33,6 @@ class PlanAuditSpec extends SparkSpec {
     "q121_ccnet_buckets" -> "composes q101 verbatim — inherits its allowlisted 1-row bigram-total broadcast",
     "q122_decay_score" -> "corpus-scalar join: the 1-row reference time broadcasts into the decay scan",
     "q125_hybrid_rrf" -> "corpus-scalar joins: the 1-row query vector and BM25 stats broadcast; fusion joins two O(k)+O(matched) rank lists, never the corpus",
-    "q128_host_rank" -> "corpus-scalar join: the 1-row host count broadcasts into the outlink scan; the power iteration runs on the host-cardinality graph only",
     "q137_ivfpq_search" -> "shares q54's probe scoring: the k-row centroid codebook broadcasts against the 5 query vectors; the corpus-side ADC join is an equi-join on codes",
     "q140_training_build" -> "corpus-scalar join: the 1-row token budget broadcasts into the running-sum selection",
     "q141_drift_report" -> "corpus-scalar joins: each revision's 1-row doc total broadcasts into its ~9-key share aggregate",
@@ -54,15 +53,12 @@ class PlanAuditSpec extends SparkSpec {
     "q188_conversion_delay" -> "corpus-scalar join: the 1-row viewer total broadcasts into the ≤span-in-hours curve cells",
     "q189_join_cardinality" -> "scalar-scalar joins: each audit row is built from 1-row stats frames (n, ndv, Σaₖbₖ) cross-joined into one report row",
     "q197_theil_sen" -> "cells² pair frame: the daily-cell side is TIME-domain-bounded (~2.4k rows whatever the corpus size) and broadcasts; the median extraction is conditional-count aggregates, never a sort",
-    "q198_multisource_bfs" -> "shares q128's link extraction: the 1-row host count broadcasts into the outlink scan; the BFS rounds run on the host-cardinality graph only",
     "q200_benford_audit" -> "corpus-scalar join: the 1-row total broadcasts into the 9-digit-cell report",
     "q202_quantile_norm" -> "cell-table range join: both sides are value-domain-bounded (source,value) cells — the pooled interval table broadcasts; per-row application at scale is an equi-join against this output",
     "q204_mutual_nn" -> "brute bipartite scoring baseline: one population broadcasts, the other streams once (q32/q54 banded-LSH/IVF are the sublinear candidate path); the mutual gate is two argmax folds + an id equi-join",
     "q206_share_of_parent" -> "scalar join: the 1-row grand-total broadcasts into the ≤(1+|regions|+|nations|)-row cell report",
     "q208_equidepth_hist" -> "corpus-scalar join: the 1-row row-total broadcasts into the value-domain cell bucketing",
-    "q209_assortativity" -> "shares q128's link extraction: the 1-row host count broadcasts into the outlink scan; moments are one collapsing aggregate over edges",
     "q210_monetary_unit_sample" -> "corpus-scalar join: the 1-row sampling-interval scalar broadcasts into the selection scan",
-    "q212_hits" -> "shares q128's link extraction (1-row host count broadcast); score tables are host-cardinality broadcasts into the edge list and each half-round max is a 1-row scalar",
     "q213_priority_sample" -> "scalar join: the 1-row τ = (k+1)-th priority broadcasts into the k-row kept sample's Horvitz-Thompson estimates",
     "q216_linear_interp" -> "calendar-spine cross: the generated day sequence broadcasts against the |types|-row key set (q52's shape); interpolation windows run on (type, day) cells",
     "q218_sketch_algebra" -> "sketch-pair cross: both sides are the |sources|-row 64-int KMV synopsis table — pairwise algebra never rescans the corpus",
@@ -82,17 +78,15 @@ class PlanAuditSpec extends SparkSpec {
     "q245_shrunk_rates" -> "corpus-scalar join: the 1-row global-rate prior broadcasts into the per-user shrinkage map",
     "q247_permutation_test" -> "scalar join: the 1-row observed gap broadcasts into the 17-cell permutation fold",
     "q237_mmr_rerank" -> "scalar + k-bounded joins behind eager checkpoints: the 1-row query vector broadcasts into the relevance scan and the k²=64 pair table is a k-bounded broadcast; since round 13 the greedy rounds replay driver-local on the collected k-bounded tables",
-    // the next 8 were invisible until the audit learned to see through
+    // the next 6 were invisible until the audit learned to see through
     // eager localCheckpoints (round 9); each is a by-construction-small
     // broadcast executed during the build
     "q99_hard_negatives" -> "checkpoint-hidden: the k query vectors broadcast into the scoring scan (q31's shape); corpus streams once",
     "q109_semdedup" -> "checkpoint-hidden: the ≤k anchor/centroid rows broadcast into the candidate scan; the pair space is cluster-bounded (Σn_c²)",
     "q134_ivf_append" -> "checkpoint-hidden: the k-row centroid codebook broadcasts into each assignTo pass (q54's shape) on base, append, and probe legs",
     "q221_jl_distortion" -> "checkpoint-hidden: the 1-row corpus-count scalar broadcasts before the sampled self-join snapshot",
-    "q160_triangle_count" -> "checkpoint-hidden: the 1-row node-count scalar broadcasts into rankIds' id densification; wedges run on degree-oriented equi-joins",
-    "q173_label_prop" -> "checkpoint-hidden: the 1-row node/edge-count scalars broadcast into rankIds and the modular label fold; LPA rounds are equi-joins",
-    "q211_kcore" -> "checkpoint-hidden: the 1-row host-count scalar broadcasts into the edge build; peel rounds are degree equi-joins",
-    "q244_clustering_coeff" -> "checkpoint-hidden: the 1-row node-count scalar broadcasts into rankIds; wedge legs and the closing-edge probe are equi-joins",
+    "q173_label_prop" -> "checkpoint-hidden: the 1-row doc-count scalar broadcasts into the link derivation; LPA rounds are equi-joins",
+    "q244_clustering_coeff" -> "checkpoint-hidden: the 1-row doc-count scalar broadcasts into the link derivation; wedge legs and the closing-edge probe are equi-joins",
     "q249_kaplan_meier" -> "scalar join: the 1-row observation-end day broadcasts into the duration-cell censoring tag",
     "q250_mrr_eval" -> "brute scoring baseline: the 20 query vectors broadcast; corpus streams once (q31's shape; q32/q54 are the sublinear candidate path)",
     "q257_ndcg_eval" -> "q250's shape: the 20 query vectors broadcast; corpus streams once; the |labels|-cell relevant-count table broadcasts back",
@@ -100,14 +94,12 @@ class PlanAuditSpec extends SparkSpec {
     "q268_brier_decomp" -> "corpus-scalar join: the 1-row (N, K, Σsq) totals broadcast into the ≤10 decile cells (q166's ECE shape)",
     "q271_fairness_audit" -> "corpus-scalar join: the 1-row global confusion reference broadcasts into the |nations| group cells",
     "q273_partition_agree" -> "scalar-scalar joins: three 1-row pair-count folds cross-combine into the single metrics row",
-    "q274_personalized_pr" -> "q128's shape: the 1-row host count broadcasts into the outlink scan and seed mass; power rounds run on the host-cardinality graph",
     "q275_cuped" -> "corpus-scalar joins: the 1-row midpoint, theta, and variance-ratio scalars broadcast into user-cell scans",
     "q276_rank_biased_overlap" -> "q172's shape: the 5 query vectors broadcast; corpus streams once; the 10-row depth spine crosses query-cardinality cells",
     "q277_threshold_curve" -> "threshold-spine join: the 5-row pinned threshold list broadcasts into the banding-bounded pair cells; the 1-row corpus count broadcasts into the final 5-row sweep",
     "q266_t_closeness" -> "cell-table joins: the 5-row ordinal-level spine and the 1-row global total broadcast into group-cardinality cells",
     "q258_map_eval" -> "q250's shape: the 20 query vectors broadcast; corpus streams once; the |labels|-cell relevant-count table broadcasts back",
     "q251_isotonic_fit" -> "scalar join: the 1-row min/max broadcasts into the 32-bin histogram pass (q226's two-pass shape); PAVA runs on cells",
-    "q252_dbscan" -> "checkpoint-hidden: the CC rounds' scalar folds run behind the core-edge checkpoint; candidates are the 9-cell grid equi-join, never n²",
     "q280_logrank" -> "scalar joins: the 1-row observation-end day broadcasts into the streak tag (q249's shape) and the two 1-row folds cross-combine into the single report row",
     "q284_link_prediction" -> "checkpoint-hidden: the 1-row doc-count scalar broadcasts into the link derivation; wedges (cap-64 windowed adjacency), degrees, and the adjacency anti-join are equi-joins with no explicit broadcast hint — AQE picks the degree-table strategy",
     "q285_err_eval" -> "q250's shape: the 20 query vectors broadcast; corpus streams once; the cascade fold runs on 10 rows per query",
