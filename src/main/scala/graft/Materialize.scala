@@ -24,6 +24,15 @@ object Materialize {
   def fold[A: ClassTag](df: DataFrame)(f: Iterator[InternalRow] => A): (DataFrame, Array[A]) =
     org.apache.spark.sql.graft.PlanShim.checkpointFold(df, f)
 
+  /** Eager local checkpoint of `df`, for when no scalar is wanted. */
+  def snapshot(df: DataFrame): DataFrame = count(df)(_ => true)._1
+
+  /** Drop a snapshot's cached blocks now rather than when the driver
+    * happens to GC its RDD. `snap` must be a frame these helpers
+    * returned, and nothing may read it afterwards. */
+  def release(snap: DataFrame): Unit =
+    org.apache.spark.sql.graft.PlanShim.releaseCheckpoint(snap)
+
   /** Snapshot plus the number of rows satisfying `p`. */
   def count(df: DataFrame)(p: InternalRow => Boolean): (DataFrame, Long) = {
     val (snap, parts) = fold(df)(_.count(p).toLong)

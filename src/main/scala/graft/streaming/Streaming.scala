@@ -1,6 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Materialize
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -587,73 +591,90 @@ object Streaming {
     * streaming form of the q27/q30 batch near-dedup, and the shape a
     * continuous crawl runs at scale: the corpus-so-far is represented
     * only by its LSH band keys (16-perm signature, 4 bands × 4 rows —
-    * same parameters as the batch pack), so admission costs one
-    * semi-join of the batch's band keys against the store, never a scan
-    * of the corpus itself.
+    * same parameters as the batch pack), so admission reads the store's
+    * keys, never the corpus itself.
     *
-    * Per batch: (1) signature + band keys for the new docs (the native
-    * `graft_minhash` expression); (2) docs colliding with the store are
-    * dropped (near-dup of something already seen); (3) in-batch
-    * collisions resolve greedy first-wins by doc_id (a doc matching a
-    * lower-id batchmate drops, matching the batch resolver's
-    * min-id-canonical rule); (4) survivors write to
-    * `outDir/ingest_batch=<id>`, and the band keys of EVERY seen doc —
-    * admitted or dropped — that are new to the store write to
-    * `stateDir/ingest_batch=<id>`. Storing dropped docs' keys too makes
-    * admission independent of micro-batch boundaries: a doc that
-    * near-dups a previously-DROPPED doc is itself dropped, exactly as
-    * the single-batch greedy rule would chain (store only admitted keys
-    * and the chain breaks when the middle doc falls in an earlier
-    * batch). Both sinks are parquet partitioned by a run-scoped batch
-    * id with dynamic partition overwrite, so a foreachBatch
-    * at-least-once replay REWRITES its own partition instead of
-    * appending duplicates — the same idempotency protocol as
-    * [[ingestToParquet]].
-    * `Maintenance.compact` bounds the store's file count as it grows.
+    * Per batch, with `tag` = `<query id>-<batch id>`:
+    *  1. signature + band keys `(bkey, doc_id)` for the new docs (the
+    *     native `graft_minhash` expression);
+    *  2. decide, with ONE exchange on `bkey`: the batch's rows unioned
+    *     with the store's keys (store rows carry a NULL doc_id), one
+    *     window per key computing `stored` (the key is already in the
+    *     store) and `first` (the smallest batch doc id holding it), the
+    *     batch rows materialized once. A doc is dropped iff any of its
+    *     rows has `stored OR doc_id > first`: a near-dup of something
+    *     already seen, or of a lower-id batchmate (greedy first-wins,
+    *     the batch resolver's min-id-canonical rule). The materializing
+    *     job also returns the dropped ids (at most the batch's docs);
+    *  3. two sinks, written CONCURRENTLY on two driver threads: the
+    *     survivors to `outDir/ingest_batch=<tag>`, and the keys new to
+    *     the store, one row per key with `NOT stored AND doc_id = first`
+    *     (provenance is the smallest contributing doc id), to
+    *     `stateDir/ingest_batch=<tag>`.
+    *     If either write fails the batch fails and replays. The snapshot
+    *     is released once both are done.
+    * Keys of EVERY seen doc — admitted or dropped — enter the store. That
+    * makes admission independent of micro-batch boundaries: a doc that
+    * near-dups a previously-DROPPED doc is itself dropped, exactly as the
+    * single-batch greedy rule would chain (store only admitted keys and
+    * the chain breaks when the middle doc falls in an earlier batch).
+    *
+    * Replay. Both sinks overwrite only the batch's own partition (dynamic
+    * partition overwrite), and step 2 reads the store WITHOUT that
+    * partition. The query id lives in the checkpoint, so a batch replayed
+    * after a crash carries the same tag, whichever of its two writes had
+    * landed: it sees the store its first attempt saw, decides the same,
+    * and overwrites both partitions. A fresh checkpoint brings a fresh
+    * query id, so batch ids restarting at 0 never clobber an earlier
+    * run's partitions. `doc_id` must be non-NULL: NULL marks store rows.
+    * [[lshStoreCompact]] bounds the store's file count as it grows.
     *
     * State is O(4 keys × distinct docs seen) — independent of raw
-    * re-delivery volume (replayed keys are anti-joined away), the
+    * re-delivery volume (a stored key is never stored again), the
     * property that makes continuous dedup viable at 100 TB ingest
     * rates. */
   def lshDedupIngest(docs: DataFrame, stateDir: String, outDir: String,
       checkpoint: String): StreamingQuery = {
     import graft.functions.TextFunctions.{bandKey, tokens}
-    // partition tag unique per query run: within a run, a replayed batch
-    // overwrites its own partition (idempotent); across runs (e.g. a
-    // fresh checkpoint against the same store) batch ids restart at 0,
-    // and the tag keeps them from clobbering an earlier run's output
-    val runTag = java.util.UUID.randomUUID.toString.take(8)
     val q = docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
+        val sc = s.sparkContext
         s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        val sig = batch
+        val queryId = sc.getLocalProperty(StreamExecution.QUERY_ID_KEY)
+        require(queryId != null, "lshDedupIngest: no streaming query id on the batch thread")
+        val tag = s"$queryId-$batchId"
+        val bands = batch
           .withColumn("toks", tokens(col("text")))
           .withColumn("sig", expr("graft_minhash(toks)"))
-        val bands = sig.select(col("doc_id"),
-          explode(array((0 until 4).map(b => bandKey(col("sig"), b, 4)): _*)).as("bkey"))
-          .localCheckpoint() // referenced 3x below; cut the recompute
-        val store = try s.read.parquet(stateDir).select("bkey")
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            s.emptyDataFrame.select(lit("").as("bkey")).limit(0) }
-        // near-dup of anything already seen (any shared band key)
-        val dupVsStore = bands.join(store, Seq("bkey"), "left_semi")
-          .select("doc_id").distinct()
-        // greedy in-batch resolution: drop any doc sharing a band with a
-        // lower-id batchmate (min-id canonical, like the batch resolver)
-        val dupInBatch = bands.as("x").join(bands.as("y"),
-            col("x.bkey") === col("y.bkey") && col("y.doc_id") < col("x.doc_id"))
-          .select(col("x.doc_id").as("doc_id")).distinct()
-        val dropped = dupVsStore.union(dupInBatch).distinct()
-        val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
-        kept.withColumn("ingest_batch", lit(s"$runTag-$batchId"))
-          .write.mode("overwrite").partitionBy("ingest_batch").parquet(outDir)
-        // band keys new to the store, from ALL seen docs (provenance =
-        // the smallest contributing doc id, a deterministic pick)
-        bands.join(store, Seq("bkey"), "left_anti")
-          .groupBy("bkey").agg(min(col("doc_id")).as("doc_id"))
-          .withColumn("ingest_batch", lit(s"$runTag-$batchId"))
-          .write.mode("overwrite").partitionBy("ingest_batch").parquet(stateDir)
+          .select(explode(array((0 until 4).map(b => bandKey(col("sig"), b, 4)): _*)).as("bkey"),
+            col("doc_id"))
+        val store = readStore(s, stateDir).where(col("ingest_batch") =!= tag)
+          .select(col("bkey"), lit(null).cast(LongType).as("doc_id"))
+        // one exchange on bkey; every function below shares its sort
+        val byKey = Window.partitionBy("bkey").orderBy("doc_id")
+        val wholeKey = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        val stored = max(col("doc_id").isNull).over(wholeKey)
+        val first = min(col("doc_id")).over(wholeKey)
+        val (decided, drops) = described(sc, s"lsh admit $tag: decide") {
+          Materialize.fold(bands.union(store)
+              .select(col("bkey"), col("doc_id"),
+                (stored || col("doc_id") > first).as("drop"),
+                // first row of a key the store lacks: doc_id = first
+                (!stored && row_number().over(byKey) === 1).as("new_key"))
+              .where(col("doc_id").isNotNull)) {
+            _.filter(_.getBoolean(2)).map(_.getLong(1)).toSet
+          }
+        }
+        val kept = batch.where(!col("doc_id").isInCollection(drops.flatten.distinct))
+        val newKeys = decided.where(col("new_key")).select("bkey", "doc_id")
+        def sink(df: DataFrame, dir: String): () => Unit = () =>
+          df.withColumn("ingest_batch", lit(tag))
+            .write.mode("overwrite").partitionBy("ingest_batch").parquet(dir)
+        try concurrently(sc, Seq(
+          s"lsh admit $tag: out" -> sink(kept, outDir),
+          s"lsh admit $tag: store" -> sink(newKeys, stateDir)))
+        finally Materialize.release(decided)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
@@ -662,20 +683,64 @@ object Streaming {
     q
   }
 
+  /** The [[lshDedupIngest]] band store: parquet partitioned by
+    * `ingest_batch`. */
+  private val storeSchema = StructType(Seq(
+    StructField("bkey", StringType),
+    StructField("doc_id", LongType),
+    StructField("ingest_batch", StringType)))
+
+  /** The band store read with its known schema (no inference job); empty
+    * before the first batch lands. */
+  private def readStore(spark: SparkSession, stateDir: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(stateDir)
+    if (root.getFileSystem(spark.sessionState.newHadoopConf()).exists(root))
+      spark.read.schema(storeSchema).parquet(stateDir)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), storeSchema)
+  }
+
+  /** `body` with this thread's Spark job description set to `desc`, so a
+    * listener or the UI can attribute its jobs. */
+  private def described[A](sc: SparkContext, desc: String)(body: => A): A = {
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** Run each `(job description, body)` on its own driver thread, which
+    * inherits this thread's Spark local properties (job group, streaming
+    * batch id, SQL execution id); wait for all, then rethrow the first
+    * failure. */
+  private def concurrently(sc: SparkContext, bodies: Seq[(String, () => Unit)]): Unit = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    val pool = Executors.newFixedThreadPool(bodies.length)
+    try {
+      val running = bodies.map { case (desc, body) =>
+        pool.submit(new Callable[Unit] { def call(): Unit = described(sc, desc)(body()) })
+      }
+      val failures = running.flatMap(f => scala.util.Try(f.get()).failed.toOption.map {
+        case e: ExecutionException => e.getCause
+        case e => e
+      })
+      failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
+    } finally pool.shutdown()
+  }
+
   /** Retention hook for the [[lshDedupIngest]] band store. Rows are
-    * already bounded (replayed keys anti-join away — O(4 × distinct
+    * already bounded (a stored key is never stored again — O(4 × distinct
     * docs seen) forever), but the LAYOUT grows one
-    * `ingest_batch=<run>-<id>` partition directory per micro-batch
-    * without bound, and every batch's admission semi-join re-lists all
-    * of them. This rewrites the store into one compacted generation of
+    * `ingest_batch=<query>-<id>` partition directory per micro-batch
+    * without bound, and every batch's admission re-lists all of them.
+    * This rewrites the store into one compacted generation of
     * `targetFiles` files (keeping the canonical min-doc_id provenance
     * per key), then removes the superseded batch partitions — the
     * snapshot-table vacuum pattern applied to streaming state. Crash
     * ordering: the compacted generation lands durably BEFORE the old
     * partitions are dropped, so an interrupted compaction leaves
-    * duplicate keys (harmless to semi-join admission; the next compact
-    * collapses them), never a lost key. Run it between ingest runs,
-    * like vacuum. */
+    * duplicate keys (harmless to admission; the next compact collapses
+    * them), never a lost key. Run it between ingest runs, like vacuum:
+    * a batch replayed after compaction no longer finds its own
+    * partition to leave out of the store. */
   def lshStoreCompact(spark: SparkSession, stateDir: String, targetFiles: Int = 4): Unit = {
     // Hadoop FileSystem API, not java.io.File: the store lives wherever
     // the pipeline writes parquet (HDFS/S3A in production, file:// in
@@ -687,15 +752,19 @@ object Streaming {
     val oldParts = fs.listStatus(root)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("ingest_batch="))
     if (oldParts.isEmpty) return
-    // materialize the compacted snapshot BEFORE writing into the same
-    // root (the self-read would otherwise race its own output files)
-    val compacted = spark.read.parquet(stateDir)
-      .groupBy("bkey").agg(min(col("doc_id")).as("doc_id"))
-      .repartition(targetFiles)
-      .localCheckpoint()
     val gen = s"compact-${java.util.UUID.randomUUID.toString.take(8)}"
-    compacted.withColumn("ingest_batch", lit(gen))
-      .write.mode("append").partitionBy("ingest_batch").parquet(stateDir)
+    described(spark.sparkContext, "lsh compact") {
+      // materialize the compacted snapshot BEFORE writing into the same
+      // root (the self-read would otherwise race its own output files);
+      // the one exchange on bkey serves both the per-key min and the
+      // file count
+      val compacted = Materialize.snapshot(spark.read.schema(storeSchema).parquet(stateDir)
+        .repartition(targetFiles, col("bkey"))
+        .groupBy("bkey").agg(min(col("doc_id")).as("doc_id")))
+      try compacted.withColumn("ingest_batch", lit(gen))
+        .write.mode("append").partitionBy("ingest_batch").parquet(stateDir)
+      finally Materialize.release(compacted)
+    }
     // fail loud on an undeletable partition: admission stays correct with
     // duplicate keys in the store, but the operator must know the vacuum
     // did not complete (next compact retries the same partitions)

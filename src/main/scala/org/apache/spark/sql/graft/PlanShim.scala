@@ -43,4 +43,12 @@ object PlanShim {
       (snap, parts)
     }
   }
+
+  /** Unpersist the RDD behind a frame `checkpointFold` returned. */
+  def releaseCheckpoint(snap: DataFrame): Unit =
+    snap.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case p => throw new IllegalArgumentException(
+        s"not a checkpoint snapshot: ${p.nodeName}")
+    }
 }

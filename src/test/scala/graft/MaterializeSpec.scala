@@ -94,32 +94,18 @@ class MaterializeSpec extends SparkSpec {
     // checkpoint job (before: q212 50, q312 56)
     val pins = Seq("q212_hits" -> 29, "q312_dedup_merge" -> 45)
     val sf01 = new java.io.File(sf).getParent + "/sf0.01"
-    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.atomic.AtomicInteger]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")).foreach { g =>
-          jobsByGroup.computeIfAbsent(g, _ => new java.util.concurrent.atomic.AtomicInteger)
-            .incrementAndGet()
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val got = pins.map { case (name, _) =>
-        val gid = s"jobpin-$name"
+    val got = pins.map { case (name, _) =>
+      val gid = s"jobpin-$name"
+      val (_, jobs) = jobsBy(p => Option(p.getProperty("spark.jobGroup.id"))) {
         spark.sparkContext.setJobGroup(gid, name, interruptOnCancel = false)
         try SparkEntry.queries(name)(spark, sf01)
           .write.format("noop").mode("overwrite").save()
         finally spark.sparkContext.clearJobGroup()
-        // the jobs are done; only listener-event delivery can lag
-        def total = Option(jobsByGroup.get(gid)).map(_.get).getOrElse(0)
-        var prev = -1; var spins = 0
-        while (prev != total && spins < 50) { prev = total; Thread.sleep(100); spins += 1 }
-        name -> total
-      }.toMap
-      info(s"jobs per run: $got")
-      val over = pins.filter { case (name, pin) => got(name) > pin }
-      assert(over.isEmpty, s"jobs per run $got exceed the pins $pins")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      name -> jobs.getOrElse(gid, 0)
+    }.toMap
+    info(s"jobs per run: $got")
+    val over = pins.filter { case (name, pin) => got(name) > pin }
+    assert(over.isEmpty, s"jobs per run $got exceed the pins $pins")
   }
 }
