@@ -71,56 +71,46 @@ object E2eBench {
       out.close()
     }
 
-    val shufW = new java.util.concurrent.atomic.AtomicLong
-    val shufR = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) {
-            shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          }
-        }
-      })
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
 
     // ---- stage 1: zip scan -> family dispatch -> partitioned sink ----
     val extractedDir = Files.createTempDirectory("graft-e2e-extracted").toString
-    val (_, tExtract) = timed {
-      val entries = sources.ZipXml.zipEntriesV2(spark, raw)
-      sources.FatXml.extract(entries, Seq("source_zip", "source_xml_file"))
-        .withColumn("ingest_date",
-          regexp_extract(col("source_zip"), """(\d{4}-\d{2}-\d{2})""", 1))
-        .write.mode("overwrite").partitionBy("ingest_date").parquet(extractedDir)
-    }
+    val ((tExtract, tMerge, tCsv, report), rec) = Obs.measure(spark, "e2e") {
+      val (_, tExtract) = timed {
+        val entries = sources.ZipXml.zipEntriesV2(spark, raw)
+        sources.FatXml.extract(entries, Seq("source_zip", "source_xml_file"))
+          .withColumn("ingest_date",
+            regexp_extract(col("source_zip"), """(\d{4}-\d{2}-\d{2})""", 1))
+          .write.mode("overwrite").partitionBy("ingest_date").parquet(extractedDir)
+      }
 
-    // ---- stage 2: merge daily extracts + per-day/form/status rollup --
-    val (report, tMerge) = timed {
-      val merged = spark.read.parquet(extractedDir)
-        .withColumn("source_file", input_file_name())
-      merged.groupBy(col("ingest_date"), col("source_form"),
-          when(col("parse_error").isNull, "ok").otherwise("parse_error").as("status"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("ingest_date", "source_form", "status")
-        .collect()
-    }
+      // ---- stage 2: merge daily extracts + per-day/form/status rollup --
+      val (report, tMerge) = timed {
+        val merged = spark.read.parquet(extractedDir)
+          .withColumn("source_file", input_file_name())
+        merged.groupBy(col("ingest_date"), col("source_form"),
+            when(col("parse_error").isNull, "ok").otherwise("parse_error").as("status"))
+          .agg(count(lit(1)).as("n"))
+          .orderBy("ingest_date", "source_form", "status")
+          .collect()
+      }
 
-    // ---- stage 3: merged CSV export (reference step 3's sink) --------
-    val csvDir = Files.createTempDirectory("graft-e2e-csv").toString
-    val (_, tCsv) = timed {
-      sources.ContractsFinder.exportCsv(
-        spark.read.parquet(extractedDir)
-          .select("doc_id", "source_form", "buyer_name", "ingest_date"),
-        s"$csvDir/merged")
+      // ---- stage 3: merged CSV export (reference step 3's sink) --------
+      val csvDir = Files.createTempDirectory("graft-e2e-csv").toString
+      val (_, tCsv) = timed {
+        sources.ContractsFinder.exportCsv(
+          spark.read.parquet(extractedDir)
+            .select("doc_id", "source_form", "buyer_name", "ingest_date"),
+          s"$csvDir/merged")
+      }
+      (tExtract, tMerge, tCsv, report)
     }
 
     val nOk = report.filter(_.getAs[String]("status") == "ok").map(_.getAs[Long]("n")).sum
     val nErr = report.filter(_.getAs[String]("status") == "parse_error").map(_.getAs[Long]("n")).sum
     Report(nZips, nZips * perZip, nOk, nErr, tExtract, tMerge, tCsv,
-      shufW.get / 1024, shufR.get / 1024)
+      rec.shuffleWriteBytes / 1024, rec.shuffleReadBytes / 1024)
   }
 }

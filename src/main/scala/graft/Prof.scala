@@ -10,61 +10,6 @@ object Prof {
     val spark = Session.local("graft-prof", conf = Session.envConf)
     spark.sparkContext.setLogLevel("WARN")
     val byName = SparkEntry.queries
-    // shuffle-volume listener: measured evidence for the per-operator
-    // scale claims ("one 64-row shuffle", "ids only, never arrays") —
-    // bytes written to / read from shuffle per profiled run
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    // skew-join engagement probe (round-9 VERDICT item 5): count
-    // "skew=true" markers in the AQE-final executed plan — a
-    // SortMergeJoinExec/ShuffledHashJoinExec that OptimizeSkewedJoin
-    // split prints its nodeName with that suffix. Read AFTER execution
-    // (the listener fires on success) so the ADAPTIVE final plan, not
-    // the initial one, is what's scanned.
-    val skewNodes = new java.util.concurrent.atomic.AtomicInteger
-    // Spark jobs per profiled run: eager checkpoints, broadcasts and
-    // collects each launch their own, so a job diet shows here per query
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    spark.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = {
-        val s = try qe.executedPlan.toString catch { case _: Throwable => "" }
-        skewNodes.addAndGet("skew=true".r.findAllIn(s).length)
-      }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
-    })
-    // per-stage parallelism evidence: (numTasks, executor cpu-seconds);
-    // distinguishes "the host was busy" from "AQE serialized the stage"
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Double)]
-    // straggler telemetry (round-10 VERDICT item 8): per-stage task
-    // wall times, so CPU-tail stragglers (q224's long-doc class — one
-    // task serialized behind a single expensive row) are a RECORDED
-    // max/median ratio per wave rather than a wall-ratio inference
-    val taskSecs = new java.util.concurrent.ConcurrentHashMap[
-      Int, java.util.concurrent.ConcurrentLinkedQueue[Double]]
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (te.taskInfo != null)
-            taskSecs.computeIfAbsent(te.stageId,
-              _ => new java.util.concurrent.ConcurrentLinkedQueue[Double])
-              .add(te.taskInfo.duration / 1e3)
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val m = sc.stageInfo.taskMetrics
-          if (m != null) {
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            stages.add((sc.stageInfo.stageId, sc.stageInfo.numTasks,
-              m.executorRunTime / 1e3))
-          }
-        }
-      })
     // warmup
     byName("q02_filter_project")(spark, sf).write.format("noop").mode("overwrite").save()
     for (name <- args; _ <- 1 to 2) {
@@ -72,13 +17,15 @@ object Prof {
       // independent of what ran before it (same rationale as Bench)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      shufWrite.set(0); shufRead.set(0); stages.clear(); skewNodes.set(0); jobs.set(0)
-      taskSecs.clear()
-      val t0 = System.nanoTime()
-      byName(name)(spark, sf).write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(150) // let the async listener bus drain stage events
-      import scala.jdk.CollectionConverters._
+      // one record per profiled run (graft.Obs): its jobs (eager
+      // checkpoints, broadcasts and collects each launch their own, so a
+      // job diet shows here per query), stages, task walls, shuffle bytes
+      // and the AQE-final plans
+      val (sec, rec) = Obs.measure(spark, name) {
+        val t0 = System.nanoTime()
+        byName(name)(spark, sf).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
       // straggler = worst max/median task-wall ratio over MATERIAL
       // stages (>= 4 tasks, max task >= 0.5 s — tiny stages are noise);
       // report the worst stage's absolutes alongside the ratio. The
@@ -86,8 +33,8 @@ object Prof {
       // a ~0.02 s median under a 1.5 s max printed "75x" for stages
       // where salting is working fine — scheduling jitter, not skew);
       // absolutes still come from the true median, so nothing is hidden
-      val strag = taskSecs.asScala.toSeq.flatMap { case (sid, q) =>
-        val ts = q.asScala.toSeq.sorted
+      val strag = rec.stages.flatMap { st =>
+        val (sid, ts) = (st.id, st.taskMs.map(_ / 1e3).sorted)
         if (ts.size >= 4 && ts.last >= 0.5) {
           val med = ts(ts.size / 2)
           if (med > 0) Some((ts.last / math.max(med, 0.1), sid, ts.last, med))
@@ -97,9 +44,15 @@ object Prof {
       val stragStr = strag.map { case (r, sid, mx, med) =>
         f"straggler=$r%.1fx(s$sid max=$mx%.1fs med=$med%.1fs)" }
         .getOrElse("straggler=1.0x")
-      println(f"[prof] $name%-24s $sec%.2f s  jobs=${jobs.get}%d shuffle w=${shufWrite.get / 1024}%d KiB r=${shufRead.get / 1024}%d KiB skew=${skewNodes.get}%d $stragStr")
-      val heavy = stages.asScala.toSeq.sortBy(-_._3).take(6)
-        .map { case (id, n, s) => f"s$id:$n%dt/$s%.1fs" }.mkString(" ")
+      // skew-join engagement (round-9 VERDICT item 5): a
+      // SortMergeJoinExec/ShuffledHashJoinExec that OptimizeSkewedJoin
+      // split carries "skew=true" in its node name in the AQE-final plan
+      val skew = rec.plans.flatten.count(_.contains("skew=true"))
+      println(f"[prof] $name%-24s $sec%.2f s  jobs=${rec.jobs.size}%d shuffle w=${rec.shuffleWriteBytes / 1024}%d KiB r=${rec.shuffleReadBytes / 1024}%d KiB skew=$skew%d $stragStr")
+      // per-stage parallelism evidence: (numTasks, executor seconds);
+      // distinguishes "the host was busy" from "AQE serialized the stage"
+      val heavy = rec.stages.sortBy(-_.runMs).take(6)
+        .map(st => f"s${st.id}:${st.tasks}%dt/${st.runMs / 1e3}%.1fs").mkString(" ")
       println(s"[prof-stages] $name $heavy")
     }
     spark.stop()

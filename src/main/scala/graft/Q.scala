@@ -18,6 +18,11 @@ object Q {
   def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, None)
 
+  /** The session's `spark.sql.shuffle.partitions`, Spark's default when
+    * unset. */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get(org.apache.spark.sql.internal.SQLConf.SHUFFLE_PARTITIONS.key).toInt
+
   /** Parallelism barrier for heavy narrow stages over low-split inputs.
     *
     * Two historical jobs, one remaining: (1) a global `orderBy` samples
@@ -38,7 +43,7 @@ object Q {
     * it's the difference between 1 busy core and 32.
     */
   def stageBarrier(df: DataFrame): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    val n = shufflePartitions(df.sparkSession)
     // Leaf FILE count, not plan partition count: Spark byte-range-
     // splits even a one-row-group file into ~n plan partitions, but
     // every split except the one holding the row group reads zero

@@ -121,7 +121,7 @@ object Dedup {
     * spark.sql.shuffle.partitions, which already scales with the
     * cluster; a no-op when the frame is narrower. */
   private def tightCheckpoint(df: DataFrame): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    val n = Q.shufflePartitions(df.sparkSession)
     df.coalesce(n).localCheckpoint()
   }
 
@@ -401,8 +401,10 @@ object Dedup {
     * sum IS the fixpoint): each round's checkpoint job also returns the
     * per-partition sums ([[graft.Materialize.sumLong]]), so detection
     * costs no job of its own. The sum overflows loudly, as ANSI SUM
-    * does. Hitting the round cap without converging throws rather than
-    * silently emitting wrong labels. */
+    * does. Each round's snapshot is released once the next has
+    * materialized, so only the returned labels stay persisted. Hitting
+    * the round cap without converging throws rather than silently
+    * emitting wrong labels. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 50): DataFrame = {
     // sum(comp) over an EMPTY node set is NULL — an empty graph is a
@@ -430,6 +432,7 @@ object Dedup {
         .select(col("l.id").as("id"), least(col("l.comp"), col("pcomp")).as("comp")))
       converged = nextSum == prevSum
       prevSum = nextSum
+      graft.Materialize.release(labels)
       labels = next
       rounds += 1
     }
@@ -1168,7 +1171,7 @@ object Dedup {
         // coalescing here would re-serialize the chunks behind few
         // tasks — the exact straggler this split exists to break
         .repartition(
-          docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+          Q.shufflePartitions(docs.sparkSession),
           col("doc_id"), col("pos")),
       "col")
       .distinct() // a fingerprint can recur across chunks of one doc
@@ -1252,7 +1255,7 @@ object Dedup {
     // ran the 20x-EXPANDING join + pair aggregation in 3 tasks
     // (measured ~140 s/task at sf1z; the classic
     // coalesce-before-expanding-join trap).
-    val nShuf = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val nShuf = Q.shufflePartitions(s)
     // Auto-size the long-doc split (round-11 stretch item 8): the exact
     // per-dir max-length stat proves the split leg empty on short-doc
     // corpora (every fixture tree and the uniform sf1m are <= 100

@@ -4639,7 +4639,7 @@ object Events {
       |ORDER BY type_a, type_b""") { (s, d) =>
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nShuf = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val nShuf = Q.shufflePartitions(s)
     val cells = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
         unix_timestamp(col("ts")).as("sec"))

@@ -46,7 +46,7 @@ object Graph {
     * With duplicate keys the within-partition order of ties (and hence
     * their ranks) would be arbitrary; nulls would sort first. */
   private[graft] def rankIds(df: DataFrame, key: String, idCol: String): (DataFrame, Long) = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val n = Q.shufflePartitions(df.sparkSession)
     val sorted = df.repartitionByRange(n, col(key)).sortWithinPartitions(key)
       .withColumn("_mid", monotonically_increasing_id())
     val mi = sorted.schema.fieldIndex("_mid")
@@ -633,11 +633,13 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-    val und = ue.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(ue.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint() // edge table read by every peel round
-    kcoreSurvivors(hosts.select(col("hid").as("v")), und, k = 3, rounds = 4)
-      .join(hosts.select(col("hid").as("v"), col("source")), "v")
+    // edge table read by every peel round; the result no longer needs it
+    val und = graft.Materialize.snapshot(ue.select(col("a").as("u"), col("b").as("v"))
+      .unionAll(ue.select(col("b").as("u"), col("a").as("v"))))
+    val core =
+      try kcoreSurvivors(hosts.select(col("hid").as("v")), und, k = 3, rounds = 4)
+      finally graft.Materialize.release(und)
+    core.join(hosts.select(col("hid").as("v"), col("source")), "v")
       .select(col("source").as("host"), col("core_degree"))
       .orderBy("host")
   }
@@ -647,7 +649,7 @@ object Graph {
     * fewer than k surviving neighbors, `rounds` times; returns the
     * survivors with their induced degree (v, core_degree). Alive sets
     * are node-cardinality → broadcast; `und` is scanned once per round
-    * (callers localCheckpoint it).
+    * (callers snapshot it). Only the returned frame stays persisted.
     *
     * Convergence guard (round-8 VERDICT item 6): the k-core FIXPOINT
     * is exactly "every survivor's induced degree ≥ k", and the final
@@ -664,25 +666,25 @@ object Graph {
       .join(broadcast(alive), "v")
       .groupBy("u").agg(count(lit(1)).as("dg"))
     var alive = nodes.select("v")
+    var prev: Option[DataFrame] = None
     (1 to rounds).foreach { _ =>
-      // checkpoint each round's alive set (round 12, q212's fix applied
+      // snapshot each round's alive set (round 12, q212's fix applied
       // here too): aliveDeg references `alive` TWICE (u- and v-side
       // broadcasts), so a lazy chain re-evaluates round r-1 twice per
       // reference — ~2^rounds evaluations of round 1 by the fixpoint
-      // guard. The set is host-cardinality; the checkpoint is the
-      // per-iteration staging any iterative graph algorithm needs.
-      alive = aliveDeg(alive).filter(col("dg") >= k).select(col("u").as("v"))
-        .localCheckpoint()
-      // Superseded rounds' checkpoint blocks stay cached for the
-      // session (round-12 ADVICE): negligible at host cardinality, and
-      // the bench/prof harnesses unpersist all persistent RDDs between
-      // queries. If round budgets grow, unpersist round r-1's
-      // checkpointed RDD here once round r materializes.
+      // guard. The set is host-cardinality; the snapshot is the
+      // per-iteration staging any iterative graph algorithm needs, and
+      // round r-1's is released once round r's has materialized.
+      alive = graft.Materialize.snapshot(
+        aliveDeg(alive).filter(col("dg") >= k).select(col("u").as("v")))
+      prev.foreach(graft.Materialize.release)
+      prev = Some(alive)
     }
     // the guard's count comes out of fin's own checkpoint job
     val finDeg = aliveDeg(alive).select(col("u").as("v"), col("dg").as("core_degree"))
     val di = finDeg.schema.fieldIndex("core_degree")
     val (fin, stray) = graft.Materialize.count(finDeg)(_.getLong(di) < k)
+    prev.foreach(graft.Materialize.release)
     if (stray != 0) throw new IllegalStateException(
       s"k-core peel not at fixpoint after $rounds rounds: $stray survivors " +
         s"still below degree $k — raise the round budget for this graph")

@@ -175,7 +175,7 @@ object Scale {
       .select(col("doc_id"), col("lang"),
         graft.functions.TextFunctions.hex32(
           concat(lit("split_"), col("doc_id").cast("string"))).as("ord"))
-    val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val n = Q.shufflePartitions(s)
     val sortedDf = keyed
       .repartitionByRange(n, col("lang"), col("ord"), col("doc_id"))
       .sortWithinPartitions("lang", "ord", "doc_id")

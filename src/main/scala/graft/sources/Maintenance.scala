@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.sources.Versioned.{deleteRecursively, listDir}
+
 /** Table maintenance for the parquet-canonical layout: small-files
   * compaction. Incremental ingest (per-batch dynamic-partition writes,
   * streaming micro-batches) accretes many small files; scans then pay
@@ -336,12 +338,6 @@ object Maintenance {
   private def countParquet(p: Path): Int =
     listFiles(p).count(_.toString.endsWith(".parquet"))
 
-  private def listDir(p: Path): Seq[Path] = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.list(p)
-    try s.iterator().asScala.toSeq finally s.close()
-  }
-
   private def listFiles(p: Path): Seq[Path] = {
     import scala.jdk.CollectionConverters._
     if (!Files.exists(p)) Seq.empty
@@ -349,15 +345,6 @@ object Maintenance {
       val s = Files.walk(p)
       try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
       finally s.close()
-    }
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      val all = try s.iterator().asScala.toSeq finally s.close()
-      all.reverse.foreach(Files.delete)
     }
   }
 }

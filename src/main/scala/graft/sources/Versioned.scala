@@ -351,7 +351,7 @@ object Versioned {
     }
   }
 
-  private def listDir(p: Path): Seq[Path] = {
+  private[graft] def listDir(p: Path): Seq[Path] = {
     import scala.jdk.CollectionConverters._
     val s = Files.list(p)
     try s.iterator().asScala.toSeq finally s.close()

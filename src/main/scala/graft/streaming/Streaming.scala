@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Materialize
+import graft.{Materialize, Obs}
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
@@ -72,13 +72,9 @@ object Streaming {
     import java.nio.file.{Files, Path, Paths, StandardCopyOption}
     val src = Paths.get(sfDir, s"$table.parquet")
     val parts: Seq[Path] =
-      if (Files.isDirectory(src)) {
-        import scala.jdk.CollectionConverters._
-        val s = Files.list(src)
-        try s.iterator().asScala.toSeq.filter(
-          _.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
-        finally s.close()
-      } else Seq(src)
+      if (Files.isDirectory(src)) graft.sources.Versioned.listDir(src)
+        .filter(_.getFileName.toString.endsWith(".parquet")).sortBy(_.toString)
+      else Seq(src)
     // "s2" marks the multi-part naming scheme: a staging dir populated
     // by the old single-file scheme must not be reused (its files would
     // sit alongside the new names and double the stream's input).
@@ -613,6 +609,8 @@ object Streaming {
     *     `stateDir/ingest_batch=<tag>`.
     *     If either write fails the batch fails and replays. The snapshot
     *     is released once both are done.
+    * Each step's jobs carry the job tag `lsh admit <tag>: decide`,
+    * `: out` or `: store`, so a graft.Obs record splits per batch.
     * Keys of EVERY seen doc — admitted or dropped — enter the store. That
     * makes admission independent of micro-batch boundaries: a doc that
     * near-dups a previously-DROPPED doc is itself dropped, exactly as the
@@ -620,7 +618,8 @@ object Streaming {
     * the chain breaks when the middle doc falls in an earlier batch).
     *
     * Replay. Both sinks overwrite only the batch's own partition (dynamic
-    * partition overwrite), and step 2 reads the store WITHOUT that
+    * partition overwrite, set per write: the session's mode is left as
+    * it was), and step 2 reads the store WITHOUT that
     * partition. The query id lives in the checkpoint, so a batch replayed
     * after a crash carries the same tag, whichever of its two writes had
     * landed: it sees the store its first attempt saw, decides the same,
@@ -640,7 +639,6 @@ object Streaming {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
         val sc = s.sparkContext
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         val queryId = sc.getLocalProperty(StreamExecution.QUERY_ID_KEY)
         require(queryId != null, "lshDedupIngest: no streaming query id on the batch thread")
         val tag = s"$queryId-$batchId"
@@ -656,7 +654,7 @@ object Streaming {
         val wholeKey = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         val stored = max(col("doc_id").isNull).over(wholeKey)
         val first = min(col("doc_id")).over(wholeKey)
-        val (decided, drops) = described(sc, s"lsh admit $tag: decide") {
+        val (decided, drops) = Obs.tagged(sc, s"lsh admit $tag: decide") {
           Materialize.fold(bands.union(store)
               .select(col("bkey"), col("doc_id"),
                 (stored || col("doc_id") > first).as("drop"),
@@ -670,7 +668,8 @@ object Streaming {
         val newKeys = decided.where(col("new_key")).select("bkey", "doc_id")
         def sink(df: DataFrame, dir: String): () => Unit = () =>
           df.withColumn("ingest_batch", lit(tag))
-            .write.mode("overwrite").partitionBy("ingest_batch").parquet(dir)
+            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("ingest_batch").parquet(dir)
         try concurrently(sc, Seq(
           s"lsh admit $tag: out" -> sink(kept, outDir),
           s"lsh admit $tag: store" -> sink(newKeys, stateDir)))
@@ -699,24 +698,15 @@ object Streaming {
     else spark.createDataFrame(java.util.Collections.emptyList[Row](), storeSchema)
   }
 
-  /** `body` with this thread's Spark job description set to `desc`, so a
-    * listener or the UI can attribute its jobs. */
-  private def described[A](sc: SparkContext, desc: String)(body: => A): A = {
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setJobDescription(prev)
-  }
-
-  /** Run each `(job description, body)` on its own driver thread, which
-    * inherits this thread's Spark local properties (job group, streaming
-    * batch id, SQL execution id); wait for all, then rethrow the first
-    * failure. */
+  /** Run each `(job tag, body)` on its own driver thread, which inherits
+    * this thread's Spark local properties (job tags, streaming batch id,
+    * SQL execution id); wait for all, then rethrow the first failure. */
   private def concurrently(sc: SparkContext, bodies: Seq[(String, () => Unit)]): Unit = {
     import java.util.concurrent.{Callable, ExecutionException, Executors}
     val pool = Executors.newFixedThreadPool(bodies.length)
     try {
-      val running = bodies.map { case (desc, body) =>
-        pool.submit(new Callable[Unit] { def call(): Unit = described(sc, desc)(body()) })
+      val running = bodies.map { case (tag, body) =>
+        pool.submit(new Callable[Unit] { def call(): Unit = Obs.tagged(sc, tag)(body()) })
       }
       val failures = running.flatMap(f => scala.util.Try(f.get()).failed.toOption.map {
         case e: ExecutionException => e.getCause
@@ -753,7 +743,7 @@ object Streaming {
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("ingest_batch="))
     if (oldParts.isEmpty) return
     val gen = s"compact-${java.util.UUID.randomUUID.toString.take(8)}"
-    described(spark.sparkContext, "lsh compact") {
+    Obs.tagged(spark.sparkContext, "lsh compact") {
       // materialize the compacted snapshot BEFORE writing into the same
       // root (the self-read would otherwise race its own output files);
       // the one exchange on bkey serves both the per-key min and the
@@ -777,7 +767,8 @@ object Streaming {
   }
 
   /** Incremental ingest sink: append the stream to date-partitioned
-    * parquet via foreachBatch with dynamic partition overwrite — each
+    * parquet via foreachBatch with a per-write dynamic partition
+    * overwrite (the session's mode is left as it was) — each
     * re-delivered date partition replaces its previous version
     * idempotently (the Spark-native version of the reference's
     * delete-then-rebuild merge, K2/U1). */
@@ -786,10 +777,9 @@ object Streaming {
       .withColumn("event_date", to_date(col("ts")))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         batch.write
           .mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
           .partitionBy("event_date")
           .parquet(outDir)
       }

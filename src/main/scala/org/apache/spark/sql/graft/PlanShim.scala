@@ -2,16 +2,19 @@ package org.apache.spark.sql.graft
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Bridge into `private[sql]` APIs: the Dataset constructor, so graft's
-  * custom logical operators (plans.TopKPerGroupPlan) can be wrapped back
-  * into a public DataFrame, and the checkpoint internals behind
-  * graft.Materialize — the standard extension-library shim; nothing else
-  * may live in this package. */
+/** Bridge into `private[sql]` and `private[spark]` APIs: the Dataset
+  * constructor, so graft's custom logical operators
+  * (plans.TopKPerGroupPlan) can be wrapped back into a public DataFrame;
+  * the checkpoint internals behind graft.Materialize; and the listener
+  * bus behind graft.Obs (its drain and the job-tag property). The
+  * standard extension-library shim; nothing else may live in this
+  * package. */
 object PlanShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
@@ -29,8 +32,7 @@ object PlanShim {
     * double duty: the same `runJob` that caches every partition also
     * returns `f` of each partition's rows (graft.Materialize.fold). Runs
     * under one SQL execution id, named like the built-in checkpoint, so
-    * QueryExecutionListeners see the plan exactly as they see a
-    * `localCheckpoint()`. */
+    * listeners see the plan exactly as they see a `localCheckpoint()`. */
   def checkpointFold[A: ClassTag](df: DataFrame, f: Iterator[InternalRow] => A)
       : (DataFrame, Array[A]) = {
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
@@ -51,4 +53,13 @@ object PlanShim {
       case p => throw new IllegalArgumentException(
         s"not a checkpoint snapshot: ${p.nodeName}")
     }
+
+  /** Block until every listener has handled every event posted so far;
+    * throws if the bus has not emptied within a minute. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+
+  /** The job tags recorded in a job's properties. */
+  def jobTags(props: java.util.Properties): Set[String] =
+    Option(props).flatMap(p => Option(p.getProperty(SparkContext.SPARK_JOB_TAGS)))
+      .fold(Set.empty[String])(_.split(SparkContext.SPARK_JOB_TAGS_SEP).filter(_.nonEmpty).toSet)
 }

@@ -80,13 +80,11 @@ class GraphSpec extends SparkSpec {
     val base = Graph.q128HostRank.fn(spark, sf).collect()
     assert(base.length > 1)
     val once = base.map(_.toSeq.mkString("|")).toSeq
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
-    try {
+    withConf("spark.sql.shuffle.partitions" -> "7") {
       val again = Graph.q128HostRank.fn(spark, sf).collect()
         .map(_.toSeq.mkString("|")).toSeq
       assert(again == once, "host ranks drifted under a different partitioning")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+    }
   }
 
   test("q274: personalized ranks replay the 3 damped rounds from raw md5 links") {

@@ -51,9 +51,7 @@ class JitCanarySpec extends SparkSpec {
   test("no whole-stage-codegen span exceeds the source-size ceiling") {
     // AQE final plans only materialize at execution; plan with AQE off so
     // the WSCG subtrees are visible (and deterministic) at plan time.
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf("spark.sql.adaptive.enabled" -> "false") {
       val sizes = SparkEntry.registry.flatMap { q =>
         try {
           q.fn(spark, sf).queryExecution.executedPlan.collect {
@@ -71,7 +69,7 @@ class JitCanarySpec extends SparkSpec {
             .mkString(", ") +
           " — split the projection into staged selects or raise " +
           "spark.sql.codegen.methodSplitThreshold for that subtree.")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("q35 repeat run compiles zero new classes (class cache absorbs it)") {

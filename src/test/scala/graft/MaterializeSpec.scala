@@ -10,16 +10,6 @@ import org.apache.spark.sql.functions._
   * Spark happens to execute the plan. */
 class MaterializeSpec extends SparkSpec {
 
-  private def withConf[A](kv: (String, String)*)(f: => A): A = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   test("fold scalars equal the separate aggregates, empty and all-NULL included") {
@@ -89,20 +79,39 @@ class MaterializeSpec extends SparkSpec {
     assert(ops.Dedup.connectedComponents(nodes, edges).isEmpty)
   }
 
+  test("q211 and a multi-round connectedComponents leave only their final snapshots persisted") {
+    val sc = spark.sparkContext
+    def pinnedBy(body: => Unit): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      body
+      sc.getPersistentRDDs.keySet.toSet -- before
+    }
+    // the edge table and four peel-round snapshots released; the two the
+    // result reads stay (the host ranking and the final degree table)
+    val q211 = pinnedBy(SparkEntry.queries("q211_kcore")(spark, sf).collect())
+    assert(q211.size <= 2, s"q211 left ${q211.size} persisted RDDs")
+    // a 16-node path takes several pointer-jumping rounds
+    import spark.implicits._
+    val nodes = (0L until 16L).toDF("id")
+    val edges = (0L until 15L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("a", "b")
+    var comps: Seq[Long] = Nil
+    val cc = pinnedBy {
+      comps = ops.Dedup.connectedComponents(nodes, edges).select("comp").as[Long].collect().toSeq
+    }
+    assert(comps == Seq.fill(16)(0L))
+    assert(cc.size <= 1, s"connectedComponents left ${cc.size} persisted RDDs")
+  }
+
   test("job-count pins: q212 and q312 at sf0.01") {
     // measured on this 4-core session when each scalar moved into its
     // checkpoint job (before: q212 50, q312 56)
     val pins = Seq("q212_hits" -> 29, "q312_dedup_merge" -> 45)
     val sf01 = new java.io.File(sf).getParent + "/sf0.01"
     val got = pins.map { case (name, _) =>
-      val gid = s"jobpin-$name"
-      val (_, jobs) = jobsBy(p => Option(p.getProperty("spark.jobGroup.id"))) {
-        spark.sparkContext.setJobGroup(gid, name, interruptOnCancel = false)
-        try SparkEntry.queries(name)(spark, sf01)
-          .write.format("noop").mode("overwrite").save()
-        finally spark.sparkContext.clearJobGroup()
+      val (_, rec) = Obs.measure(spark, name) {
+        SparkEntry.queries(name)(spark, sf01).write.format("noop").mode("overwrite").save()
       }
-      name -> jobs.getOrElse(gid, 0)
+      name -> rec.jobs.size
     }.toMap
     info(s"jobs per run: $got")
     val over = pins.filter { case (name, pin) => got(name) > pin }

@@ -120,53 +120,25 @@ class PlanAuditSpec extends SparkSpec {
     "q74_curation_funnel" -> "scalar-scalar join: the 1-row raw-doc count crosses the 1-row fused funnel aggregate into the 4-row stage report (round-13 report fusion)",
     "q313_dedup_store_audit" -> "scalar-scalar joins: the four 1-row per-relation metric aggregates (dec / before / after+checksum / scratch checksum) cross-combine into the 10-row stack report (round-13 report fusion); every data-scale leg is a collapsing count over band-key equi-joins")
 
-  /** Plans executed EAGERLY while a query builds (localCheckpoint
-    * materialization) never appear in the final executedPlan — without
-    * this capture a checkpoint could hide a cartesian from the audit.
-    * QueryExecutionListener events arrive on the async listener bus, so
-    * each query's capture is drained with a quiet-window poll. */
-  private def drainCaptured(buf: java.util.concurrent.ConcurrentLinkedQueue[String]): List[String] = {
-    val out = scala.collection.mutable.ListBuffer.empty[String]
-    var quiet = 0
-    var waited = 0
-    while (quiet < 2 && waited < 2000) {
-      var got = false
-      var s = buf.poll()
-      while (s != null) { out += s; got = true; s = buf.poll() }
-      quiet = if (got) 0 else quiet + 1
-      Thread.sleep(25); waited += 25
-    }
-    out.toList
-  }
-
   test("no query plans a cartesian product or an unbounded nested-loop join") {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        captured.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    val offenders = SparkEntry.registry.flatMap { q =>
+      // Plans executed EAGERLY while a query builds (localCheckpoint
+      // materialization) never appear in the final executedPlan: the
+      // build's record holds each such execution's plan, so a checkpoint
+      // cannot hide a cartesian from the audit
+      val (finalPlan, rec) =
+        try Obs.measure(spark, q.name)(q.fn(spark, sf).queryExecution.executedPlan.toString)
+        catch { case e: Throwable => fail(s"${q.name} failed to plan: $e") }
+      val plans = rec.plans.map(_.mkString(" ")) :+ finalPlan
+      val cartesian = plans.exists(_.contains("CartesianProduct"))
+      val nlj = plans.exists(_.contains("BroadcastNestedLoopJoin")) &&
+        !nestedLoopAllowed.contains(q.name)
+      if (cartesian || nlj)
+        Some(s"${q.name}: ${if (cartesian) "CartesianProduct" else "BroadcastNestedLoopJoin"}" +
+          s" (in ${plans.size} plan(s) incl. checkpoint-hidden)")
+      else None
     }
-    spark.listenerManager.register(listener)
-    try {
-      val offenders = SparkEntry.registry.flatMap { q =>
-        captured.clear()
-        val finalPlan =
-          try q.fn(spark, sf).queryExecution.executedPlan.toString
-          catch { case e: Throwable => fail(s"${q.name} failed to plan: $e") }
-        // final plan + every plan the build executed eagerly (checkpoints)
-        val plans = finalPlan :: drainCaptured(captured)
-        val cartesian = plans.exists(_.contains("CartesianProduct"))
-        val nlj = plans.exists(_.contains("BroadcastNestedLoopJoin")) &&
-          !nestedLoopAllowed.contains(q.name)
-        if (cartesian || nlj)
-          Some(s"${q.name}: ${if (cartesian) "CartesianProduct" else "BroadcastNestedLoopJoin"}" +
-            s" (in ${plans.size} plan(s) incl. checkpoint-hidden)")
-        else None
-      }
-      assert(offenders.isEmpty, offenders.mkString("\n"))
-    } finally spark.listenerManager.unregister(listener)
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("no query falls back to a non-codegen RDD scan of collected rows") {

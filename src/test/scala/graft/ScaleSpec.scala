@@ -672,58 +672,22 @@ class ScaleSpec extends SparkSpec {
       "q308_tost_equivalence" -> 15L,
       // q309: per-user rollup then 4 dose cells + a 1-row trend scalar
       "q309_cochran_armitage" -> 18L)
-    // Attribution is keyed on the job group, not on wall-clock windows: a
-    // straggler stage that completes after its query's action returns is
-    // still credited to ITS OWN gauge (the round-5 drain heuristic could
-    // hand it to the next query and flake the ceiling). Spark propagates
-    // the driver thread's job group to every job the action launches,
+    // Attribution is keyed on a job tag (graft.Obs), not on wall-clock
+    // windows: a straggler stage that completes after its query's action
+    // returns is still credited to ITS OWN gauge. Spark propagates the
+    // driver thread's job tags to every job the action launches,
     // including broadcast-exchange jobs on their separate pool.
-    val stageToGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]
-    val bytesByGroup =
-      new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val gid = Option(js.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (gid != null && gid.startsWith("gauge-"))
-          js.stageInfos.foreach(si => stageToGroup.put(si.stageId, gid))
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val gid = stageToGroup.get(sc.stageInfo.stageId)
-        val m = sc.stageInfo.taskMetrics
-        if (gid != null && m != null)
-          bytesByGroup
-            .computeIfAbsent(gid, _ => new java.util.concurrent.atomic.AtomicLong)
-            .addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val offenders = gauges.flatMap { case (name, ceilKiB) =>
-        val gid = s"gauge-$name"
-        spark.sparkContext.setJobGroup(gid, s"shuffle gauge $name",
-          interruptOnCancel = false)
-        try SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
+    val offenders = gauges.flatMap { case (name, ceilKiB) =>
+      val (_, rec) = Obs.measure(spark, s"gauge-$name") {
+        SparkEntry.queries(name)(spark, new java.io.File(sf).getParent + "/sf0.01")
           .write.format("noop").mode("overwrite").save()
-        finally spark.sparkContext.clearJobGroup()
-        // bounded wait for this group's listener events to land (the jobs
-        // are done once save() returns; only event delivery can lag, and a
-        // late event now lands on the right group either way)
-        def total: Long =
-          Option(bytesByGroup.get(gid)).map(_.get).getOrElse(0L)
-        var prev = -1L; var spins = 0
-        while (prev != total && spins < 50) {
-          prev = total; Thread.sleep(100); spins += 1
-        }
-        val kib = total / 1024
-        if (kib > ceilKiB) Some(s"$name: shuffled $kib KiB > ceiling $ceilKiB KiB")
-        else None
       }
-      assert(offenders.isEmpty,
-        s"shuffle regressions (payload leaked into an exchange?):\n${offenders.mkString("\n")}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val kib = rec.shuffleWriteBytes / 1024
+      if (kib > ceilKiB) Some(s"$name: shuffled $kib KiB > ceiling $ceilKiB KiB")
+      else None
+    }
+    assert(offenders.isEmpty,
+      s"shuffle regressions (payload leaked into an exchange?):\n${offenders.mkString("\n")}")
   }
 
   test("date-partitioned write prunes partitions at the scan") {

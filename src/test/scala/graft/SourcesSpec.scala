@@ -71,9 +71,7 @@ class SourcesSpec extends SparkSpec {
     val l = Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     sources.Bucketing.writeBucketed(o, "orders_bkt", Seq("o_orderkey"), 8)
     sources.Bucketing.writeBucketed(l, "lineitem_bkt", Seq("l_orderkey"), 8)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.table("orders_bkt")
         .join(spark.table("lineitem_bkt"),
           col("o_orderkey") === col("l_orderkey"))
@@ -83,7 +81,7 @@ class SourcesSpec extends SparkSpec {
         s"bucketed join must not shuffle either side:\n$plan")
       // and the result is the same as the shuffled spelling
       assert(j.count() == o.join(l, col("o_orderkey") === col("l_orderkey")).count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("upsert replaces matched keys, keeps the rest, appends new keys") {

@@ -9,24 +9,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
 
-  /** Run `body` and count the Spark jobs it started, grouped by `key` of
-    * each job's properties (jobs without a key are not counted). */
-  def jobsBy[A](key: java.util.Properties => Option[String])(body: => A): (A, Map[String, Int]) = {
-    val counts = new java.util.concurrent.ConcurrentHashMap[String, Int]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(key).foreach(counts.merge(_, 1, _ + _))
+  /** Run `f` with the session settings `kv`, then restore each key's
+    * previous value (or unset it). */
+  def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      // the jobs are done; only listener-event delivery can lag
-      def total = counts.values.stream().mapToInt(_.intValue).sum
-      var prev = -1; var spins = 0
-      while (prev != total && spins < 50) { prev = total; Thread.sleep(100); spins += 1 }
-      import scala.jdk.CollectionConverters._
-      (out, counts.asScala.toMap)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Shared ZIP fixture builder (PipelineSpec + StreamingSpec). */

@@ -145,11 +145,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("transformWithState running counters == batch counts (RocksDB store)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val q = Streaming.runToMemory(
         Streaming.userCountsTws(Streaming.eventsStream(spark, sf)).toDF(),
         "tws_counts", mode = "update")
@@ -163,20 +160,12 @@ class StreamingSpec extends SparkSpec {
       assert(got.count() > 0)
       assert(want.exceptAll(got).isEmpty && got.exceptAll(want).isEmpty)
       q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("transformWithState MapState histogram == batch (user, type) counts") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val q = Streaming.runToMemory(
         Streaming.typeCountsTws(Streaming.eventsStream(spark, sf)).toDF(),
         "tws_hist", mode = "update")
@@ -187,20 +176,12 @@ class StreamingSpec extends SparkSpec {
       assert(got.count() > 0)
       assert(want.exceptAll(got).isEmpty && got.exceptAll(want).isEmpty)
       q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("transformWithState ListState last-3 == batch window tail") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val q = Streaming.runToMemory(
         Streaming.lastEventsTws(Streaming.eventsStream(spark, sf)).toDF(),
         "tws_last", mode = "update")
@@ -219,20 +200,12 @@ class StreamingSpec extends SparkSpec {
       assert(got.count() > 0)
       assert(want.exceptAll(got).isEmpty && got.exceptAll(want).isEmpty)
       q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
   test("transformWithState event-time timers close sessions like fMGWS") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val q = Streaming.runToMemory(
         Streaming.timerSessionsTws(Streaming.eventsStream(spark, sf)).toDF(),
         "tws_timer_sessions", mode = "append")
@@ -259,11 +232,6 @@ class StreamingSpec extends SparkSpec {
       assert(got.exceptAll(allSess).isEmpty, "emitted a session batch never saw")
       assert(got.count() > 0)
       q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -547,16 +515,29 @@ class StreamingSpec extends SparkSpec {
     val landing = twoFileLanding()
     val root = Files.createTempDirectory("graft-lshj").toString
     val persisted = sc.getPersistentRDDs.keySet
-    val (q, jobs) = jobsBy(p =>
-      for (q <- Option(p.getProperty("sql.streaming.queryId"));
-           b <- Option(p.getProperty("streaming.sql.batchId"))) yield s"$q/$b") {
-      lshDrain(landing, root, s"$root/ckpt")
-    }
-    val perBatch = (0 to 1).map(b => jobs.getOrElse(s"${q.id}/$b", 0))
+    val (q, rec) = Obs.measure(spark, "lsh drain")(lshDrain(landing, root, s"$root/ckpt"))
+    // each step of batch b runs under the tag `lsh admit <query id>-b: <step>`
+    val perBatch = (0 to 1).map(b =>
+      rec.jobs.count(_.exists(_.startsWith(s"lsh admit ${q.id}-$b: "))))
     info(s"jobs per micro-batch: $perBatch")
     assert(perBatch(0) > 0 && perBatch(1) <= pin, s"jobs per micro-batch $perBatch, pin $pin")
     val left = sc.getPersistentRDDs.keySet -- persisted
     assert(left.isEmpty, s"the drain left persisted RDDs ${left.toSeq.sorted}")
+  }
+
+  test("streaming sinks leave the session's partition overwrite mode alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    val root = Files.createTempDirectory("graft-lshm").toString
+    lshDrain(twoFileLanding(), root, s"$root/ckpt")
+    Streaming.ingestToParquet(Streaming.eventsStream(spark, sf), s"$root/events", s"$root/ckpt2")
+    assert(spark.conf.get(key) == before)
+    // so a static partitioned overwrite still replaces the whole table
+    import spark.implicits._
+    val table = s"$root/table"
+    Seq((1, "stale")).toDF("v", "p").write.partitionBy("p").parquet(table)
+    Seq((2, "fresh")).toDF("v", "p").write.mode("overwrite").partitionBy("p").parquet(table)
+    assert(spark.read.parquet(table).as[(Int, String)].collect().toSeq == Seq((2, "fresh")))
   }
 
   test("LSH dedup: a batch replayed after its admitted-docs write was lost decides as a clean run") {
