@@ -13,14 +13,11 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdat
 import org.apache.spark.sql.graft.PlanShim
 
 /** The engine's one telemetry listener. [[measure]] runs a body under a
-  * fresh Spark job tag and returns what ran under it. Spark copies the
-  * driver thread's local properties, tags included, onto every job the
-  * body launches: AQE query stages, broadcast and subquery jobs, and
-  * threads the body starts. So a record holds exactly the body's work,
-  * whatever else runs on the session at the same time.
-  *
-  * The listener is installed on a SparkContext by its first `measure`,
-  * and keeps data only for the measures in flight. */
+  * fresh Spark job tag, which Spark copies onto every job the body
+  * launches (AQE stages, broadcasts, subqueries, threads it starts), so
+  * a record holds exactly the body's work, whatever else runs at the
+  * same time. The listener is installed by a SparkContext's first
+  * `measure` and keeps data only for the measures in flight. */
 object Obs {
 
   /** A completed stage: its task count, executor run time, each finished
@@ -28,11 +25,10 @@ object Obs {
   final case class Stage(id: Int, tasks: Int, runMs: Long, taskMs: Seq[Long],
       shuffleWriteBytes: Long, shuffleReadBytes: Long)
 
-  /** What ran under one [[measure]]: each job's tag set, in job id order
-    * (finer tags the engine sets, such as the LSH ingest's, split a record
-    * further); the completed stages; and for each SQL execution, the node
-    * names of its latest physical plan, subqueries included (AQE's final
-    * plan once the execution has finished). */
+  /** What ran under one [[measure]]: each job's tag set in job id order
+    * (the engine's finer tags split a record further), the completed
+    * stages, and each SQL execution's latest plan node names, subqueries
+    * included. */
   final case class Record(jobs: Seq[Set[String]], stages: Seq[Stage], plans: Seq[Seq[String]]) {
     def tasks: Int = stages.map(_.tasks).sum
     def shuffleWriteBytes: Long = stages.map(_.shuffleWriteBytes).sum
@@ -58,13 +54,11 @@ object Obs {
     } finally l.active.remove(tag)
   }
 
-  /** `body` with `tag` added to this thread's Spark job tags, and so to
-    * every job it launches; removed afterwards unless it was already set.
-    * Spark rejects a tag containing `,`. */
+  /** `body` with the fresh `tag` (no `,`) added to this thread's Spark
+    * job tags, and so to every job it launches. */
   def tagged[A](sc: SparkContext, tag: String)(body: => A): A = {
-    val had = sc.getJobTags().contains(tag)
     sc.addJobTag(tag)
-    try body finally if (!had) sc.removeJobTag(tag)
+    try body finally sc.removeJobTag(tag)
   }
 
   private val ids = new AtomicLong
@@ -72,8 +66,7 @@ object Obs {
 
   private def nodeNames(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(nodeNames)
 
-  /** One measure's share of the events, keyed by job, stage and SQL
-    * execution id. */
+  /** One measure's share of the events. */
   private final class Acc {
     val jobs = new ConcurrentSkipListMap[Int, Set[String]]
     val stageIds = ConcurrentHashMap.newKeySet[Int]()

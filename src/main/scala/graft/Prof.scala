@@ -17,10 +17,8 @@ object Prof {
       // independent of what ran before it (same rationale as Bench)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      // one record per profiled run (graft.Obs): its jobs (eager
-      // checkpoints, broadcasts and collects each launch their own, so a
-      // job diet shows here per query), stages, task walls, shuffle bytes
-      // and the AQE-final plans
+      // one graft.Obs record per profiled run; eager checkpoints,
+      // broadcasts and collects each launch a job, so a job diet shows
       val (sec, rec) = Obs.measure(spark, name) {
         val t0 = System.nanoTime()
         byName(name)(spark, sf).write.format("noop").mode("overwrite").save()
@@ -34,12 +32,10 @@ object Prof {
       // where salting is working fine — scheduling jitter, not skew);
       // absolutes still come from the true median, so nothing is hidden
       val strag = rec.stages.flatMap { st =>
-        val (sid, ts) = (st.id, st.taskMs.map(_ / 1e3).sorted)
-        if (ts.size >= 4 && ts.last >= 0.5) {
-          val med = ts(ts.size / 2)
-          if (med > 0) Some((ts.last / math.max(med, 0.1), sid, ts.last, med))
-          else None
-        } else None
+        val ts = st.taskMs.map(_ / 1e3).sorted
+        val med = ts.lift(ts.size / 2).getOrElse(0.0)
+        Option.when(ts.size >= 4 && ts.last >= 0.5 && med > 0)(
+          (ts.last / math.max(med, 0.1), st.id, ts.last, med))
       }.sortBy(-_._1).headOption
       val stragStr = strag.map { case (r, sid, mx, med) =>
         f"straggler=$r%.1fx(s$sid max=$mx%.1fs med=$med%.1fs)" }

@@ -666,8 +666,7 @@ object Graph {
       .join(broadcast(alive), "v")
       .groupBy("u").agg(count(lit(1)).as("dg"))
     var alive = nodes.select("v")
-    var prev: Option[DataFrame] = None
-    (1 to rounds).foreach { _ =>
+    (1 to rounds).foreach { r =>
       // snapshot each round's alive set (round 12, q212's fix applied
       // here too): aliveDeg references `alive` TWICE (u- and v-side
       // broadcasts), so a lazy chain re-evaluates round r-1 twice per
@@ -675,16 +674,16 @@ object Graph {
       // guard. The set is host-cardinality; the snapshot is the
       // per-iteration staging any iterative graph algorithm needs, and
       // round r-1's is released once round r's has materialized.
-      alive = graft.Materialize.snapshot(
+      val next = graft.Materialize.snapshot(
         aliveDeg(alive).filter(col("dg") >= k).select(col("u").as("v")))
-      prev.foreach(graft.Materialize.release)
-      prev = Some(alive)
+      if (r > 1) graft.Materialize.release(alive)
+      alive = next
     }
     // the guard's count comes out of fin's own checkpoint job
     val finDeg = aliveDeg(alive).select(col("u").as("v"), col("dg").as("core_degree"))
     val di = finDeg.schema.fieldIndex("core_degree")
     val (fin, stray) = graft.Materialize.count(finDeg)(_.getLong(di) < k)
-    prev.foreach(graft.Materialize.release)
+    if (rounds > 0) graft.Materialize.release(alive)
     if (stray != 0) throw new IllegalStateException(
       s"k-core peel not at fixpoint after $rounds rounds: $stray survivors " +
         s"still below degree $k — raise the round budget for this graph")

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-import graft.sources.Versioned.{deleteRecursively, listDir}
+import graft.sources.Versioned.{deleteRecursively, listDir, walk}
 
 /** Table maintenance for the parquet-canonical layout: small-files
   * compaction. Incremental ingest (per-batch dynamic-partition writes,
@@ -338,13 +338,5 @@ object Maintenance {
   private def countParquet(p: Path): Int =
     listFiles(p).count(_.toString.endsWith(".parquet"))
 
-  private def listFiles(p: Path): Seq[Path] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.exists(p)) Seq.empty
-    else {
-      val s = Files.walk(p)
-      try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq
-      finally s.close()
-    }
-  }
+  private def listFiles(p: Path): Seq[Path] = walk(p).filter(Files.isRegularFile(_))
 }

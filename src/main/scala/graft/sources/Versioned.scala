@@ -357,12 +357,14 @@ object Versioned {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
-  private[graft] def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p)) {
+  /** `p` and everything under it, parents first; empty if `p` is absent. */
+  private[graft] def walk(p: Path): Seq[Path] =
+    if (!Files.exists(p)) Seq.empty
+    else {
+      import scala.jdk.CollectionConverters._
       val s = Files.walk(p)
-      val all = try s.iterator().asScala.toSeq finally s.close()
-      all.reverse.foreach(Files.delete)
+      try s.iterator().asScala.toSeq finally s.close()
     }
-  }
+
+  private[graft] def deleteRecursively(p: Path): Unit = walk(p).reverse.foreach(Files.delete)
 }

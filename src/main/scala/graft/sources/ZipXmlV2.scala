@@ -57,6 +57,21 @@ object ZipXmlTable {
     StructField("source_zip", StringType, nullable = false),
     StructField("source_xml_file", StringType, nullable = false),
     StructField("xml", StringType, nullable = false)))
+
+  /** The `.zip` files at `path` (a directory or a glob), sorted; a
+    * driver-side listing only. The exists() guard comes first: a glob
+    * path is not a real file, so getFileStatus on it would throw before
+    * globStatus ran. */
+  private[sources] def zipPaths(path: String): Seq[String] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(new Configuration())
+    val stats =
+      if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.listStatus(p)
+      else fs.globStatus(p)
+    Option(stats).toSeq.flatten
+      .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".zip"))
+      .map(_.getPath.toString).sorted
+  }
 }
 
 class ZipXmlTable(path: String) extends Table with SupportsRead {
@@ -93,20 +108,8 @@ class ZipXmlScan(path: String, required: StructType,
     s"graft-zip $path, ReadSchema: ${required.simpleString}"
   override def toBatch: Batch = this
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // driver-side listing only — no data bytes move at planning time.
-    // exists() guard first: a glob path (/dir/*.zip) is not a real file,
-    // so getFileStatus on it would throw before globStatus ran
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    val stats =
-      if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.listStatus(p)
-      else fs.globStatus(p)
-    Option(stats).getOrElse(Array.empty)
-      .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".zip"))
-      .sortBy(_.getPath.toString)
-      .map(s => ZipFilePartition(s.getPath.toString): InputPartition)
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    ZipXmlTable.zipPaths(path).map(ZipFilePartition(_): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ZipXmlReaderFactory(required.fieldNames, ignoreCorrupt)
@@ -149,18 +152,7 @@ class ZipXmlMicroBatchStream(path: String, required: StructType,
   // mid-run wait for the next start)
   private var pinned: Option[Set[String]] = None
 
-  private def listZips(): Set[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(new Configuration())
-    val stats =
-      if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.listStatus(p)
-      else fs.globStatus(p)
-    Option(stats).getOrElse(Array.empty)
-      .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".zip"))
-      .map(_.getPath.toString).toSet
-  }
-
-  private def available(): Set[String] = pinned.getOrElse(listZips())
+  private def available(): Set[String] = pinned.getOrElse(ZipXmlTable.zipPaths(path).toSet)
 
   override def initialOffset(): Offset = ZipFilesOffset(Set.empty)
 
@@ -188,7 +180,7 @@ class ZipXmlMicroBatchStream(path: String, required: StructType,
   override def reportLatestOffset(): Offset = ZipFilesOffset(available())
 
   override def prepareForTriggerAvailableNow(): Unit = {
-    pinned = Some(listZips())
+    pinned = Some(ZipXmlTable.zipPaths(path).toSet)
   }
 
   override def deserializeOffset(json: String): Offset =

@@ -609,8 +609,9 @@ object Streaming {
     *     `stateDir/ingest_batch=<tag>`.
     *     If either write fails the batch fails and replays. The snapshot
     *     is released once both are done.
-    * Each step's jobs carry the job tag `lsh admit <tag>: decide`,
-    * `: out` or `: store`, so a graft.Obs record splits per batch.
+    * Every job of the batch carries the job tag `lsh admit <tag>`, and
+    * each step's jobs also `lsh admit <tag>: decide`, `: out` or
+    * `: store`, so a graft.Obs record splits per batch and per step.
     * Keys of EVERY seen doc — admitted or dropped — enter the store. That
     * makes admission independent of micro-batch boundaries: a doc that
     * near-dups a previously-DROPPED doc is itself dropped, exactly as the
@@ -642,38 +643,40 @@ object Streaming {
         val queryId = sc.getLocalProperty(StreamExecution.QUERY_ID_KEY)
         require(queryId != null, "lshDedupIngest: no streaming query id on the batch thread")
         val tag = s"$queryId-$batchId"
-        val bands = batch
-          .withColumn("toks", tokens(col("text")))
-          .withColumn("sig", expr("graft_minhash(toks)"))
-          .select(explode(array((0 until 4).map(b => bandKey(col("sig"), b, 4)): _*)).as("bkey"),
-            col("doc_id"))
-        val store = readStore(s, stateDir).where(col("ingest_batch") =!= tag)
-          .select(col("bkey"), lit(null).cast(LongType).as("doc_id"))
-        // one exchange on bkey; every function below shares its sort
-        val byKey = Window.partitionBy("bkey").orderBy("doc_id")
-        val wholeKey = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        val stored = max(col("doc_id").isNull).over(wholeKey)
-        val first = min(col("doc_id")).over(wholeKey)
-        val (decided, drops) = Obs.tagged(sc, s"lsh admit $tag: decide") {
-          Materialize.fold(bands.union(store)
-              .select(col("bkey"), col("doc_id"),
-                (stored || col("doc_id") > first).as("drop"),
-                // first row of a key the store lacks: doc_id = first
-                (!stored && row_number().over(byKey) === 1).as("new_key"))
-              .where(col("doc_id").isNotNull)) {
-            _.filter(_.getBoolean(2)).map(_.getLong(1)).toSet
+        Obs.tagged(sc, s"lsh admit $tag") {
+          val bands = batch
+            .withColumn("toks", tokens(col("text")))
+            .withColumn("sig", expr("graft_minhash(toks)"))
+            .select(explode(array((0 until 4).map(b => bandKey(col("sig"), b, 4)): _*)).as("bkey"),
+              col("doc_id"))
+          val store = readStore(s, stateDir).where(col("ingest_batch") =!= tag)
+            .select(col("bkey"), lit(null).cast(LongType).as("doc_id"))
+          // one exchange on bkey; every function below shares its sort
+          val byKey = Window.partitionBy("bkey").orderBy("doc_id")
+          val wholeKey = byKey.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+          val stored = max(col("doc_id").isNull).over(wholeKey)
+          val first = min(col("doc_id")).over(wholeKey)
+          val (decided, drops) = Obs.tagged(sc, s"lsh admit $tag: decide") {
+            Materialize.fold(bands.union(store)
+                .select(col("bkey"), col("doc_id"),
+                  (stored || col("doc_id") > first).as("drop"),
+                  // first row of a key the store lacks: doc_id = first
+                  (!stored && row_number().over(byKey) === 1).as("new_key"))
+                .where(col("doc_id").isNotNull)) {
+              _.filter(_.getBoolean(2)).map(_.getLong(1)).toSet
+            }
           }
+          val kept = batch.where(!col("doc_id").isInCollection(drops.flatten.distinct))
+          val newKeys = decided.where(col("new_key")).select("bkey", "doc_id")
+          def sink(df: DataFrame, dir: String): () => Unit = () =>
+            df.withColumn("ingest_batch", lit(tag))
+              .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+              .partitionBy("ingest_batch").parquet(dir)
+          try concurrently(sc, Seq(
+            s"lsh admit $tag: out" -> sink(kept, outDir),
+            s"lsh admit $tag: store" -> sink(newKeys, stateDir)))
+          finally Materialize.release(decided)
         }
-        val kept = batch.where(!col("doc_id").isInCollection(drops.flatten.distinct))
-        val newKeys = decided.where(col("new_key")).select("bkey", "doc_id")
-        def sink(df: DataFrame, dir: String): () => Unit = () =>
-          df.withColumn("ingest_batch", lit(tag))
-            .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch").parquet(dir)
-        try concurrently(sc, Seq(
-          s"lsh admit $tag: out" -> sink(kept, outDir),
-          s"lsh admit $tag: store" -> sink(newKeys, stateDir)))
-        finally Materialize.release(decided)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

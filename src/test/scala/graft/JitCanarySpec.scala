@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 
@@ -41,8 +39,8 @@ class JitCanarySpec extends SparkSpec {
       assert(spark.conf.getOption(k) === Some(v), s"shared session conf $k")
     }
     // and graft.Session is the only place src/main builds a session
-    val builders = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+    val builders = sources.Versioned.walk(java.nio.file.Paths.get("src/main"))
+      .filter(_.toString.endsWith(".scala"))
       .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
       .map(_.getFileName.toString).toList
     assert(builders === List("Session.scala"))

@@ -81,23 +81,21 @@ class MaterializeSpec extends SparkSpec {
 
   test("q211 and a multi-round connectedComponents leave only their final snapshots persisted") {
     val sc = spark.sparkContext
-    def pinnedBy(body: => Unit): Set[Int] = {
+    def pinnedBy[A](body: => A): (A, Set[Int]) = {
       val before = sc.getPersistentRDDs.keySet
-      body
-      sc.getPersistentRDDs.keySet.toSet -- before
+      val out = body
+      (out, sc.getPersistentRDDs.keySet.toSet -- before)
     }
     // the edge table and four peel-round snapshots released; the two the
     // result reads stay (the host ranking and the final degree table)
-    val q211 = pinnedBy(SparkEntry.queries("q211_kcore")(spark, sf).collect())
+    val (_, q211) = pinnedBy(SparkEntry.queries("q211_kcore")(spark, sf).collect())
     assert(q211.size <= 2, s"q211 left ${q211.size} persisted RDDs")
     // a 16-node path takes several pointer-jumping rounds
     import spark.implicits._
     val nodes = (0L until 16L).toDF("id")
     val edges = (0L until 15L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("a", "b")
-    var comps: Seq[Long] = Nil
-    val cc = pinnedBy {
-      comps = ops.Dedup.connectedComponents(nodes, edges).select("comp").as[Long].collect().toSeq
-    }
+    val (comps, cc) =
+      pinnedBy(ops.Dedup.connectedComponents(nodes, edges).select("comp").as[Long].collect().toSeq)
     assert(comps == Seq.fill(16)(0L))
     assert(cc.size <= 1, s"connectedComponents left ${cc.size} persisted RDDs")
   }

@@ -13,17 +13,17 @@ class ObsSpec extends SparkSpec {
   private def run(name: String): Unit =
     SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
 
-  /** (jobs, completed stages, finished tasks) of the jobs `body` started,
-    * as the status tracker counts them; `body` must end with a drained
-    * listener bus, as `Obs.measure` does. */
-  private def untagged(body: => Unit): (Int, Int, Int) = {
+  /** `body`'s result and the (jobs, completed stages, finished tasks) of
+    * the jobs it started, as the status tracker counts them; `body` must
+    * end with a drained listener bus, as `Obs.measure` does. */
+  private def untagged[A](body: => A): (A, (Int, Int, Int)) = {
     val st = spark.sparkContext.statusTracker
     val before = st.getJobIdsForGroup(null).toSet
-    body
+    val out = body
     val jobs = st.getJobIdsForGroup(null).filterNot(before)
     val stages = jobs.flatMap(st.getJobInfo(_).toSeq.flatMap(_.stageIds)).distinct
       .flatMap(st.getStageInfo(_)).filter(_.numCompletedTasks > 0)
-    (jobs.length, stages.length, stages.map(_.numCompletedTasks).sum)
+    (out, (jobs.length, stages.length, stages.map(_.numCompletedTasks).sum))
   }
 
   private def counts(r: Obs.Record): (Int, Int, Int) = (r.jobs.size, r.stages.size, r.tasks)
@@ -31,8 +31,7 @@ class ObsSpec extends SparkSpec {
   test("records of queries run back to back equal the untagged counts of each query") {
     names.foreach(run) // warm-up
     for (name <- names) {
-      var rec: Obs.Record = null
-      val want = untagged { rec = Obs.measure(spark, name)(run(name))._2 }
+      val (rec, want) = untagged(Obs.measure(spark, name)(run(name))._2)
       info(s"$name: (jobs, stages, tasks) = $want")
       assert(want._1 > 0 && counts(rec) == want, name)
       assert(rec.stages.forall(s => s.taskMs.size == s.tasks), name)
@@ -42,13 +41,12 @@ class ObsSpec extends SparkSpec {
   test("records of two queries run concurrently equal their solo records and sum to the total") {
     val (a, b) = ("q212_hits", "q312_dedup_merge")
     val solo = Seq(a, b).map(n => counts(Obs.measure(spark, n)(run(n))._2))
-    var recs: Seq[Obs.Record] = Nil
-    val total = untagged {
+    val (recs, total) = untagged {
       // fresh threads: each starts with no job tags
       val tasks = Seq(a, b).map(n =>
         new java.util.concurrent.FutureTask(() => Obs.measure(spark, n)(run(n))._2))
       tasks.foreach(new Thread(_).start())
-      recs = tasks.map(_.get())
+      tasks.map(_.get())
     }
     assert(recs.map(counts) == solo)
     assert(recs.map(counts).reduce((x, y) => (x._1 + y._1, x._2 + y._2, x._3 + y._3)) == total)

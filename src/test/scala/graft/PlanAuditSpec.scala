@@ -122,10 +122,9 @@ class PlanAuditSpec extends SparkSpec {
 
   test("no query plans a cartesian product or an unbounded nested-loop join") {
     val offenders = SparkEntry.registry.flatMap { q =>
-      // Plans executed EAGERLY while a query builds (localCheckpoint
-      // materialization) never appear in the final executedPlan: the
-      // build's record holds each such execution's plan, so a checkpoint
-      // cannot hide a cartesian from the audit
+      // plans executed EAGERLY while a query builds (checkpoints) never
+      // appear in its final executedPlan; the build's record holds them,
+      // so a checkpoint cannot hide a cartesian from the audit
       val (finalPlan, rec) =
         try Obs.measure(spark, q.name)(q.fn(spark, sf).queryExecution.executedPlan.toString)
         catch { case e: Throwable => fail(s"${q.name} failed to plan: $e") }

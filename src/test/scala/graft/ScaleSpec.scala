@@ -672,11 +672,9 @@ class ScaleSpec extends SparkSpec {
       "q308_tost_equivalence" -> 15L,
       // q309: per-user rollup then 4 dose cells + a 1-row trend scalar
       "q309_cochran_armitage" -> 18L)
-    // Attribution is keyed on a job tag (graft.Obs), not on wall-clock
-    // windows: a straggler stage that completes after its query's action
-    // returns is still credited to ITS OWN gauge. Spark propagates the
-    // driver thread's job tags to every job the action launches,
-    // including broadcast-exchange jobs on their separate pool.
+    // graft.Obs keys each gauge on a job tag, not a wall-clock window: a
+    // stage that completes after its action returns (a broadcast job on
+    // its own pool included) is still credited to ITS OWN query
     val offenders = gauges.flatMap { case (name, ceilKiB) =>
       val (_, rec) = Obs.measure(spark, s"gauge-$name") {
         SparkEntry.queries(name)(spark, new java.io.File(sf).getParent + "/sf0.01")

@@ -118,13 +118,9 @@ class SourcesSpec extends SparkSpec {
     val n = sources.Maintenance.upsert(spark, dir, updates, Seq("doc_id"))
     assert(n == total)
     // partition dirs survive → pruning on lang still works
-    val langDirs = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-      .iterator()
-    var found = false
-    while (langDirs.hasNext) {
-      if (langDirs.next().getFileName.toString.startsWith("lang=")) found = true
-    }
-    assert(found, "lang= partition directories must survive the upsert")
+    assert(sources.Versioned.listDir(java.nio.file.Paths.get(dir))
+      .exists(_.getFileName.toString.startsWith("lang=")),
+      "lang= partition directories must survive the upsert")
     val q = spark.read.parquet(dir).filter(col("lang") === "en")
     assert(q.queryExecution.executedPlan.toString.contains("PartitionFilters"))
     assert(q.count() == docs.filter(col("lang") === "en").count())
