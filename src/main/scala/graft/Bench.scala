@@ -16,21 +16,11 @@ object Bench {
     def run(q: Q, dir: String): Unit =
       q.fn(spark, dir).write.format("noop").mode("overwrite").save()
 
-    // Round-8 storage-pressure fix: many queries pin small intermediate
-    // frames with localCheckpoint; the blocks stay in storage memory
-    // until the ContextCleaner happens to GC the referencing RDD. Over
-    // a 191-query pass that accumulation squeezes execution memory for
-    // the wide-row giants measured LATE in the suite — q35's samples
-    // degraded 10 s -> 38 s within one run (ext=0.0: no external load,
-    // pure internal pressure). Dropping every persistent RDD between
-    // queries makes each measurement independent of suite position.
-    def dropCheckpoints(): Unit =
-      // blocking: the removal cost must land HERE (untimed) — an async
-      // unpersist of thousands of blocks overlaps the next timed sample
-      // and inflates cheap queries by seconds (measured on the first
-      // round-8 re-record attempt)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+    // Each run is a Materialize.scope, which releases (blocking) the
+    // snapshots the query made once it ends: left pinned until GC they
+    // squeezed the wide-row giants late in the pass (round 8: q35 10 s ->
+    // 38 s). `sample` releases outside the timed window; an async
+    // unpersist overlapped the next sample and inflated cheap queries.
 
     // SPARK_GRAFT_ONLY=q35_ocds_flatten,q36_... restricts the run — a
     // local iteration tool; the driver never sets it.
@@ -81,9 +71,8 @@ object Bench {
     // the interpreted-HOF queries that need row-loop volume to JIT.)
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01");
          q <- selected) {
-      try run(q, dir)
+      try Materialize.scope(run(q, dir))
       catch { case e: Throwable => System.err.println(s"[bench-warmup] ${q.name}: $e") }
-      dropCheckpoints()
     }
 
     // Round-10 warm-up redesign (round-9 VERDICT items 1+2). The round-9
@@ -188,11 +177,7 @@ object Bench {
     // one retry. Report the min (steady-state throughput), carrying the
     // min sample's contention annotation into the JSON.
     val ExtTaint = 4.0
-    def sample(q: Q): Sample = {
-      val s = timed(q)
-      dropCheckpoints() // outside the timed window; see above
-      s
-    }
+    def sample(q: Q): Sample = Materialize.scope(timed(q))._1 // release untimed; see above
     // Incremental flush (cut e): after EVERY query, rewrite the full
     // cumulative map to the scratch files and print a compact cumulative
     // line (total-so-far + 10 slowest + done/of, ~500 B) to stdout. The

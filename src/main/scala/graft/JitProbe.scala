@@ -69,7 +69,7 @@ object JitProbe {
       val jit0 = jit.getTotalCompilationTime
       val cls0 = CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount
       val t0 = System.nanoTime()
-      try q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      try Materialize.scope(q.fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       catch { case e: Throwable => System.err.println(s"[jitprobe] ${q.name}: $e") }
       val sec = (System.nanoTime() - t0) / 1e9
       // let background C2 compilation land before sampling the pools

@@ -13,17 +13,14 @@ object Prof {
     // warmup
     byName("q02_filter_project")(spark, sf).write.format("noop").mode("overwrite").save()
     for (name <- args; _ <- 1 to 2) {
-      // drop accumulated localCheckpoint blocks so each measurement is
-      // independent of what ran before it (same rationale as Bench)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
       // one graft.Obs record per profiled run; eager checkpoints,
-      // broadcasts and collects each launch a job, so a job diet shows
-      val (sec, rec) = Obs.measure(spark, name) {
+      // broadcasts and collects each launch a job, so a job diet shows.
+      // `held`: the run's snapshots the scope released (as in Bench)
+      val ((sec, rec), held) = Materialize.scope(Obs.measure(spark, name) {
         val t0 = System.nanoTime()
         byName(name)(spark, sf).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      }
+      })
       // straggler = worst max/median task-wall ratio over MATERIAL
       // stages (>= 4 tasks, max task >= 0.5 s — tiny stages are noise);
       // report the worst stage's absolutes alongside the ratio. The
@@ -44,7 +41,7 @@ object Prof {
       // SortMergeJoinExec/ShuffledHashJoinExec that OptimizeSkewedJoin
       // split carries "skew=true" in its node name in the AQE-final plan
       val skew = rec.plans.flatten.count(_.contains("skew=true"))
-      println(f"[prof] $name%-24s $sec%.2f s  jobs=${rec.jobs.size}%d shuffle w=${rec.shuffleWriteBytes / 1024}%d KiB r=${rec.shuffleReadBytes / 1024}%d KiB skew=$skew%d $stragStr")
+      println(f"[prof] $name%-24s $sec%.2f s  jobs=${rec.jobs.size}%d shuffle w=${rec.shuffleWriteBytes / 1024}%d KiB r=${rec.shuffleReadBytes / 1024}%d KiB skew=$skew%d $stragStr held=$held")
       // per-stage parallelism evidence: (numTasks, executor seconds);
       // distinguishes "the host was busy" from "AQE serialized the stage"
       val heavy = rec.stages.sortBy(-_.runMs).take(6)

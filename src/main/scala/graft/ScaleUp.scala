@@ -154,41 +154,26 @@ object ScaleUp {
       spark.read.parquet(s"$src/lineitem.parquet")))
     // per-copy user universe: per-user event density (the sessionization
     // and window workloads' real cost driver) stays what it was.
-    // events.ts has shipped as TIMESTAMP(NANOS) or timestamp[us] across
-    // fixture generations. nanosAsLong makes a nanos source readable
-    // (it passes through and is re-written as BIGINT); a timestamp[us]
-    // source reads as TIMESTAMP_NTZ and is re-written as NTZ micros.
-    // Either output shape round-trips through the schema-adaptive
-    // Tables.events (nano shim vs NTZ→UTC cast) — asserted below.
-    // The flag is session-scoped: restore the caller's prior value so a
-    // shared test session (ScaleUpSpec invokes run()) doesn't carry it
-    // into unrelated parquet reads after this derivation finishes.
-    val priorNanos = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try {
-      // zipf: user_id block-merges (heavy-tailed per-user event density);
-      // event_id stays disjoint (event grain preserved)
-      val eventsBase = remap("event_id")(spark.read.parquet(s"$src/events.parquet"))
-      write("events",
-        if (zipf) zipfKey("user_id")(eventsBase)
-          // super-hot head, same rationale as orders: 1/8 of all events
-          // on base user 0 (residue 0 — one key in every copy). The
-          // stride is 2^32 so pmod(event_id, 8) is copy-invariant.
-          .withColumn("user_id",
-            when(pmod(col("event_id"), lit(8L)) === 0, lit(0L))
-              .otherwise(col("user_id")))
-        else eventsBase.withColumn("user_id", col("user_id") + col("copy") * Stride))
-      // Fail loud here rather than 16 queries deep: the derived events
-      // file must load through Tables.events with the public schema.
-      val tsType = Tables.events(spark, dest).schema("ts").dataType
-      require(tsType == org.apache.spark.sql.types.TimestampType,
-        s"derived events.ts must load as TIMESTAMP, got $tsType")
-    } finally {
-      priorNanos match {
-        case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None    => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-      }
-    }
+    // events.ts (TIMESTAMP(NANOS) or timestamp[us] across fixture
+    // generations) passes through as BIGINT nanos or NTZ micros; either
+    // round-trips through Tables.events — asserted below.
+    // zipf: user_id block-merges (heavy-tailed per-user event density);
+    // event_id stays disjoint (event grain preserved)
+    val eventsBase = remap("event_id")(spark.read.parquet(s"$src/events.parquet"))
+    write("events",
+      if (zipf) zipfKey("user_id")(eventsBase)
+        // super-hot head, same rationale as orders: 1/8 of all events
+        // on base user 0 (residue 0 — one key in every copy). The
+        // stride is 2^32 so pmod(event_id, 8) is copy-invariant.
+        .withColumn("user_id",
+          when(pmod(col("event_id"), lit(8L)) === 0, lit(0L))
+            .otherwise(col("user_id")))
+      else eventsBase.withColumn("user_id", col("user_id") + col("copy") * Stride))
+    // Fail loud here rather than 16 queries deep: the derived events
+    // file must load through Tables.events with the public schema.
+    val tsType = Tables.events(spark, dest).schema("ts").dataType
+    require(tsType == org.apache.spark.sql.types.TimestampType,
+      s"derived events.ts must load as TIMESTAMP, got $tsType")
 
     // documents: remap doc_id; copy>0 permutes tokens deterministically
     // (hash-of-(token, copy) sort order; ties broken by the token) —

@@ -19,6 +19,8 @@ object Session {
     // real cluster, scaled to one box
     "spark.sql.shuffle.partitions" -> n.toString,
     "spark.sql.session.timeZone" -> "UTC",
+    // TIMESTAMP(NANOS) parquet reads as BIGINT epoch-nanos (Tables.events)
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.extensions" -> "graft.plans.GraftExtensions",
     "spark.ui.enabled" -> "false",
     // Static conf, root cause of the round-5 "q35 41.9s" bench

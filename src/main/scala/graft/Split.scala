@@ -25,10 +25,8 @@ object Split {
 
     val spark = Session.local("graft-split")
     spark.sparkContext.setLogLevel("WARN")
-    // events.ts round-trips in its source physical encoding: a nanos
-    // INT64 file passes through as BIGINT, a timestamp[us] file as NTZ
-    // micros — both load through the schema-adaptive Tables.events.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events.ts round-trips in its source encoding (nanos as BIGINT,
+    // timestamp[us] as NTZ micros); both load through Tables.events.
 
     for (name <- Tables.names) {
       spark.read.parquet(s"$src/$name.parquet")

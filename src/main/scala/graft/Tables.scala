@@ -22,7 +22,7 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame   = load(s, d, "lineitem")
   /** `events.ts` has shipped under two physical encodings across fixture
     * generations — parquet TIMESTAMP(NANOS) (which Spark's vectorized
-    * reader rejects; readable only as raw INT64 via `nanosAsLong`) and
+    * reader rejects; graft.Session reads it as INT64 via `nanosAsLong`) and
     * plain `timestamp[us]` (which Spark reads as TIMESTAMP_NTZ). Sniff
     * what the file actually contains and adapt, so a fixture re-encoding
     * changes nothing downstream: the public schema is always
@@ -35,11 +35,8 @@ object Tables {
     * bucketing (q14, q103, q106, q111) agrees with DuckDB's `epoch_us`
     * oracle, which also reads the naive micros as UTC.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    // Harmless on a real-timestamp file; required to analyze a nanos one.
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeEventsTs(s, load(s, d, "events"))
-  }
 
   /** Normalize a raw events frame (batch scan or file-source stream) to
     * the public `ts: TIMESTAMP` schema. ONE implementation for both the

@@ -22,7 +22,7 @@ object Verify {
     // instead (selfcheck/determinism glob the directory either way).
     val singleFile = !sys.env.contains("SPARK_GRAFT_NO_COALESCE")
     selected.foreach { case (name, fn) =>
-      try {
+      try Materialize.scope {
         val res = fn(spark, sfDir)
         (if (singleFile) res.coalesce(1) else res)
           .write.mode("overwrite").parquet(s"$outDir/$name")

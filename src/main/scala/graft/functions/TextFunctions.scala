@@ -108,6 +108,18 @@ object TextFunctions {
     md5(concat_ws("_", parts: _*))
   }
 
+  /** The 4 LSH band keys (4 bands × 4 rows) of a 16-value signature, one row each. */
+  def bandKeys(sig: Column): Column =
+    explode(array((0 until 4).map(b => bandKey(sig, b, 4)): _*))
+
+  /** The one near-duplicate verify rule: exact integer Jaccard of two
+    * distinct shingle-hash sets ≥ 0.7 (an empty union is no duplicate). */
+  def jaccardDup(sx: Column, sy: Column): Column = {
+    val inter = size(array_intersect(sx, sy)).cast("long")
+    val uni = size(array_distinct(concat(sx, sy))).cast("long")
+    uni > 0 && inter * 1000000L >= uni * 700000L
+  }
+
   /** 32-bit SimHash over distinct tokens: bit b is set when more token
     * hashes have bit b set than not. Pure integer arithmetic. */
   def simhash32(toks: Column): Column =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -648,12 +648,10 @@ object Analytics {
       |FROM ks JOIN s ON s.rk = ks.k
       |ORDER BY stat""") { (s, d) =>
     import s.implicits._
-    val v = Tables.lineitem(s, d)
-      .select((dec(col("l_extendedprice")) * 100).cast("long").as("c"))
-      .localCheckpoint()
-    val head = v.agg(count(lit(1)), min("c"), max("c")).head()
-    val n = head.getLong(0)
-    val (vmin, vmax) = (head.getLong(1), head.getLong(2))
+    val (v, red) = Materialize.reduceLongs(Tables.lineitem(s, d)
+        .select((dec(col("l_extendedprice")) * 100).cast("long").as("c")),
+      (None, Math.addExact), (Some("c"), math.min), (Some("c"), math.max))
+    val Seq(n, vmin, vmax) = red.map(_.get) // no rows: fails, as the NULL MIN did
     // (stat, 0-based target rank): smallest v with cnt_le(v) >= rank+1.
     // Histogram selection (selectByCumWeight): 2 scans instead of the
     // old ~24-round value-domain binary search — same exact answer.
@@ -861,7 +859,7 @@ object Analytics {
       when(k % 983 === 982, lit(null).cast("date")).otherwise(col("o_orderdate")).as("odate"),
       when(k % 991 === 990, -dec(col("o_totalprice"))).otherwise(dec(col("o_totalprice"))).as("price"),
       when(k % 977 === 976, "X").otherwise(col("o_orderstatus")).as("status"))
-      .localCheckpoint() // five rules read the same corrupted batch
+      .transform(Materialize.snapshot) // five rules read the same corrupted batch
     def report(rule: String, df: DataFrame) =
       df.agg(count(lit(1)).as("n_violations"), min("okey").as("sample_key"))
         .select(lit(rule).as("rule"), col("n_violations"), col("sample_key"))
@@ -911,7 +909,7 @@ object Analytics {
     val ut = Tables.events(s, d)
       .select(col("user_id"), col("event_type"))
       .distinct()
-      .localCheckpoint() // feeds both self-join sides + the totals
+      .transform(Materialize.snapshot) // feeds both self-join sides + the totals
     val pair = ut.as("a").join(ut.as("b"),
         col("a.user_id") === col("b.user_id") &&
           col("a.event_type") < col("b.event_type"))
@@ -1064,7 +1062,7 @@ object Analytics {
       .select(col("event_type").as("t"), to_date(col("ts")).as("day"),
         floor(col("value") * 100).cast("long").as("c"))
       .groupBy("t", "day").agg(sum("c").as("y"))
-      .localCheckpoint() // |types|·|days| rows; min-day scalar + sums both read it
+      .transform(Materialize.snapshot) // |types|·|days| rows; min-day scalar + sums both read it
     val mind = daily.agg(min("day").as("mind"))
     val a = daily.crossJoin(broadcast(mind))
       .select(col("t"), datediff(col("day"), col("mind")).cast("long").as("x"), col("y"))
@@ -1264,7 +1262,7 @@ object Analytics {
     val rfm = u.crossJoin(broadcast(mx))
       .select(col("user_id"), datediff(col("maxd"), col("last_day")).cast("long").as("r"),
         col("f"), col("m"), (col("m") / 100).cast("long").as("md"))
-      .localCheckpoint() // three histograms + the bucketing pass all read it
+      .transform(Materialize.snapshot) // three histograms + the bucketing pass all read it
     val n = rfm.agg(count(lit(1)).as("n"))
     // tercile thresholds off the value histogram: cells are value-domain
     // bounded (r: days, f: per-user counts, md: whole dollars), so the
@@ -1641,7 +1639,7 @@ object Analytics {
       .groupBy(datediff(col("o_orderdate").cast("date"),
         lit(java.sql.Date.valueOf("1992-01-01"))).cast("long").as("d"))
       .agg(sum(dec(col("o_totalprice")) * 100).cast("long").as("rev"))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     // (a repartition of the probe side before the pair join was tried
     // in round 12 and REVERTED on measurement: spreading the
     // nested-loop probe over 32 partitions inflated total CPU ~15x —
@@ -1652,7 +1650,7 @@ object Analytics {
     val slopes = a.join(b, col("da") < col("db"))
       .select(floor((col("rb") - col("ra")) * lit(1000.0) / (col("db") - col("da")))
         .cast("long").as("sl"))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     val (slope, nPairs) = medianAndCount(slopes, "sl")
     // no checkpoint: ics is a narrow projection over the checkpointed
     // day cells — cheaper to re-project per pass than to stage (round 12)
@@ -2078,7 +2076,7 @@ object Analytics {
       .select(col("source"), explode(tokens(col("text"))).as("t"))
       .select(col("source"), hex32(col("t")).as("h"))
       .groupBy("source").agg(kmv(col("h")).as("mins"))
-      .localCheckpoint() // sketch table: one row per source, read 3x below
+      .transform(Materialize.snapshot) // sketch table: one row per source, read 3x below
     val est = sk0.select(col("source"),
       size(col("mins")).cast("long").as("k"),
       element_at(col("mins"), size(col("mins"))).as("vk"))
@@ -2146,13 +2144,11 @@ object Analytics {
       |GROUP BY stat, t
       |ORDER BY stat""") { (s, d) =>
     import s.implicits._
-    val v = Tables.lineitem(s, d)
-      .select((dec(col("l_extendedprice")) * 100).cast("long").as("c"),
-        col("l_quantity").cast("long").as("w"))
-      .localCheckpoint()
-    val head = v.agg(sum("w"), min("c"), max("c")).head()
-    val wt = head.getLong(0)
-    val (vmin, vmax) = (head.getLong(1), head.getLong(2))
+    val (v, red) = Materialize.reduceLongs(Tables.lineitem(s, d)
+        .select((dec(col("l_extendedprice")) * 100).cast("long").as("c"),
+          col("l_quantity").cast("long").as("w")),
+      (Some("w"), Math.addExact), (Some("c"), math.min), (Some("c"), math.max))
+    val Seq(wt, vmin, vmax) = red.map(_.get) // no rows: fails, as the NULL MIN did
     // (stat, target cumulative weight): lower weighted quantile = the
     // smallest value whose cumulative weight reaches the target.
     // Histogram selection (selectByCumWeight, sum-of-weight cells): 2
@@ -2361,7 +2357,7 @@ object Analytics {
       .agg(sum((dec(col("o_totalprice")) * 100).cast("long")).as("rev"),
         count(lit(1)).as("n"))
       .select(col("n_name"), col("rev"), expr("rev div n").as("aov"))
-      .localCheckpoint() // ≤|nations| cells: both pair sides read it
+      .transform(Materialize.snapshot) // ≤|nations| cells: both pair sides read it
     val pairs = cells.as("a")
       .join(broadcast(cells.as("b")),
         col("a.n_name") < col("b.n_name")) // item-bounded cell pairs
@@ -2474,7 +2470,7 @@ object Analytics {
       .select(col("c_mktsegment").as("a"), col("o_orderpriority").as("b"),
         year(col("o_orderdate")).cast("long").as("c"),
         (dec(col("o_totalprice")) * 100).cast("long").as("v"))
-      .localCheckpoint() // read by all 8 coalition aggregates
+      .transform(Materialize.snapshot) // read by all 8 coalition aggregates
     def mean(keys: String*): DataFrame = {
       val g = if (keys.isEmpty) base.groupBy() else base.groupBy(keys.map(col): _*)
       g.agg(expr("1000 * sum(v) div count(1)").as(s"m_${keys.mkString("")}"))
@@ -2536,10 +2532,8 @@ object Analytics {
       |  CAST(SUM(c) AS BIGINT) AS kept_sum_cents,
       |  CAST(SUM(c) // COUNT(*) AS BIGINT) AS trimmed_mean_cents
       |FROM kept""") { (s, d) =>
-    val v = Tables.orders(s, d)
-      .select((dec(col("o_totalprice")) * 100).cast("long").as("c"))
-      .localCheckpoint() // narrow 1-col projection: every search round scans it
-    val n = v.count()
+    val (v, n) = Materialize.count(Tables.orders(s, d) // every search round scans it
+      .select((dec(col("o_totalprice")) * 100).cast("long").as("c")))(_ => true)
     val k = n / 10
     // histogram selection for the (k+1)-th and (n-k)-th smallest
     // (selectByCumWeight: 2 scans instead of ~24 binary-search rounds;
@@ -2668,7 +2662,7 @@ object Analytics {
           .when(k % 4 === 3, (c * 13L + 5L) % 118 * 1000000L + 1000000L
             + (km * km * 43L + km * 277L) % 600001L - 300000L)
           .otherwise((km * km * 37L + km * 104729L) % 120000001L).as("x"))
-      .localCheckpoint() // home + probe + report all read one snapshot
+      .transform(Materialize.snapshot) // home + probe + report all read one snapshot
     val home = p.select(col("k").as("ak"), col("x").as("ax"), col("y").as("ay"),
       floor(col("x") / cellSz).cast("long").as("cx"),
       floor(col("y") / cellSz).cast("long").as("cy"))
@@ -2685,14 +2679,14 @@ object Analytics {
     val nb = home.join(probe, Seq("cx", "cy"))
       .filter(col("ak") =!= col("bk") && dsq <= 1000000000000L)
       .select(col("ak"), col("bk"))
-      .localCheckpoint() // degree + core edges + border all read it
+      .transform(Materialize.snapshot) // degree + core edges + border all read it
     val core = nb.groupBy(col("ak").as("k")).agg(count(lit(1)).as("nn"))
       .filter(col("nn") >= 3).select("k")
     val ce = nb
       .join(core.select(col("k").as("ak")), "ak")
       .join(core.select(col("k").as("bk")), "bk")
       .select(col("ak").as("a"), col("bk").as("b"))
-      .localCheckpoint() // read every CC round
+      .transform(Materialize.snapshot) // read every CC round
     val comp = Dedup.connectedComponents(core.select(col("k").as("id")), ce)
       .select(col("id").as("k"), col("comp").as("cluster"))
     val border = nb.join(comp.select(col("k").as("bk"), col("cluster")), "bk")
@@ -3001,14 +2995,14 @@ object Analytics {
         date_trunc("month", col("o_orderdate")).cast("date").as("m"),
         substring(col("o_orderpriority"), 1, 1).cast("long").as("p"))
     val cells = base.groupBy("n_name", "m", "p").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // (QI, level) cells: spine join + global dist read it
+      .transform(Materialize.snapshot) // (QI, level) cells: spine join + global dist read it
     val grp = cells.groupBy("n_name", "m").agg(sum("c").as("ng"))
     val spine = grp.crossJoin(broadcast(
       s.range(1, 6).select(col("id").as("p")))) // 5-row level spine
     val dense = spine.join(cells, Seq("n_name", "m", "p"), "left")
       .select(col("n_name"), col("m"), col("ng"), col("p"),
         coalesce(col("c"), lit(0L)).as("c"))
-      .localCheckpoint() // groups×5 cells: global dist + cum both read it
+      .transform(Materialize.snapshot) // groups×5 cells: global dist + cum both read it
     val glob = dense.groupBy("p").agg(sum("c").as("gc"))
     val gtot = glob.agg(sum("gc").as("n"))
     val gcum = glob.select(col("p"), sum("gc").over(
@@ -3168,7 +3162,7 @@ object Analytics {
       .agg(count(lit(1)).as("n"), sum("y").as("np"), sum("sel").as("ns"),
         sum(col("sel") * col("y")).as("tp"),
         sum(col("sel") * (lit(1L) - col("y"))).as("fp"))
-      .localCheckpoint() // |nations| confusion cells: global fold + audit read it
+      .transform(Materialize.snapshot) // |nations| confusion cells: global fold + audit read it
     val t = g.agg(sum("n").as("tn"), sum("np").as("tnp"), sum("ns").as("tns"),
       sum("tp").as("ttp"), sum("fp").as("tfp"))
     g.crossJoin(broadcast(t)) // 1-row global reference
@@ -3250,7 +3244,7 @@ object Analytics {
       .agg(sum((dec(col("o_totalprice")) * 100).cast("long")).as("rev"),
         count(lit(1)).as("cnt"))
       .select(col("n_name"), col("rev"), expr("rev div cnt").as("aov"))
-      .localCheckpoint() // ≤|nations| cells feed both rank walks + the join-back
+      .transform(Materialize.snapshot) // ≤|nations| cells feed both rank walks + the join-back
     def rank2(df: DataFrame, v: String): DataFrame = {
       val wCum = Window.orderBy(v)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3321,7 +3315,7 @@ object Analytics {
     val ut = Tables.events(s, d)
       .groupBy("user_id", "event_type")
       .agg(sum((dec(col("value")) * 100).cast("long")).as("x"))
-      .localCheckpoint() // (user, type) cells feed items, totals, and the count
+      .transform(Materialize.snapshot) // (user, type) cells feed items, totals, and the count
     val nu = ut.agg(countDistinct("user_id").as("n"))
     val items = ut.groupBy("event_type")
       .agg(sum("x").as("sx"), sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -264,7 +264,7 @@ object Clean {
     val hs = Dedup.corpus(s, d)
       .select(col("doc_id"),
         array_distinct(tokenShingleHashes(col("toks"))).as("hs"))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     val ce = hs.filter(col("doc_id") < 1000000L)
       .select(col("doc_id").as("corp_id"), explode(col("hs")).as("h"))
     val be = hs.filter(col("doc_id") >= 2000000L)
@@ -312,7 +312,7 @@ object Clean {
     val hs = Dedup.corpus(s, d)
       .select(col("doc_id"),
         array_distinct(tokenShingleHashes(col("toks"))).as("hs"))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     val ce = hs.filter(col("doc_id") < 1000000L)
       .select(col("doc_id").as("corp_id"), explode(col("hs")).as("h"))
     val bh = hs.filter(col("doc_id") >= 2000000L)
@@ -433,7 +433,7 @@ object Clean {
             |) AS (stage, name, n_docs)""".stripMargin)
         .orderBy("stage")
     } else {
-      val kept = keptPlain.localCheckpoint() // 3 readers in this spelling
+      val kept = keptPlain.transform(Materialize.snapshot) // 3 readers in this spelling
       val dedup = kept.filter(col("canonical") === 1)
       val sampled = dedup.filter(bucket(col("doc_id")) < rateFor(col("lang")))
       def stage(i: Int, name: String, df: DataFrame): DataFrame =
@@ -922,10 +922,10 @@ object Clean {
   private[ops] def bm25Parts(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val t = docs(s, d).select(col("doc_id"), tokens(col("text")).as("toks"))
-      .localCheckpoint() // tokenize once: tf, dl, stats all read it
+      .transform(Materialize.snapshot) // tokenize once: tf, dl, stats all read it
     val tf = t.select(col("doc_id"), explode(col("toks")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // read by df + the scoring pass(es)
+      .transform(Materialize.snapshot) // read by df + the scoring pass(es)
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val dl = t.select(col("doc_id"), size(col("toks")).cast("long").as("n_tok"))
     val stats = t.agg(count(lit(1)).as("n_docs"),
@@ -1219,7 +1219,7 @@ object Clean {
     val td = docs(s, d)
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // state read by base split, batch split, and term set
+      .transform(Materialize.snapshot) // state read by base split, batch split, and term set
     val base = td.filter(col("doc_id") % 10 =!= 0)
     val batch = td.filter(col("doc_id") % 10 === 0)
     val affected = batch.select("term").distinct()
@@ -1298,7 +1298,7 @@ object Clean {
         explode(col("toks")).as("tok"))
       .select(col("doc_id"), col("lang"), pmod(hex32(col("tok")), lit(64L)).as("b"))
       .groupBy("doc_id", "lang", "b").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // feeds both models and the scoring join
+      .transform(Materialize.snapshot) // feeds both models and the scoring join
     val tot = hist.agg(sum(col("cnt")).as("rtot"),
       sum(when(col("lang") === "en", col("cnt")).otherwise(0L)).as("ttot"))
     val spine = hist.sparkSession.range(0, 64).select(col("id").as("b"))
@@ -1585,7 +1585,7 @@ object Clean {
           st => struct(((st - 1) / 16).cast("long").as("idx"),
             array_join(slice(col("toks"), st, lit(16)), " ").as("txt"))))
         .select(col("doc_id"), col("source"), col("chunks"))
-        .localCheckpoint() // chunking runs once: frequency pass + rebuild
+        .transform(Materialize.snapshot) // chunking runs once: frequency pass + rebuild
       val ch = t.select(col("doc_id"), col("source"),
           explode(col("chunks")).as("c"))
         .select(col("doc_id"), col("source"),
@@ -1729,7 +1729,7 @@ object Clean {
           .otherwise(floor(size(array_distinct(col("toks"))).cast("long") * 1000000L
             / size(col("toks"))))
           .cast("long").as("score"))
-      .localCheckpoint() // consumed by the budget scalar + both windows
+      .transform(Materialize.snapshot) // consumed by the budget scalar + both windows
     val budget = scored.agg(
       expr("CAST(sum(n_tok)*6 DIV 10 AS BIGINT)").as("budget"))
     // q95's two-level running sum: per-score totals first (small frame),
@@ -1807,7 +1807,7 @@ object Clean {
         pmod(col("hv"), lit(256)).as("bucket"),
         when(pmod(shiftright(col("hv"), 8), lit(2)) === 0, 1L)
           .otherwise(-1L).as("sg"))
-      .localCheckpoint() // bucket rollup + type-count reuse one pass
+      .transform(Materialize.snapshot) // bucket rollup + type-count reuse one pass
     val bk = f.groupBy("doc_id", "bucket").agg(sum("sg").as("feat"))
       .groupBy("bucket")
       .agg(count(when(col("feat") =!= 0, 1)).as("n_docs"),
@@ -1936,7 +1936,7 @@ object Clean {
     val g = Tables.documents(s, d)
       .select(col("source"),
         explode(array_distinct(tokenShingleHashes(tokens(col("text"))))).as("h"))
-      .localCheckpoint() // gram table read by the ref side and the probe side
+      .transform(Materialize.snapshot) // gram table read by the ref side and the probe side
     val ref = g.filter(isRef).select("h").distinct()
     val nov = g.filter(!isRef)
       .join(ref.withColumn("hit", lit(1)), Seq("h"), "left")
@@ -2006,7 +2006,7 @@ object Clean {
     val fb = bm25ScoredFrom(tf, df, dl, stats)
       .orderBy(floor(col("score") * 1000).cast("long").desc, col("doc_id"))
       .limit(3).select("doc_id")
-      .localCheckpoint() // 3 feedback docs
+      .transform(Materialize.snapshot) // 3 feedback docs
     val exp = tf.join(broadcast(fb), "doc_id")
       .join(broadcast(df), "term")
       .crossJoin(broadcast(stats))

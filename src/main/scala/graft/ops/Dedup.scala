@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -122,7 +122,7 @@ object Dedup {
     * cluster; a no-op when the frame is narrower. */
   private def tightCheckpoint(df: DataFrame): DataFrame = {
     val n = Q.shufflePartitions(df.sparkSession)
-    df.coalesce(n).localCheckpoint()
+    df.coalesce(n).transform(Materialize.snapshot)
   }
 
   /** ONE fused fingerprint pass (round-12 optimization, guide §1.2/§2.4:
@@ -155,8 +155,7 @@ object Dedup {
   /** Band explode over any (doc_id, sig) frame (no shuffle: a narrow
     * 4-way per-row explode of 16-byte keys). */
   private def bandRowsOf(sig: DataFrame): DataFrame =
-    sig.select(col("doc_id"), col("sig"),
-      explode(array((0 until 4).map(b => bandKey(col("sig"), b, 4)): _*)).as("bkey"))
+    sig.select(col("doc_id"), col("sig"), bandKeys(col("sig")).as("bkey"))
 
   /** Signature + band-key CTEs without a candidate rule — shared by the
     * pairwise `cand` (DBands) and q132's incremental batch-vs-index
@@ -205,15 +204,12 @@ object Dedup {
     * quality report (q108), and the split-leakage audit (q120). `sh`
     * may carry extra columns (q97's n_tok); only (doc_id, sh) is read.
     * Mirrors the DVerified SQL fragment — keep the two in sync. */
-  private def verifiedDupPairs(cand: DataFrame, sh: DataFrame): DataFrame = {
-    val inter = size(array_intersect(col("sx"), col("sy"))).cast("long")
-    val uni = size(array_distinct(concat(col("sx"), col("sy")))).cast("long")
+  private def verifiedDupPairs(cand: DataFrame, sh: DataFrame): DataFrame =
     cand
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sx")), "doc_a")
       .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sy")), "doc_b")
-      .filter(uni > 0 && inter * 1000000L >= uni * 700000L)
+      .filter(jaccardDup(col("sx"), col("sy")))
       .select("doc_a", "doc_b")
-  }
 
   /** DuckDB mirror of [[verifiedDupPairs]] (requires DCorpus + DBands). */
   private val DVerified =
@@ -322,7 +318,7 @@ object Dedup {
       .join(fp.select(col("doc_id").as("doc_b"), col("sh").as("sy")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         when(uni === 0, 0L).otherwise(floor(inter * 1000000L / uni)).as("jac_ppm"),
-        when(uni > 0 && inter * 1000000L >= uni * 700000L, 1).otherwise(0).as("is_dup"))
+        when(jaccardDup(col("sx"), col("sy")), 1).otherwise(0).as("is_dup"))
       .orderBy("doc_a", "doc_b")
   }
 
@@ -382,7 +378,7 @@ object Dedup {
     val verified = verifiedDupPairs(candidatePairsOf(fp), fp)
     val edges = verified.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(verified.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     val nodes = fp.select(col("doc_id").as("id"))
     connectedComponents(nodes, edges)
       .select(col("id").as("doc_id"), col("comp").as("component"),
@@ -399,7 +395,7 @@ object Dedup {
     * component label is the component's minimum id. Convergence is
     * detected by the label sum (labels only decrease, so an unchanged
     * sum IS the fixpoint): each round's checkpoint job also returns the
-    * per-partition sums ([[graft.Materialize.sumLong]]), so detection
+    * per-partition sums ([[Materialize.sumLong]]), so detection
     * costs no job of its own. The sum overflows loudly, as ANSI SUM
     * does. Each round's snapshot is released once the next has
     * materialized, so only the returned labels stay persisted. Hitting
@@ -411,7 +407,7 @@ object Dedup {
     // (trivially converged) fixpoint, not a crash (q252's core set can
     // be empty at tiny scale factors)
     def checkpointSum(df: DataFrame): (DataFrame, Long) = {
-      val (snap, total) = graft.Materialize.sumLong(df, "comp")
+      val (snap, total) = Materialize.sumLong(df, "comp")
       (snap, total.getOrElse(0L))
     }
     var (labels, prevSum) = checkpointSum(nodes.select(col("id"), col("id").as("comp")))
@@ -432,7 +428,7 @@ object Dedup {
         .select(col("l.id").as("id"), least(col("l.comp"), col("pcomp")).as("comp")))
       converged = nextSum == prevSum
       prevSum = nextSum
-      graft.Materialize.release(labels)
+      Materialize.release(labels)
       labels = next
       rounds += 1
     }
@@ -630,7 +626,7 @@ object Dedup {
           ((st - 1) / 32).cast("long").as("idx"),
           array_join(slice(col("toks"), st, lit(32)), " ").as("txt"))))
       .select(col("doc_id"), col("chunks"))
-      .localCheckpoint() // chunking runs once for the id pass and the rebuild
+      .transform(Materialize.snapshot) // chunking runs once for the id pass and the rebuild
     val flat = t.select(col("doc_id"), explode(col("chunks")).as("c"))
       .select(col("doc_id"), col("c").getField("idx").as("idx"),
         md5(col("c").getField("txt")).as("fp"))
@@ -681,7 +677,7 @@ object Dedup {
        |    / greatest((SELECT COUNT(*) FROM planted), 1)) AS BIGINT) AS recall_ppm""") { (s, d) =>
     val fp = fpTable(s, d)
     val cand = candidatePairsOf(fp)
-      .localCheckpoint() // counted, verified against, and recall-joined
+      .transform(Materialize.snapshot) // counted, verified against, and recall-joined
     val verified = verifiedDupPairs(cand, fp)
     val baseIds = graft.Q.stageBarrier(Tables.documents(s, d)).select(col("doc_id"))
     val planted = baseIds.filter(col("doc_id") % 5 === 0)
@@ -913,7 +909,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val tok = shingleSets(s, d)
       .select(col("doc_id"), explode(col("sh")).as("h"))
-      .localCheckpoint() // feeds df, the rank join, and both verify legs
+      .transform(Materialize.snapshot) // feeds df, the rank join, and both verify legs
     val df = tok.groupBy("h").agg(count(lit(1)).as("df"))
     val sz = tok.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val rk = tok.join(df, "h") // O(doc-shingle) on h: no dictionary broadcast assumption
@@ -1000,7 +996,7 @@ object Dedup {
     import org.apache.spark.sql.expressions.Window
     val tok = shingleSets(s, d)
       .select(col("doc_id"), explode(col("sh")).as("h"))
-      .localCheckpoint() // feeds df, the rank join, the full index side, verify
+      .transform(Materialize.snapshot) // feeds df, the rank join, the full index side, verify
     val df = tok.groupBy("h").agg(count(lit(1)).as("df"))
     val sz = tok.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val rk = tok.join(df, "h")
@@ -1265,10 +1261,10 @@ object Dedup {
     // whole-doc), so the oracle never sees the difference.
     val fp = winnowFingerprints(corpus(s, d), WinnowSeg,
         split = maxTokLen(s, d) > WinnowSeg + 7)
-      .repartition(nShuf, col("f")).localCheckpoint()
+      .repartition(nShuf, col("f")).transform(Materialize.snapshot)
     val df = fp.groupBy("f").agg(count(lit(1)).as("dfc"))
       .filter(col("dfc") <= 20).select("f")
-    val rare = fp.join(df, Seq("f"), "left_semi").localCheckpoint()
+    val rare = fp.join(df, Seq("f"), "left_semi").transform(Materialize.snapshot)
     val nfp = rare.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val pairs = rare.as("a").join(rare.as("b"),
         col("a.f") === col("b.f") && col("a.doc_id") < col("b.doc_id"))
@@ -1339,14 +1335,14 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("sx"), col("sy"))).cast("long").as("i"),
         size(array_distinct(concat(col("sx"), col("sy")))).cast("long").as("u"))
-      .localCheckpoint() // pair cells: the 5-way sweep reads them once
+      .transform(Materialize.snapshot) // pair cells: the 5-way sweep reads them once
     val ts = s.createDataFrame(Seq(
       Tuple1(500000L), Tuple1(600000L), Tuple1(700000L), Tuple1(800000L),
       Tuple1(900000L))).toDF("t")
     val hit = jac.join(broadcast(ts), // 5-row threshold spine
         col("u") > 0 && col("i") * 1000000L >= col("t") * col("u"))
       .select(col("t"), col("doc_a"), col("doc_b"))
-      .localCheckpoint() // qualifying pairs: both counting legs read them
+      .transform(Materialize.snapshot) // qualifying pairs: both counting legs read them
     val agg = hit.groupBy("t")
       .agg(count(lit(1)).as("n_pairs"), countDistinct("doc_b").as("n_dropped"))
     val aff = hit.select(col("t"), col("doc_a").as("doc"))
@@ -1484,10 +1480,10 @@ object Dedup {
     val sh = batFp.select("doc_id", "sh").unionByName(idxFp.select("doc_id", "sh"))
     val dupIdx = verifiedDupPairs(candIdx, sh)
       .groupBy(col("doc_a").as("doc_id")).agg(min("doc_b").as("idx_dup"))
-      .localCheckpoint() // read by surv anti-join AND the decision join
+      .transform(Materialize.snapshot) // read by surv anti-join AND the decision join
     val batIds = batFp.select("doc_id")
     val surv = batIds.join(dupIdx.select("doc_id"), Seq("doc_id"), "left_anti")
-      .localCheckpoint() // read by sb and the CC node set; dropping this
+      .transform(Materialize.snapshot) // read by sb and the CC node set; dropping this
       // was tried and REVERTED (round 13): both readers re-ran the
       // anti-join as a SHUFFLED join (+325 KiB, +0.4 s at sf0.1) — this
       // checkpoint earns its sequential job, unlike batB's
@@ -1498,7 +1494,7 @@ object Dedup {
     val verBat = verifiedDupPairs(candBat, batFp.select("doc_id", "sh"))
     val edges = verBat.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .unionByName(verBat.select(col("doc_b").as("a"), col("doc_a").as("b")))
-      .localCheckpoint() // read once per CC round
+      .transform(Materialize.snapshot) // read once per CC round
     val comp = connectedComponents(surv.select(col("doc_id").as("id")), edges)
     batIds
       .join(dupIdx, Seq("doc_id"), "left")
@@ -1536,14 +1532,14 @@ object Dedup {
     * algebra registry-side. */
   def mergeDay(spark: SparkSession, dir: String,
       batchDocs: DataFrame): (Int, DataFrame) = {
-    val store = graft.sources.Versioned.read(spark, dir).localCheckpoint()
-    val bat = fingerprintStore(batchDocs).localCheckpoint()
+    val store = graft.sources.Versioned.read(spark, dir).transform(Materialize.snapshot)
+    val bat = fingerprintStore(batchDocs).transform(Materialize.snapshot)
     // read for the admit filter AND returned; its checkpoint job also
     // counts the novel docs (every decision row is a batch doc)
     val decided = mergeDecisions(store, bat)
     val di = decided.schema.fieldIndex("decision")
     val isNew = org.apache.spark.unsafe.types.UTF8String.fromString("new")
-    val (dec, nNew) = graft.Materialize.count(decided)(r => r.getUTF8String(di) == isNew)
+    val (dec, nNew) = Materialize.count(decided)(r => r.getUTF8String(di) == isNew)
     val v =
       if (nNew == 0) graft.sources.Versioned.latestVersion(dir).getOrElse(0)
       else graft.sources.Versioned.commitAppend(spark, dir, bat.join(
@@ -1627,7 +1623,7 @@ object Dedup {
     val fpAll = fpTableOf(mc)
     val idxFp = fpAll.filter(col("doc_id") < 1000000L)
     val batFp = fpAll.filter(col("doc_id") >= 1000000L)
-    val dec = mergeDecisions(idxFp, batFp).localCheckpoint() // 3 readers
+    val dec = mergeDecisions(idxFp, batFp).transform(Materialize.snapshot) // 3 readers
     val adm = dec.filter(col("decision") === "new").select("doc_id")
     val before = bandRowsOf(idxFp).select("doc_id", "bkey")
     val appended = bandRowsOf(batFp).select("doc_id", "bkey").join(adm, "doc_id")
@@ -1635,7 +1631,7 @@ object Dedup {
     // spelling below reads it three times and keeps one
     val afterPlain = before.unionByName(appended)
     val after = if (fusedReport) afterPlain
-      else afterPlain.localCheckpoint() // 3 readers in the legs spelling
+      else afterPlain.transform(Materialize.snapshot) // 3 readers in the legs spelling
     // the from-scratch leg RECOMPUTES signatures from tokens for the
     // ADMITTED docs (a fresh graft_minhash pass — deliberately NOT the
     // shared fpAll checkpoint), so the checksum equality still tests the
@@ -1700,7 +1696,7 @@ object Dedup {
             |) AS (metric, value)""".stripMargin)
         .orderBy("metric")
     } else {
-      val ckA = after.agg(ckOf.as("a")).localCheckpoint() // 2 readers
+      val ckA = after.agg(ckOf.as("a")).transform(Materialize.snapshot) // 2 readers
       val ckS = scratch.agg(ckOf.as("s"))
       def cnt(name: String, df: DataFrame): DataFrame =
         df.agg(count(lit(1)).cast("long").as("value"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -201,7 +201,7 @@ object Enrich {
         when(col("nn") === col("cn"), 1L).otherwise(0L).as("a_nation"),
         when(col("ns") === col("cs"), 1L).otherwise(0L).as("a_seg"),
         when(col("nk") === col("ck"), 1L).otherwise(0L).as("is_true"))
-      .localCheckpoint() // read twice: m/u estimation + scoring
+      .transform(Materialize.snapshot) // read twice: m/u estimation + scoring
     val mu = pairs.agg(
       least(greatest(expr("sum(a_name * is_true) * 1000000 div greatest(sum(is_true), 1)"), lit(1L)), lit(999999L)).as("m1"),
       least(greatest(expr("sum(a_nation * is_true) * 1000000 div greatest(sum(is_true), 1)"), lit(1L)), lit(999999L)).as("m2"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -387,7 +387,7 @@ object Events {
         expr("unix_micros(ts) div 86400000000 div 7").as("week"))
       .groupBy("user_id")
       .agg(min(col("week")).as("cw"), collect_set(col("week")).as("ws"))
-      .localCheckpoint() // one user-level pass feeds both the matrix and sizes
+      .transform(Materialize.snapshot) // one user-level pass feeds both the matrix and sizes
     val sizes = u.groupBy("cw").agg(count(lit(1)).as("cohort_size"))
     u.select(col("cw"), explode(col("ws")).as("week"))
       .select(col("cw"), (col("week") - col("cw")).as("offset"))
@@ -437,7 +437,7 @@ object Events {
     val hc = Tables.events(s, d)
       .select(col("user_id"), expr("unix_micros(ts) div 3600000000").as("hr"))
       .groupBy("user_id", "hr").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // feeds the moments AND the flag join
+      .transform(Materialize.snapshot) // feeds the moments AND the flag join
     val m = hc.groupBy("user_id")
       .agg(count(lit(1)).as("n"), sum(col("cnt")).as("s"),
         sum(col("cnt") * col("cnt")).as("ss"))
@@ -796,7 +796,7 @@ object Events {
     val ev = Tables.events(s, d)
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
-      .localCheckpoint() // feeds span + dau + the window-contribution explode
+      .transform(Materialize.snapshot) // feeds span + dau + the window-contribution explode
     val span = ev.agg(min("day").as("lo"), max("day").as("hi"))
     val spine = span.select(explode(sequence(col("lo"), col("hi"))).as("day"))
     val dau = ev.groupBy("day").agg(count(lit(1)).as("dau"))
@@ -1189,7 +1189,7 @@ object Events {
         floor(col("sx") * 1000 / col("n")).cast("long").as("mean_cents_milli"),
         floor((col("n") * col("sxx") - col("sx") * col("sx")) /
           (col("n") * (col("n") - 1))).cast("long").as("var_cents2"))
-      .localCheckpoint() // 2 rows; t² reads both, then joins back on
+      .transform(Materialize.snapshot) // 2 rows; t² reads both, then joins back on
     val c = v.filter(col("arm") === 0)
       .select(col("n").as("n0"), col("sx").as("sx0"), col("var_cents2").as("v0"))
     val x = v.filter(col("arm") === 1)
@@ -1386,7 +1386,7 @@ object Events {
         expr("try_cast(get_json_object(props, '$.k') AS BIGINT)").as("item"))
       .filter(col("item").isNotNull)
       .distinct()
-      .localCheckpoint() // both join sides + the item counts read it
+      .transform(Materialize.snapshot) // both join sides + the item counts read it
     val ni = ui.groupBy("item").agg(count(lit(1)).as("n_i"))
     val nu = ui.agg(countDistinct("user_id").as("nu"))
     val pair = ui.as("a").join(ui.as("b"),
@@ -1471,7 +1471,7 @@ object Events {
         .otherwise(floor((col("first_conv") - col("first_view")) / 3600).cast("long"))
         .as("bucket_h"))
       .groupBy("bucket_h").agg(count(lit(1)).as("n_users"))
-      .localCheckpoint() // ≤ span-in-hours cells; total + curve read it
+      .transform(Materialize.snapshot) // ≤ span-in-hours cells; total + curve read it
     val nv = h.agg(sum("n_users").as("nv"))
     val w = Window.orderBy("bucket_h") // cells only: bounded by the time span
     h.withColumn("cum_conv",
@@ -1547,7 +1547,7 @@ object Events {
       .select(col("h"),
         (col("c") * 1000 - floor(col("s25").cast("double") * 1000d / 25).cast("long"))
           .as("d"))
-      .localCheckpoint() // cell table; seasonal + residual both read it
+      .transform(Materialize.snapshot) // cell table; seasonal + residual both read it
     val se = dt.groupBy((col("h") % 24).as("hod"))
       .agg(count(lit(1)).as("n_hours"),
         floor(sum("d").cast("double") / count(lit(1))).cast("long")
@@ -1617,7 +1617,7 @@ object Events {
     val dense = spine.join(b, Seq("h"), "left")
       .select(col("h"), coalesce(col("x"), lit(0L)).as("x"),
         coalesce(col("y"), lit(0L)).as("y"))
-      .localCheckpoint() // cell table read by both legs of the lag join
+      .transform(Materialize.snapshot) // cell table read by both legs of the lag join
     val shifted = dense
       .select(explode(sequence(lit(-6L), lit(6L))).as("lag"), col("h"), col("x"))
       .select(col("lag"), (col("h") + col("lag")).as("h2"), col("x"))
@@ -2224,7 +2224,7 @@ object Events {
       .join(cells.filter(col("arm") === 0)
         .select(col("b"), col("mean_milli").as("m0")), "b")
       .select(col("b"), (col("mean_milli") - col("m0")).as("gap"))
-      .localCheckpoint() // 17 cells: read by obs and the fold
+      .transform(Materialize.snapshot) // 17 cells: read by obs and the fold
     val obs = gaps.filter(col("b") === 0).select(col("gap").as("obs_gap"))
     gaps.crossJoin(broadcast(obs)) // 1-row observed gap
       .groupBy("obs_gap")
@@ -2327,7 +2327,7 @@ object Events {
         Seq("event_type", "b"))
       .select(col("event_type"), col("b"),
         (col("mean_milli") - col("m0")).as("gap"))
-      .localCheckpoint() // |types|·41 cells: read by obs and the fold
+      .transform(Materialize.snapshot) // |types|·41 cells: read by obs and the fold
     val obs = gaps.filter(col("b") === 0)
       .select(col("event_type"), col("gap").as("ogap"))
     val scored = gaps.join(obs, "event_type")
@@ -2412,7 +2412,7 @@ object Events {
     val e = Tables.events(s, d).select(col("event_type"),
       (dec(col("value")) * 100).cast("long").as("v"),
       pmod(hex32(concat(lit("conf_"), col("event_id").cast("string"))), lit(10L)).as("bkt"))
-      .localCheckpoint() // train/cal/test legs read one snapshot
+      .transform(Materialize.snapshot) // train/cal/test legs read one snapshot
     val pred = e.filter(col("bkt") < 6).groupBy("event_type")
       .agg(count(lit(1)).as("n_train"),
         expr("CAST(1000 * sum(v) div count(1) AS BIGINT)").as("pred_milli"))
@@ -2581,7 +2581,7 @@ object Events {
     val e = Tables.events(s, d).select(col("event_type"),
       (dec(col("value")) * 100).cast("long").as("v"),
       pmod(hex32(concat(lit("pin_"), col("event_id").cast("string"))), lit(10L)).as("bkt"))
-      .localCheckpoint() // train + test legs read one snapshot
+      .transform(Materialize.snapshot) // train + test legs read one snapshot
     val tr = e.filter(col("bkt") < 8)
       .select(col("event_type"), col("v"),
         row_number().over(Window.partitionBy("event_type")
@@ -2689,7 +2689,7 @@ object Events {
       .groupBy("user_id", "event_type")
       .agg(sum((dec(col("value")) * 100).cast("long")).as("su"),
         count(lit(1)).as("n"))
-      .localCheckpoint() // both comparison legs read it
+      .transform(Materialize.snapshot) // both comparison legs read it
     val comp = ut
       .join(ut.select(col("user_id"), col("event_type").as("lt"),
           col("su").as("bsu"), col("n").as("bn")),
@@ -2698,9 +2698,9 @@ object Events {
         col("su") * col("bn") > col("bsu") * col("n"))
     val w = comp.groupBy(col("event_type").as("wt"), col("lt"))
       .agg(count(lit(1)).as("wins"))
-      .localCheckpoint() // ≤|types|² cells: pairs + win/loss totals read it
+      .transform(Materialize.snapshot) // ≤|types|² cells: pairs + win/loss totals read it
     val types = ut.select(col("event_type")).distinct()
-      .localCheckpoint() // |types| rows
+      .transform(Materialize.snapshot) // |types| rows
     val pairs = types.select(col("event_type").as("i"))
       .join(types.select(col("event_type").as("j")), col("i") =!= col("j"))
       .join(w.select(col("wt"), col("lt"), col("wins").as("wij")),
@@ -2710,7 +2710,7 @@ object Events {
       .select(col("i"), col("j"),
         coalesce(col("wij"), lit(0L)).as("w_ij"),
         (coalesce(col("wij"), lit(0L)) + coalesce(col("wji"), lit(0L))).as("n_ij"))
-      .localCheckpoint() // |types|² cells: every MM round reads it
+      .transform(Materialize.snapshot) // |types|² cells: every MM round reads it
     var strength = types.select(col("event_type").as("i"), lit(1000000L).as("s"))
     (1 to 3).foreach { _ =>
       val raw = pairs
@@ -2725,7 +2725,7 @@ object Events {
       val norm = raw.agg(count(lit(1)).as("cnt"), sum("s").as("ssum"))
       strength = raw.crossJoin(broadcast(norm)) // 1-row normalizer
         .select(col("i"), greatest(expr("s * (cnt * 1000000) div ssum"), lit(1L)).as("s"))
-        .localCheckpoint() // |types| strength cells feed the next round
+        .transform(Materialize.snapshot) // |types| strength cells feed the next round
     }
     val tot = w.groupBy(col("wt").as("i")).agg(sum("wins").as("wins"))
     val losses = w.groupBy(col("lt").as("i")).agg(sum("wins").as("losses"))
@@ -2805,7 +2805,7 @@ object Events {
       // Spark dayofweek: 1=Sunday..7=Saturday; DuckDB: 0=Sunday..6=Saturday
       when(dayofweek(col("ts")).isin(1, 7), 1L).otherwise(0L).as("we"))
     val cells = e.groupBy("event_type", "v", "we").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // value-domain cells: totals + CDF walk read it
+      .transform(Materialize.snapshot) // value-domain cells: totals + CDF walk read it
     val tot = cells.groupBy("event_type")
       .agg(sum(when(col("we") === 0, col("c")).otherwise(0L)).as("n_wd"),
         sum(when(col("we") === 1, col("c")).otherwise(0L)).as("n_we"))
@@ -2915,7 +2915,7 @@ object Events {
       .agg(min("arm").as("arm"),
         sum(when(col("us") < col("mid"), col("r")).otherwise(0L)).as("x"),
         sum(when(col("us") >= col("mid"), col("r")).otherwise(0L)).as("y"))
-      .localCheckpoint() // user cells: θ fold + adjusted scan + ratio read it
+      .transform(Materialize.snapshot) // user cells: θ fold + adjusted scan + ratio read it
     val th = u.agg(count(lit(1)).as("n"), sum("x").as("sx"),
       expr("""CAST(count(1) AS DECIMAL(38,0)) * sum(CAST(x AS DECIMAL(38,0)) * y)
         - CAST(sum(x) AS DECIMAL(38,0)) * sum(y)""").as("num"),
@@ -2933,7 +2933,7 @@ object Events {
         (lit(1000L) * col("y")
           - expr("theta_micro * (1000 * x - meanx_milli) div 1000000")).as("yadj_milli"),
         col("theta_micro"))
-      .localCheckpoint() // user cells: arm rollup + variance ratio read it
+      .transform(Materialize.snapshot) // user cells: arm rollup + variance ratio read it
     val ratio = adj.agg(expr(
       """CAST((count(1) * sum(CAST(yadj_milli AS DECIMAL(38,0)) * yadj_milli)
         - CAST(sum(yadj_milli) AS DECIMAL(38,0)) * sum(yadj_milli)) * 1000000
@@ -3040,7 +3040,7 @@ object Events {
       .crossJoin(broadcast(mx)) // 1-row observation end
       .select((col("user_id") % 2).as("arm"), col("t"),
         when(col("lastd") < col("mxd"), 1L).otherwise(0L).as("ev"))
-      .localCheckpoint() // streak cells feed both the risk table and the totals
+      .transform(Materialize.snapshot) // streak cells feed both the risk table and the totals
     val cells = streaks.groupBy("t")
       .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("c0"),
         sum(when(col("arm") === 1, 1L).otherwise(0L)).as("c1"),
@@ -3212,7 +3212,7 @@ object Events {
       (dec(col("value")) * 100).cast("long").as("v"),
       when(dayofweek(col("ts")).isin(1, 7), 1L).otherwise(0L).as("we"))
     val cells = e.groupBy("event_type", "v", "we").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // value-domain cells: totals + CDF walk read it
+      .transform(Materialize.snapshot) // value-domain cells: totals + CDF walk read it
     val tot = cells.groupBy("event_type")
       .agg(sum(when(col("we") === 0, col("c")).otherwise(0L)).as("n_wd"),
         sum(when(col("we") === 1, col("c")).otherwise(0L)).as("n_we"))
@@ -3372,7 +3372,7 @@ object Events {
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"))
       .agg(sum((dec(col("value")) * 100).cast("long")).as("x"))
-      .localCheckpoint() // daily cells feed the pair join (both sides), ties, counts
+      .transform(Materialize.snapshot) // daily cells feed the pair join (both sides), ties, counts
     val a = daily.select(col("event_type"), col("day").as("da"), col("x").as("xa"))
     val b = daily.select(col("event_type"), col("day").as("db"), col("x").as("xb"))
     val sStat = a.join(b, Seq("event_type")) // time-bounded cells² (q197's shape)
@@ -3559,7 +3559,7 @@ object Events {
     val e = Tables.events(s, d).select(col("event_type"),
       (dec(col("value")) * 100).cast("long").as("v"))
     val cells = e.groupBy("v", "event_type").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // (value, type) cells feed the rank walk and group sums
+      .transform(Materialize.snapshot) // (value, type) cells feed the rank walk and group sums
     val vcells = cells.groupBy("v").agg(sum("c").as("cv"))
     val wCum = Window.orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3571,7 +3571,7 @@ object Events {
       .groupBy("event_type")
       .agg(sum("c").as("n_g"),
         sum(expr("CAST(c AS DECIMAL(38,0)) * rank2")).as("r2_g"))
-      .localCheckpoint() // |types| cells feed both the fold and the report
+      .transform(Materialize.snapshot) // |types| cells feed both the fold and the report
     val tot = grp.agg(sum("n_g").as("n"),
       // keep the summed quotients DECIMAL: a LONG sum would overflow in
       // the 12000*srq lift at sf1 magnitudes (measured on the x16 tree)
@@ -3656,7 +3656,7 @@ object Events {
       when(hour(col("ts")) >= 12, 1L).otherwise(0L).as("t"),
       (dec(col("value")) * 100).cast("long").as("r"))
     val cells = e.groupBy("x", "t").agg(count(lit(1)).as("n"), sum("r").as("sr"))
-      .localCheckpoint() // (stratum, arm) cells feed both folds
+      .transform(Materialize.snapshot) // (stratum, arm) cells feed both folds
     val strata = cells.groupBy("x")
       .agg(sum(when(col("t") === 1, col("n")).otherwise(0L)).as("n1"),
         sum(when(col("t") === 0, col("n")).otherwise(0L)).as("n0"),
@@ -3968,7 +3968,7 @@ object Events {
     val e = Tables.events(s, d)
       .select(col("event_type"), (dayofweek(col("ts")) - 1).cast("long").as("wd"))
     val cells = e.groupBy("event_type", "wd").agg(count(lit(1)).as("o"))
-      .localCheckpoint() // contingency cells feed marginals + the fold
+      .transform(Materialize.snapshot) // contingency cells feed marginals + the fold
     val rws = cells.groupBy("event_type").agg(sum("o").as("r"))
     val cls = cells.groupBy("wd").agg(sum("o").as("c"))
     val n = cells.agg(sum("o").as("n"), countDistinct("event_type").as("nr"),
@@ -4116,7 +4116,7 @@ object Events {
     val centered = daily.join(broadcast(tot), "event_type") // |types|-row totals
       .select(col("event_type"), col("day"),
         expr("CAST(n AS DECIMAL(38,0)) * x - sx").as("xc"))
-      .localCheckpoint() // centered cells feed the lag pass and the denominator
+      .transform(Materialize.snapshot) // centered cells feed the lag pass and the denominator
     val w = Window.partitionBy("event_type").orderBy("day")
     val lagged = (1 to 7).foldLeft(centered) { (df, k) =>
       df.withColumn(s"l$k", lag("xc", k).over(w))
@@ -4278,12 +4278,12 @@ object Events {
     val daily = Tables.events(s, d)
       .groupBy(expr("unix_micros(ts) div 86400000000").as("day"), col("event_type"))
       .agg(sum((dec(col("value")) * 100).cast("long")).as("x"))
-      .localCheckpoint() // (day, type) cells feed ranks, blocks, and ties
+      .transform(Materialize.snapshot) // (day, type) cells feed ranks, blocks, and ties
     val k = daily.agg(countDistinct("event_type").as("k"))
     val fullDays = daily.crossJoin(broadcast(k)) // 1-row k
       .groupBy("day", "k").agg(count(lit(1)).as("c"))
       .filter(col("c") === col("k")).select("day")
-      .localCheckpoint() // complete blocks feed the rank join and ties
+      .transform(Materialize.snapshot) // complete blocks feed the rank join and ties
     val inBlocks = daily.join(fullDays, "day")
     val ranked = inBlocks.as("d")
       .join(inBlocks.select(col("day").as("day2"), col("x").as("x2")),
@@ -4291,7 +4291,7 @@ object Events {
       .groupBy(col("day"), col("event_type"), col("x"))
       .agg((lit(2) * sum(when(col("x2") < col("x"), 1L).otherwise(0L))
         + sum(when(col("x2") === col("x"), 1L).otherwise(0L)) + 1).as("r2"))
-    val ranked2 = ranked.localCheckpoint() // rank cells feed sums + squares
+    val ranked2 = ranked.transform(Materialize.snapshot) // rank cells feed sums + squares
     val rsums = ranked2.groupBy("event_type").agg(sum("r2").as("r2sum"))
     val nb = fullDays.agg(count(lit(1)).as("n"))
     val sq = ranked2.agg(sum(expr("CAST(r2 AS DECIMAL(38,0)) * r2")).as("sum_r2sq"))
@@ -4450,7 +4450,7 @@ object Events {
         // quotient (per-user variance in cents²) fits.
         expr("""(cast(n as decimal(38,0))*sxx - cast(sx as decimal(38,0))*sx)
           div (n*(n-1))""").as("var_cents2"))
-      .localCheckpoint() // 2 cells feed both scalar legs
+      .transform(Materialize.snapshot) // 2 cells feed both scalar legs
     val c = v.filter(col("arm") === 0)
       .select(col("n").as("n0"), col("sx").as("sx0"), col("var_cents2").as("v0"))
     val x = v.filter(col("arm") === 1)
@@ -4536,14 +4536,14 @@ object Events {
       .agg(sum(floor(col("value") * 100).cast("long")).as("cents"))
     val ux = u.join(p, Seq("user_id"), "left")
       .select(col("user_id"), coalesce(col("cents"), lit(0L)).as("x"))
-      .localCheckpoint() // user cells feed the 1-row total AND the cohorts
+      .transform(Materialize.snapshot) // user cells feed the 1-row total AND the cohorts
     val tot = ux.agg(count(lit(1)).as("cnt"), sum("x").as("sm"))
     val g = ux.crossJoin(broadcast(tot))
       .select(pmod(col("user_id"), lit(4)).as("dose"),
         when(col("x") * col("cnt") > col("sm"), 1L).otherwise(0L).as("y"))
       .groupBy("dose")
       .agg(count(lit(1)).as("n"), sum("y").as("x"))
-      .localCheckpoint() // 4 cells feed the scalar and the report
+      .transform(Materialize.snapshot) // 4 cells feed the scalar and the report
     val t = g.agg(sum("n").as("nn"), sum("x").as("xx"),
         sum(col("dose") * col("n")).as("swn"),
         sum(col("dose") * col("dose") * col("n")).as("sw2n"),
@@ -4650,7 +4650,7 @@ object Events {
       .groupBy("user_id", "session_idx", "event_type")
       .agg(min("sec").as("first_sec"), max("sec").as("last_sec"))
       .repartition(nShuf, col("user_id"), col("session_idx"))
-      .localCheckpoint() // cells feed the self-join (exchange-free on
+      .transform(Materialize.snapshot) // cells feed the self-join (exchange-free on
                          // this pinned partitioning), totals, and wtype
     val tot = cells.select("user_id", "session_idx").distinct()
       .agg(count(lit(1)).as("n"))

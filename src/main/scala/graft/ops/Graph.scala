@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,7 +29,7 @@ object Graph {
     * `monotonically_increasing_id()` evaluated above the range exchange
     * is `partitionId << 33 | rowOffsetInPartition`, with the offset
     * following the sorted row order. The sorted frame is checkpointed
-    * through [[graft.Materialize.fold]], whose one job also returns each
+    * through [[Materialize.fold]], whose one job also returns each
     * partition's (partition id, row count); the driver turns those into
     * base offsets, and the id is a projection over the snapshot with the
     * bases as a literal array — no second pass over the rows, no join.
@@ -51,7 +51,7 @@ object Graph {
       .withColumn("_mid", monotonically_increasing_id())
     val mi = sorted.schema.fieldIndex("_mid")
     // (partition id, rows) per non-empty partition
-    val (snap, sizes) = graft.Materialize.fold(sorted) { it =>
+    val (snap, sizes) = Materialize.fold(sorted) { it =>
       if (!it.hasNext) None
       else { val pid = it.next().getLong(mi) >>> 33; Some((pid, 1L + it.size)) }
     }
@@ -232,7 +232,7 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     val degv = ue.select(col("a").as("v")).unionAll(ue.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("dg"))
     val rk = degv.select(col("v"), (col("dg") * 1000000000L + col("v")).as("r"))
@@ -243,7 +243,7 @@ object Graph {
         when(col("ra") < col("rb"), col("a")).otherwise(col("b")).as("src"),
         when(col("ra") < col("rb"), col("b")).otherwise(col("a")).as("dst"),
         greatest(col("ra"), col("rb")).as("dst_r"))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     val w = o.as("x").join(o.as("y"),
         col("x.src") === col("y.src") && col("x.dst_r") < col("y.dst_r"))
       .select(col("x.dst").as("v1"), col("y.dst").as("v2"), col("x.src").as("u"))
@@ -338,7 +338,7 @@ object Graph {
       .distinct()
     val und = ue.select(col("a").as("u"), col("b").as("v"))
       .unionAll(ue.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint() // edge-cardinality; read once per round
+      .transform(Materialize.snapshot) // edge-cardinality; read once per round
     labelPropagate(docs.select(col("doc_id").as("id"), col("doc_id").as("lab")),
         und, rounds = 3)
       .groupBy(col("lab").as("community"))
@@ -366,7 +366,7 @@ object Graph {
         .select(col("id"), col("lab").as("nlab"))
       lab = lab.join(best, Seq("id"), "left")
         .select(col("id"), coalesce(col("nlab"), col("lab")).as("lab"))
-        .localCheckpoint() // cut the unrolled lineage between rounds
+        .transform(Materialize.snapshot) // cut the unrolled lineage between rounds
     }
     lab
   }
@@ -517,7 +517,7 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      .localCheckpoint() // edge table read by the degree agg and both joins
+      .transform(Materialize.snapshot) // edge table read by the degree agg and both joins
     val degv = ue.select(col("a").as("v")).unionByName(ue.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("dg"))
     val withDeg = ue
@@ -634,11 +634,11 @@ object Graph {
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
     // edge table read by every peel round; the result no longer needs it
-    val und = graft.Materialize.snapshot(ue.select(col("a").as("u"), col("b").as("v"))
+    val und = Materialize.snapshot(ue.select(col("a").as("u"), col("b").as("v"))
       .unionAll(ue.select(col("b").as("u"), col("a").as("v"))))
     val core =
       try kcoreSurvivors(hosts.select(col("hid").as("v")), und, k = 3, rounds = 4)
-      finally graft.Materialize.release(und)
+      finally Materialize.release(und)
     core.join(hosts.select(col("hid").as("v"), col("source")), "v")
       .select(col("source").as("host"), col("core_degree"))
       .orderBy("host")
@@ -674,16 +674,16 @@ object Graph {
       // guard. The set is host-cardinality; the snapshot is the
       // per-iteration staging any iterative graph algorithm needs, and
       // round r-1's is released once round r's has materialized.
-      val next = graft.Materialize.snapshot(
+      val next = Materialize.snapshot(
         aliveDeg(alive).filter(col("dg") >= k).select(col("u").as("v")))
-      if (r > 1) graft.Materialize.release(alive)
+      if (r > 1) Materialize.release(alive)
       alive = next
     }
     // the guard's count comes out of fin's own checkpoint job
     val finDeg = aliveDeg(alive).select(col("u").as("v"), col("dg").as("core_degree"))
     val di = finDeg.schema.fieldIndex("core_degree")
-    val (fin, stray) = graft.Materialize.count(finDeg)(_.getLong(di) < k)
-    if (rounds > 0) graft.Materialize.release(alive)
+    val (fin, stray) = Materialize.count(finDeg)(_.getLong(di) < k)
+    if (rounds > 0) Materialize.release(alive)
     if (stray != 0) throw new IllegalStateException(
       s"k-core peel not at fixpoint after $rounds rounds: $stray survivors " +
         s"still below degree $k — raise the round budget for this graph")
@@ -744,7 +744,7 @@ object Graph {
        |ORDER BY auth_ppm DESC, host""".stripMargin) { (s, d) =>
     val (hosts, links) = hostLinkGraph(s, d)
     val edges = links.filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint() // read by all four half-rounds
+      .transform(Materialize.snapshot) // read by all four half-rounds
     hitsScores(hosts.select("hid"), edges, rounds = 2)
       .join(hosts.select(col("hid"), col("source")), "hid")
       .select(col("source").as("host"), col("auth_ppm"), col("hub_ppm"))
@@ -773,7 +773,7 @@ object Graph {
       val raw = edges
         .join(broadcast(score.withColumnRenamed("hid", from)), from)
         .groupBy(col(to).as("hid")).agg(sum("x").as("raw"))
-      val (snap, mx) = graft.Materialize.maxLong(raw, "raw")
+      val (snap, mx) = Materialize.maxLong(raw, "raw")
       snap.select(col("hid"),
         mx.fold(lit(null).cast("long"))(m => expr(s"raw * 1000000 div $m")).as("x"))
     }
@@ -884,13 +884,13 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      .localCheckpoint() // read by und, m, and the ein label joins
+      .transform(Materialize.snapshot) // read by und, m, and the ein label joins
     val und = ue.select(col("a").as("u"), col("b").as("v"))
       .unionAll(ue.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint() // read by every LPA round and the degree agg
+      .transform(Materialize.snapshot) // read by every LPA round and the degree agg
     val lab = labelPropagate(
         docs.select(col("doc_id").as("id"), col("doc_id").as("lab")), und, rounds = 3)
-      .localCheckpoint() // node-cardinality; read by ein (twice) and dsum
+      .transform(Materialize.snapshot) // node-cardinality; read by ein (twice) and dsum
     val m = ue.agg(count(lit(1)).as("m"))
     val deg = und.groupBy(col("u").as("v")).agg(count(lit(1)).as("dg"))
     val ein = ue
@@ -993,10 +993,10 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      .localCheckpoint() // feeds degrees + orientation
+      .transform(Materialize.snapshot) // feeds degrees + orientation
     val degv = ue.select(col("a").as("v")).unionAll(ue.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("dg"))
-      .localCheckpoint() // node cells: orientation rank + final coefficient
+      .transform(Materialize.snapshot) // node cells: orientation rank + final coefficient
     val rk = degv.select(col("v"), (col("dg") * 1000000000L + col("v")).as("r"))
     val o = ue
       .join(rk.select(col("v").as("a"), col("r").as("ra")), "a")
@@ -1005,7 +1005,7 @@ object Graph {
         when(col("ra") < col("rb"), col("a")).otherwise(col("b")).as("src"),
         when(col("ra") < col("rb"), col("b")).otherwise(col("a")).as("dst"),
         greatest(col("ra"), col("rb")).as("dst_r"))
-      .localCheckpoint() // both wedge legs + the closing-edge probe
+      .transform(Materialize.snapshot) // both wedge legs + the closing-edge probe
     val w = o.as("x").join(o.as("y"),
         col("x.src") === col("y.src") && col("x.dst_r") < col("y.dst_r"))
       .select(col("x.dst").as("v1"), col("y.dst").as("v2"), col("x.src").as("u"))
@@ -1093,7 +1093,7 @@ object Graph {
       .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
         conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
     val edges = links.groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      .localCheckpoint() // host-graph cells: every round reads it
+      .transform(Materialize.snapshot) // host-graph cells: every round reads it
     val deg = hosts.select(col("hid"), (col("n_docs") * 3).as("outdeg"))
     var r = hosts.select(col("hid"),
       when(col("hid") === 0, lit(1000000L) * nh).otherwise(0L).as("r"))
@@ -1155,7 +1155,7 @@ object Graph {
   def linkPredictionFromEdges(ue: DataFrame, adjCap: Int): DataFrame = {
     val nb = ue.select(col("a").as("z"), col("b").as("v"))
       .unionAll(ue.select(col("b").as("z"), col("a").as("v")))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     val degv = nb.groupBy(col("z").as("v")).agg(count(lit(1)).as("dg"))
     // Candidate cap: z emits pairs only among its adjCap lowest-id
     // neighbors — deterministic, and a no-op while deg(z) <= cap.
@@ -1245,7 +1245,7 @@ object Graph {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     linkPredictionFromEdges(ue, Q284AdjCap)
   }
 
@@ -1307,7 +1307,7 @@ object Graph {
     val xv = docs.crossJoin(broadcast(nd))
       .select(col("doc_id"),
         expr("CAST(n AS DECIMAL(38,0)) * n_chars - sx").as("xc"))
-      .localCheckpoint() // centered attribute: both edge legs + the denominator read it
+      .transform(Materialize.snapshot) // centered attribute: both edge legs + the denominator read it
     val num = ue
       .join(xv.select(col("doc_id").as("a"), col("xc").as("xca")), "a")
       .join(xv.select(col("doc_id").as("b"), col("xc").as("xcb")), "b")

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import graft.functions.RefFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -534,7 +534,7 @@ object Ocds {
     // The sort key is the same string the oracle orders by
     // (ocid = 'ocds-' || orderkey, unique), computed from the pre-parse
     // key column. Measured at sf0.1: shuffle w 360->208 MB, r 514->268 MB.
-    val sorted = releaseJson(s, d).localCheckpoint()
+    val sorted = releaseJson(s, d).transform(Materialize.snapshot)
       .orderBy(concat(lit("ocds-"), col("o_orderkey").cast("string")))
     val parsed = sorted
       .select(from_json(col("release_json"), packageSchema).as("p"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import graft.functions.RefFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -609,15 +609,15 @@ object Relational {
     val cells = base.rollup(col("r_name"), col("n_name"))
       .agg(sum("cents").as("rev"), grouping(col("r_name")).as("gr"),
         grouping(col("n_name")).as("gn"))
-      .localCheckpoint() // ≤ 1+|regions|+|nations| rows: all joins below are on cells
+      .transform(Materialize.snapshot) // ≤ 1+|regions|+|nations| rows: all joins below are on cells
     // checkpoint the tiny parent frames too: they derive from `cells`,
     // and severed lineage is what keeps the parent join from tripping
     // the ambiguous-self-join check (1 + |regions| rows)
     val tot = cells.filter(col("gr") === 1).select(col("rev").as("trev"))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     val reg = cells.filter(col("gr") === 0 && col("gn") === 1)
       .select(col("r_name").as("p_rname"), col("rev").as("prev"))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     cells
       .crossJoin(broadcast(tot)) // 1-row grand total
       .join(broadcast(reg), col("p_rname") === col("r_name") && col("gn") === 0, "left")

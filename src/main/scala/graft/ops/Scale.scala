@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -146,7 +146,7 @@ object Scale {
     * partitions, then reconstruct the within-language rank from tiny
     * per-(partition, language) stats — count and first-row offset, at
     * most partitions x languages rows. The sorted frame is checkpointed
-    * through graft.Materialize.fold, whose one job also returns those
+    * through Materialize.fold, whose one job also returns those
     * stats; the driver cumulates them per language and the rank is a
     * broadcast join of that small table onto the snapshot. Both the
     * stats and the ranks come from the one snapshot, so no plan re-runs
@@ -185,7 +185,7 @@ object Scale {
     val Seq(li, pi, oi) = Seq("lang", "_pid", "_off").map(sortedDf.schema.fieldIndex)
     // per partition, one (partition id, lang, rows, first offset) per
     // language: a language's rows are contiguous in a sorted partition
-    val (sorted, stats) = graft.Materialize.fold(sortedDf) { it =>
+    val (sorted, stats) = Materialize.fold(sortedDf) { it =>
       val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
       it.foreach { r =>
         val lang = if (r.isNullAt(li)) null else r.getUTF8String(li).toString
@@ -511,7 +511,7 @@ object Scale {
     def audit(df: DataFrame, key: String, label: String): DataFrame = {
       val counts = df.groupBy(col(key).as("k"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint() // consumed by the scalar agg AND the top-10
+        .transform(Materialize.snapshot) // consumed by the scalar agg AND the top-10
       val top10 = counts.orderBy(col("c").desc, col("k")).limit(10)
         .agg(sum("c").as("top10_rows"))
       counts.agg(count(lit(1)).as("n_keys"), sum("c").as("n_rows"),
@@ -994,7 +994,7 @@ object Scale {
     val lvl2 = lvl1.groupBy("shard")
       .agg(md5(concat_ws("", array_sort(collect_list(col("d1"))))).as("merkle_root"),
         sum("n").as("n_rows"), count(lit(1)).as("n_buckets"))
-      .localCheckpoint() // 8 rows; read by the per-shard output AND the root fold
+      .transform(Materialize.snapshot) // 8 rows; read by the per-shard output AND the root fold
     val global = lvl2
       .select(struct(col("shard"), col("merkle_root")).as("sr"),
         col("n_rows"), col("n_buckets"))
@@ -1074,7 +1074,7 @@ object Scale {
         when(col("us") >= col("test_start_us"), "test")
           .when(col("us") >= col("test_start_us") - DayUs, "embargo")
           .otherwise("train").as("split"))
-      .localCheckpoint() // read by the stats fold and both overlap sides
+      .transform(Materialize.snapshot) // read by the stats fold and both overlap sides
     val stats = tagged.agg(
       sum(when(col("split") === "train", 1L).otherwise(0L)).as("train_n"),
       sum(when(col("split") === "embargo", 1L).otherwise(0L)).as("embargo_n"),
@@ -1083,7 +1083,7 @@ object Scale {
       min(when(col("split") === "test", col("us"))).as("test_min_us"))
     val trainU = tagged.filter(col("split") === "train").select("user_id").distinct()
     val testU = tagged.filter(col("split") === "test").select("user_id").distinct()
-      .localCheckpoint() // read by the overlap join and the denominator
+      .transform(Materialize.snapshot) // read by the overlap join and the denominator
     val ov = trainU.join(testU, "user_id")
       .agg(count(lit(1)).as("shared_users"))
       .crossJoin(broadcast(testU.agg(count(lit(1)).as("test_users"))))
@@ -1125,7 +1125,7 @@ object Scale {
     val dim = Tables.customer(s, d)
       .filter(col("c_mktsegment") === "AUTOMOBILE" && col("c_acctbal") > 9000)
       .select(col("c_custkey"), col("c_name"))
-      .localCheckpoint() // read by the bloom build AND the exact join
+      .transform(Materialize.snapshot) // read by the bloom build AND the exact join
     // bloom on the dim keys: a few-KB bitset, fpp only adds a sliver of
     // extra rows that the exact join below removes; probed through the
     // native plans.BloomProbe expression (WholeStageCodegen, no UDF —

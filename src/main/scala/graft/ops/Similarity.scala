@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -186,7 +186,7 @@ object Similarity {
     val vecs = withNorm(graft.Q.stageBarrier(Tables.embeddings(s, d))
       .select(col("vec_id"), asDouble(col("embedding")).as("v")), "v")
       .withColumn("bucket", lshBucket(col("v")))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     val vbands = vecs.select(col("vec_id"), col("v"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("b"), band(col("bucket"), b).as("bv"))): _*)).as("bb"))
@@ -252,7 +252,7 @@ object Similarity {
     val vecs = aug
       .withColumn("bucket", lshBucket(col("v")))
       .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     val vbands = vecs.select(col("vec_id"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("b"), band(col("bucket"), b).as("bv"))): _*)).as("bb"))
@@ -375,7 +375,7 @@ object Similarity {
     // (assignTo): one narrow pass, no k×|corpus| expansion, no shuffle.
     // The probe side (5 query vectors × k cells, top-2) is tiny, so the
     // windowed spelling is fine THERE.
-    val centsCk = cents.localCheckpoint() // consumed by codebook + probe scoring
+    val centsCk = cents.transform(Materialize.snapshot) // consumed by codebook + probe scoring
     val assign = assignTo(vecs, centsCk.select(col("label").as("cluster"), col("c")))
       .select(col("vec_id"), col("v"), col("cluster").as("cell"))
     val wAssign = Window.partitionBy("vec_id").orderBy(col("s").desc, col("label"))
@@ -561,7 +561,7 @@ object Similarity {
        |FROM c2 ORDER BY cluster""") { (s, d) =>
     val vecs = graft.Q.stageBarrier(Tables.embeddings(s, d))
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .localCheckpoint() // read once per iteration, not re-scanned per reference
+      .transform(Materialize.snapshot) // read once per iteration, not re-scanned per reference
     val cents0 = Tables.embeddings(s, d)
       .select(col("label").as("cluster"), col("vec_id"),
         asDouble(col("embedding")).as("v"))
@@ -615,7 +615,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("qlabel"), col("vec_id"), col("label"),
         cosPpmPre(dot(col("qv"), col("v")), col("qv_nrm"), col("v_nrm")).as("cos_ppm"))
-      .localCheckpoint() // consumed by both the pos and neg windows
+      .transform(Materialize.snapshot) // consumed by both the pos and neg windows
     val w = Window.partitionBy("query_id").orderBy(col("cos_ppm").desc, col("vec_id"))
     val pos = scored.filter(col("label") === col("qlabel"))
       .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -815,7 +815,7 @@ object Similarity {
           aggregate(col("vs"), array_repeat(lit(0.0), Dim),
             (acc, e) => zip_with(acc, e, (x, y) => x + y)),
           x => x / col("n")).as("c"))
-      .localCheckpoint() // consumed by assignment + probe scoring
+      .transform(Materialize.snapshot) // consumed by assignment + probe scoring
     val assign = assignTo(vecs, cents.select(col("label").as("cluster"), col("c")))
       .select(col("vec_id"), col("cluster").as("cell"))
     val wProbe = Window.partitionBy("vec_id").orderBy(col("sc").desc, col("label"))
@@ -840,7 +840,7 @@ object Similarity {
         transform(
           aggregate(col("vs"), zero8, (acc, e) => zip_with(acc, e, (x, y) => x + y)),
           x => x / col("n")).as("c"))
-      .localCheckpoint() // consumed by encode + ADC lookup tables
+      .transform(Materialize.snapshot) // consumed by encode + ADC lookup tables
     val d2 = aggregate(
       zip_with(col("sv"), col("c"), (x, y) => (x - y) * (x - y)),
       lit(0.0), (a, e) => a + e)
@@ -912,7 +912,7 @@ object Similarity {
        |  CAST(FLOOR(CAST(n_hit AS BIGINT)*1000000/10) AS BIGINT) AS recall_ppm
        |FROM hits ORDER BY method, query_id""") { (s, d) =>
     val truth = q31KnnBrute.fn(s, d).select(col("query_id"), col("vec_id"))
-      .localCheckpoint() // scored against both methods
+      .transform(Materialize.snapshot) // scored against both methods
     def recallOf(name: String, approx: DataFrame): DataFrame =
       truth.as("t")
         .join(approx.select(col("query_id"), col("vec_id")).as("a"),
@@ -996,7 +996,7 @@ object Similarity {
           aggregate(col("vs"), array_repeat(lit(0.0), Dim),
             (acc, e) => zip_with(acc, e, (x, y) => x + y)),
           x => x / col("n")).as("c"))
-      .localCheckpoint() // consumed by the codebook and the probe ranking
+      .transform(Materialize.snapshot) // consumed by the codebook and the probe ranking
     val assign = assignTo(vecs, cents.select(col("label").as("cluster"), col("c")))
       .select(col("vec_id"), col("cluster").as("cell"))
     val wProbe = Window.partitionBy("query_id").orderBy(col("s").desc, col("cell"))
@@ -1012,7 +1012,7 @@ object Similarity {
       .filter(col("rn") <= col("nprobe"))
       .select(col("nprobe"), col("query_id"), col("cell"))
     val truth = q31KnnBrute.fn(s, d).select(col("query_id"), col("vec_id"))
-      .localCheckpoint() // hit test + the 1-row query count
+      .transform(Materialize.snapshot) // hit test + the 1-row query count
     val nq = truth.select("query_id").distinct().agg(count(lit(1)).as("nq"))
     val stats = broadcast(probed).join(assign, "cell")
       .filter(col("vec_id") =!= col("query_id"))
@@ -1090,7 +1090,7 @@ object Similarity {
       .transform(centroidsOf)
     // assignTo: broadcast codebook, map-side argmax — corpus unshuffled
     val assigned = withNorm(assignTo(aug, cents0), "v")
-      .localCheckpoint() // both sides of the pair join read it
+      .transform(Materialize.snapshot) // both sides of the pair join read it
     val pairs = assigned.as("x").join(assigned.as("y"),
         col("x.cluster") === col("y.cluster") && col("x.vec_id") < col("y.vec_id"))
       .select(col("y.vec_id").as("vec_id"), col("y.cluster").as("cluster"),
@@ -1153,7 +1153,7 @@ object Similarity {
       .crossJoin(broadcast(anchors))
       .select(col("anchor_id"), col("vec_id"), col("lang"),
         cosPpmPre(dot(col("av"), col("v")), col("av_nrm"), col("v_nrm")).as("cos_ppm"))
-      .localCheckpoint() // feeds the rank AND the top-8 denominator
+      .transform(Materialize.snapshot) // feeds the rank AND the top-8 denominator
     val w = Window.partitionBy("anchor_id").orderBy(col("cos_ppm").desc, col("vec_id"))
     val ranked = scored.withColumn("rn", row_number().over(w))
     val denom = ranked.filter(col("rn") <= 8)
@@ -1519,9 +1519,9 @@ object Similarity {
         .select((col("vec_id") + 1000000L).as("vec_id"),
           concat(slice(col("v"), 2, Dim - 1), slice(col("v"), 1, 1)).as("v"))
       // consumed by two assignment passes + the drift join
-      val cents = labelCentroids(s, d).localCheckpoint()
-      val ab = assignTo(base, cents).localCheckpoint() // counts + fold
-      val an = assignTo(newb, cents).localCheckpoint()
+      val cents = labelCentroids(s, d).transform(Materialize.snapshot)
+      val ab = assignTo(base, cents).transform(Materialize.snapshot) // counts + fold
+      val an = assignTo(newb, cents).transform(Materialize.snapshot)
       val newc = ab.unionByName(an)
         .groupBy("cluster")
         .agg(count(lit(1)).as("n"),
@@ -1659,7 +1659,7 @@ object Similarity {
     val scored = a.crossJoin(broadcast(b))
       .select(col("a_id"), col("b_id"),
         cosPpmPre(dot(col("av"), col("bv")), col("a_nrm"), col("b_nrm")).as("cos_ppm"))
-      .localCheckpoint() // both argmax folds read the scored pairs once
+      .transform(Materialize.snapshot) // both argmax folds read the scored pairs once
     // argmax by (cos, -partner): lexicographic struct max = cos DESC, id ASC
     val bestB = scored
       .groupBy("a_id")
@@ -1706,7 +1706,7 @@ object Similarity {
     // this one exchange (localCheckpoint pins identical partitions)
     val c = qd.join(broadcast(mn), "j")
       .select(col("vec_id"), col("j"), (col("q") - col("m")).as("c"))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     c.as("a").join(c.as("b"), "vec_id")
       .groupBy(col("a.j").as("j"), col("b.j").as("k"))
       .agg(sum(col("a.c") * col("b.c")).as("g"))
@@ -1719,7 +1719,7 @@ object Similarity {
     * Not registered; kept as the graft.Prof A/B baseline (SimilaritySpec
     * pins output equality with the registered query). */
   private[graft] def q220PowerDistributed(s: SparkSession, d: String): DataFrame = {
-    val cov = q220Cov(s, d).localCheckpoint() // read by all three rounds
+    val cov = q220Cov(s, d).transform(Materialize.snapshot) // read by all three rounds
     var v = cov.select(col("j")).distinct().select(col("j").as("k"), lit(1000000L).as("v"))
     var raw: DataFrame = null
     (1 to 3).foreach { _ =>
@@ -1882,7 +1882,7 @@ object Similarity {
             (x, sgn) => x * sgn),
           lit(0L), (a, x) => a + x)): _*))
       .crossJoin(broadcast(nn)) // 1-row corpus count: scale-safe scalar
-      .localCheckpoint() // both self-join sides read one snapshot
+      .transform(Materialize.snapshot) // both self-join sides read one snapshot
     val pairs = q.select(col("qv").as("qa"), col("pv").as("pa"),
         ((col("vec_id") + 217) % col("n")).as("pk"))
       .join(q.select(col("vec_id").as("pk"), col("qv").as("qb"), col("pv").as("pb")), "pk")
@@ -1960,12 +1960,12 @@ object Similarity {
       .select(col("vec_id"),
         expr(s"transform(CAST(embedding AS ARRAY<DOUBLE>), x -> CAST(FLOOR(x * 1000) AS BIGINT))")
           .as("qv"))
-      .localCheckpoint() // corpus quant table: read once per round
+      .transform(Materialize.snapshot) // corpus quant table: read once per round
     val c0 = q.orderBy("vec_id").limit(1)
       .select(col("vec_id").as("cid"), col("qv").as("cqv"))
     var dmin = q.crossJoin(broadcast(c0)) // 1-row center: scale-safe
       .select(col("vec_id"), col("qv"), expr(dist2).as("dmin"))
-      .localCheckpoint()
+      .transform(Materialize.snapshot)
     var out = c0.select(lit(0L).as("round"), col("cid").as("center_id"),
       lit(null).cast("long").as("radius_sq"))
     (1 to 4).foreach { i =>
@@ -1977,7 +1977,7 @@ object Similarity {
       dmin = dmin.crossJoin(broadcast(center.select("cqv")))
         .select(col("vec_id"), col("qv"),
           least(col("dmin"), expr(dist2)).as("dmin"))
-        .localCheckpoint() // cut the per-round lineage
+        .transform(Materialize.snapshot) // cut the per-round lineage
       out = out.unionByName(center.select(lit(i.toLong).as("round"),
         col("cid").as("center_id"), col("radius").as("radius_sq")))
     }
@@ -2095,7 +2095,7 @@ object Similarity {
       .select(col("vec_id"), col("v"), col("v_nrm"),
         cosPpmPre(dot(col("qv"), col("v")), col("qv_nrm"), col("v_nrm")).as("rel"))
       .orderBy(col("rel").desc, col("vec_id")).limit(8) // TakeOrdered heap cut
-      .localCheckpoint() // 8 candidate rows: the pair table + the collect
+      .transform(Materialize.snapshot) // 8 candidate rows: the pair table + the collect
     val pair = cand.as("a")
       .join(broadcast(cand.select(col("vec_id").as("bid"), col("v").as("bv"),
         col("v_nrm").as("b_nrm"))), col("vec_id") =!= col("bid"))
@@ -2110,7 +2110,7 @@ object Similarity {
     * pins output equality with the registered query). */
   private[graft] def q237GreedyDistributed(s: SparkSession, d: String): DataFrame = {
     val (cand, pair0) = q237Tables(s, d)
-    val pair = pair0.localCheckpoint() // k² cells: every round reads it
+    val pair = pair0.transform(Materialize.snapshot) // k² cells: every round reads it
     def pick(df: DataFrame, scoreCol: Column): DataFrame =
       df.agg(max(struct(scoreCol.as("sc"), (-col("vec_id")).as("nid"))).as("m"))
         .select((-col("m.nid")).as("vec_id"))
@@ -2128,7 +2128,7 @@ object Similarity {
           col("rel").as("relevance_ppm"), col("maxsim").as("maxsim_ppm"),
           (col("rel") - col("maxsim")).as("mmr_ppm"))
       out = out.unionByName(si)
-      selected = selected.unionByName(si.select("vec_id")).localCheckpoint()
+      selected = selected.unionByName(si.select("vec_id")).transform(Materialize.snapshot)
     }
     out.orderBy("round")
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -370,7 +370,7 @@ object Text {
         sequence(lit(1), size(col("toks")) - 1),
         i => concat(element_at(col("toks"), i), lit(" "),
           element_at(col("toks"), i + 1)))).as("bg"))
-      .localCheckpoint() // feeds both the model build and the scoring join
+      .transform(Materialize.snapshot) // feeds both the model build and the scoring join
     val freq = bg.groupBy("bg").agg(count(lit(1)).as("c"))
     val tot = freq.agg(sum(col("c")).as("tc"))
     bg.join(broadcast(freq), "bg")
@@ -420,7 +420,7 @@ object Text {
       .withColumn("toks", tokens(col("text")))
       .select(col("lang"), langId(col("toks")).as("lang_pred"))
       .groupBy("lang", "lang_pred").agg(count(lit(1)).as("n"))
-      .localCheckpoint() // row totals re-aggregate the matrix, not the corpus
+      .transform(Materialize.snapshot) // row totals re-aggregate the matrix, not the corpus
     val rt = m.groupBy("lang").agg(sum(col("n")).as("row_total"))
     m.join(broadcast(rt), "lang")
       .select(col("lang"), col("lang_pred"), col("n"), col("row_total"),
@@ -483,10 +483,10 @@ object Text {
   private def bpeRun(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val t0 = docs(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .localCheckpoint() // scanned by round-1 count AND round-1 merge
-    val p1 = bpeTopPair(t0).localCheckpoint() // broadcast into the merge
-    val s1 = bpeMergeRound(t0, p1).localCheckpoint() // round-2 count + merge
-    val p2 = bpeTopPair(s1).localCheckpoint()
+      .transform(Materialize.snapshot) // scanned by round-1 count AND round-1 merge
+    val p1 = bpeTopPair(t0).transform(Materialize.snapshot) // broadcast into the merge
+    val s1 = bpeMergeRound(t0, p1).transform(Materialize.snapshot) // round-2 count + merge
+    val p2 = bpeTopPair(s1).transform(Materialize.snapshot)
     val s2 = bpeMergeRound(s1, p2)
     (p1, s1, p2, s2)
   }
@@ -711,7 +711,7 @@ object Text {
           element_at(col("toks"), i + 1).as("b")))).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("n_pair"))
-      .localCheckpoint() // feeds both the bigram total and the scored join
+      .transform(Materialize.snapshot) // feeds both the bigram total and the scored join
     val nb = cab.agg(sum("n_pair").cast("long").as("tot"))
     cab.filter(col("n_pair") >= 5)
       .join(ugc.select(col("term").as("a"), col("cu").as("cua")), "a")
@@ -803,7 +803,7 @@ object Text {
       .select(col("bin"), col("n"),
         expr_floorDiv(col("sc"), col("n")).as("conf_milli"),
         expr_floorDiv(col("nok") * 1000, col("n")).as("acc_milli"))
-      .localCheckpoint() // the ECE total re-aggregates this ≤10-row matrix
+      .transform(Materialize.snapshot) // the ECE total re-aggregates this ≤10-row matrix
     val tot = g.agg(sum("n").as("nn"),
       sum(col("n") * abs(col("acc_milli") - col("conf_milli"))).as("gapsum"))
     g.crossJoin(broadcast(tot))
@@ -871,7 +871,7 @@ object Text {
       .groupBy("tk")
       .agg(sum(when(col("sl") === 0, col("n")).otherwise(0L)).as("ca"),
         sum(when(col("sl") === 1, col("n")).otherwise(0L)).as("cb"))
-      .localCheckpoint() // totals + TVD re-aggregate this vocab table
+      .transform(Materialize.snapshot) // totals + TVD re-aggregate this vocab table
     val tot = p.agg(sum("ca").as("na"), sum("cb").as("nb"))
     val sh = p.crossJoin(broadcast(tot))
       .select(col("tk"), col("ca"), col("cb"),
@@ -1099,7 +1099,7 @@ object Text {
     val cells = Tables.documents(s, d)
       .groupBy(col("source"), col("n_chars").cast("long").as("v"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // cell table feeds both the per-source and pooled legs
+      .transform(Materialize.snapshot) // cell table feeds both the per-source and pooled legs
     val wsrc = Window.partitionBy("source").orderBy("v")
     val sc = cells
       .withColumn("lo_rank", sum("cnt").over(wsrc) - col("cnt") + 1)
@@ -1236,7 +1236,7 @@ object Text {
       .filter(col("i") < size(col("ts")) - 1)
       .select(col("w1"), expr("ts[i + 1]").as("w2"))
     val c = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // vocab²-bounded cells: read by 3 marginals + output
+      .transform(Materialize.snapshot) // vocab²-bounded cells: read by 3 marginals + output
     val cw1 = c.groupBy("w1").agg(sum("c").as("cw1"), count(lit(1)).as("fanout"))
     val cont = c.groupBy("w2").agg(count(lit(1)).as("cont"))
     val nn = c.agg(count(lit(1)).as("n"))
@@ -1316,7 +1316,7 @@ object Text {
       .unionAll(toks.select(col("doc_id"), lit(2).as("n"),
         explode(transform(shingles(col("toks"), 2), g => hex32(g))).as("h")))
     val cells = grams.groupBy("doc_id", "n", "h").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // read by the overlap join (both sides) + totals
+      .transform(Materialize.snapshot) // read by the overlap join (both sides) + totals
     val tot = cells.groupBy("doc_id", "n").agg(sum("c").as("t"))
     val ov = cells.filter(col("doc_id") % 5 =!= 0)
       .join(cells.select(col("doc_id").as("rid"), col("n").as("rn"),
@@ -1460,9 +1460,9 @@ object Text {
       .unionAll(toks.select(col("doc_id"), lit(2).as("n"),
         explode(transform(shingles(col("toks"), 2), g => hex32(g))).as("h")))
     val cells = grams.groupBy("doc_id", "n", "h").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // read by both clip-join sides + totals
+      .transform(Materialize.snapshot) // read by both clip-join sides + totals
     val tot = cells.groupBy("doc_id", "n").agg(sum("c").as("t"))
-      .localCheckpoint() // read by prec + both lens legs
+      .transform(Materialize.snapshot) // read by prec + both lens legs
     val ov = cells.filter(col("doc_id") % 5 =!= 0)
       .join(cells.select(col("doc_id").as("rid"), col("n").as("rn"),
           col("h").as("rh"), col("c").as("rc")),
@@ -1559,7 +1559,7 @@ object Text {
       .withColumn("toks", tokens(col("text")))
       .select(col("source"), col("lang"), langId(col("toks")).as("lang_pred"))
     val cells = p.groupBy("source", "lang", "lang_pred").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // ≤|sources|·25 cells: totals + both marginals read it
+      .transform(Materialize.snapshot) // ≤|sources|·25 cells: totals + both marginals read it
     val nd = cells.groupBy("source")
       .agg(sum("c").as("n"),
         sum(when(col("lang") === col("lang_pred"), col("c")).otherwise(0L)).as("diag"))
@@ -1682,9 +1682,9 @@ object Text {
     val cells = t.select(col("doc_id"), col("gid"),
         explode(transform(col("toks"), tk => hex32(tk))).as("h"))
       .distinct()
-      .localCheckpoint() // read by both intersection sides + sizes
+      .transform(Materialize.snapshot) // read by both intersection sides + sizes
     val sz = cells.groupBy("doc_id", "gid").agg(count(lit(1)).as("sz"))
-      .localCheckpoint() // 5 rows/group: both sims legs read it
+      .transform(Materialize.snapshot) // 5 rows/group: both sims legs read it
     val inter = cells
       .join(cells.select(col("doc_id").as("bd"), col("gid").as("bg"), col("h").as("bh")),
         col("bg") === col("gid") && col("bh") === col("h") && col("bd") =!= col("doc_id"))
@@ -1832,7 +1832,7 @@ object Text {
       .agg(count(lit(1)).as("n"), sum("conf_milli").as("sp"), sum("ok").as("k"),
         sum(expr("CAST(conf_milli - 1000 * ok AS DECIMAL(38,0)) * (conf_milli - 1000 * ok)"))
           .as("sqsum"))
-      .localCheckpoint() // ≤10 decile cells: totals + terms read it
+      .transform(Materialize.snapshot) // ≤10 decile cells: totals + terms read it
     val tot = g.agg(sum("n").as("nn"), sum("k").as("kk"), sum("sqsum").as("sqall"))
     val terms = g.crossJoin(broadcast(tot)) // 1-row totals
       .select(col("bin"), col("n"), col("sp"), col("k"), col("nn"), col("kk"), col("sqall"),
@@ -1992,7 +1992,7 @@ object Text {
       .withColumn("toks", tokens(col("text")))
       .select(col("lang"), langId(col("toks")).as("lang_pred"))
     val cells = p.groupBy("lang", "lang_pred").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // ≤25 contingency cells: all three folds read it
+      .transform(Materialize.snapshot) // ≤25 contingency cells: all three folds read it
     val agg = cells.agg(sum("c").as("n"),
       sum(expr("c * (c - 1) div 2")).as("tp"))
     val am = cells.groupBy("lang").agg(sum("c").as("s"))
@@ -2182,12 +2182,12 @@ object Text {
     val wIsl = Window.partitionBy("doc_id").orderBy("pos")
     val ns = t.filter(!col("tok").isin(stops: _*))
       .withColumn("grp", col("pos") - row_number().over(wIsl))
-      .localCheckpoint() // island rows feed phrases, word stats, and the re-join
+      .transform(Materialize.snapshot) // island rows feed phrases, word stats, and the re-join
     val ph = ns.groupBy("doc_id", "grp")
       .agg(array_join(transform(sort_array(collect_list(struct(col("pos"), col("tok")))),
         x => x("tok")), " ").as("phrase"),
         count(lit(1)).as("plen"))
-      .localCheckpoint() // phrase cells feed word degrees and the score re-join
+      .transform(Materialize.snapshot) // phrase cells feed word degrees and the score re-join
     val ws = ns.join(ph.select("doc_id", "grp", "plen"), Seq("doc_id", "grp"))
       .groupBy("tok")
       .agg(expr("sum(plen) * 1000000 div count(1)").as("score_ppm"))

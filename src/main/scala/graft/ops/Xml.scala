@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, Tables}
+import graft.{Materialize, Q, Tables}
 import graft.sources.FatXml
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -105,7 +105,7 @@ object Xml {
     val docs = Q.stageBarrier(docsTable(s, d))
     FatXml.extract(docs, Seq.empty)
         .withColumn("value_amount", col("value_amount").cast("double"))
-        .localCheckpoint()
+        .transform(Materialize.snapshot)
       .orderBy(col("source_form"), col("doc_id").asc_nulls_first,
         col("buyer_name").asc_nulls_first, col("value_amount").asc_nulls_first)
   }

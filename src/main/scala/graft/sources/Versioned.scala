@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
+import graft.Materialize
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -107,13 +109,12 @@ object Versioned {
     val w = Window.partitionBy(fpCol).orderBy(tieBreak)
     val inBatch = batch.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val fresh = (latestVersion(dir) match {
+    val (fresh, n) = Materialize.count(latestVersion(dir) match {
       case None => inBatch
       case Some(v) =>
         inBatch.join(read(spark, dir, Some(v)).select(col(fpCol)),
           Seq(fpCol), "left_anti")
-    }).localCheckpoint() // window + anti-join run ONCE for count and write
-    val n = fresh.count()
+    })(_ => true) // window + anti-join run ONCE, counted in the same job
     if (n == 0) (latestVersion(dir).getOrElse(0), 0L)
     else (commit(spark, dir, fresh, keepExisting = true), n)
   }

@@ -46,7 +46,6 @@ object Streaming {
     * into a per-sf temp directory. A production layout would already be
     * a partitioned directory and stream directly. */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = stagedEventsDir(sfDir)
     val physical = spark.read.parquet(dir).schema("ts").dataType
     val schema = StructType(eventsRawSchema.map(f =>
@@ -188,20 +187,16 @@ object Streaming {
     * stream carries event time). */
   def incrementalDedupStream(docs: DataFrame, indexBands: DataFrame,
       indexShingles: DataFrame): DataFrame = {
-    import graft.functions.TextFunctions.{bandKey, tokenShingleHashes}
+    import graft.functions.TextFunctions.{bandKeys, jaccardDup, tokenShingleHashes}
     val sig = docs
       .withColumn("sig", expr("graft_minhash(toks)"))
       .withColumn("sx", array_distinct(tokenShingleHashes(col("toks"))))
-    val bands = sig.select(col("doc_id"), col("sx"),
-      explode(array((0 until 4).map(b => bandKey(col("sig"), b, 4)): _*)).as("bkey"))
-    val inter = size(array_intersect(col("sx"), col("sy"))).cast("long")
-    val uni = size(array_distinct(concat(col("sx"), col("sy")))).cast("long")
+    val bands = sig.select(col("doc_id"), col("sx"), bandKeys(col("sig")).as("bkey"))
     bands
       .join(indexBands, "bkey")
       .select(col("doc_id"), col("sx"), col("idx_id"))
       .join(indexShingles, "idx_id")
-      // the ONE verify rule (Dedup.verifiedDupPairs): exact J >= 0.7
-      .filter(uni > 0 && inter * 1000000L >= uni * 700000L)
+      .filter(jaccardDup(col("sx"), col("sy")))
       .select("doc_id")
       .dropDuplicates("doc_id")
   }
@@ -635,7 +630,7 @@ object Streaming {
     * rates. */
   def lshDedupIngest(docs: DataFrame, stateDir: String, outDir: String,
       checkpoint: String): StreamingQuery = {
-    import graft.functions.TextFunctions.{bandKey, tokens}
+    import graft.functions.TextFunctions.{bandKeys, tokens}
     val q = docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
@@ -647,8 +642,7 @@ object Streaming {
           val bands = batch
             .withColumn("toks", tokens(col("text")))
             .withColumn("sig", expr("graft_minhash(toks)"))
-            .select(explode(array((0 until 4).map(b => bandKey(col("sig"), b, 4)): _*)).as("bkey"),
-              col("doc_id"))
+            .select(bandKeys(col("sig")).as("bkey"), col("doc_id"))
           val store = readStore(s, stateDir).where(col("ingest_batch") =!= tag)
             .select(col("bkey"), lit(null).cast(LongType).as("doc_id"))
           // one exchange on bkey; every function below shares its sort

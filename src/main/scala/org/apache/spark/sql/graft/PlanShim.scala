@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import scala.reflect.ClassTag
 
 import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
@@ -11,10 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Bridge into `private[sql]` and `private[spark]` APIs: the Dataset
   * constructor, so graft's custom logical operators
   * (plans.TopKPerGroupPlan) can be wrapped back into a public DataFrame;
-  * the checkpoint internals behind graft.Materialize; and the listener
-  * bus behind graft.Obs (its drain and the job-tag property). The
-  * standard extension-library shim; nothing else may live in this
-  * package. */
+  * the engine's only checkpoint implementation, behind graft.Materialize;
+  * and the listener bus behind graft.Obs (its drain and the job-tag
+  * property). The standard extension-library shim; nothing else may
+  * live in this package. */
 object PlanShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
@@ -46,13 +47,16 @@ object PlanShim {
     }
   }
 
-  /** Unpersist the RDD behind a frame `checkpointFold` returned. */
-  def releaseCheckpoint(snap: DataFrame): Unit =
+  /** The RDD behind a frame `checkpointFold` returned. */
+  def checkpointRdd(snap: DataFrame): RDD[_] =
     snap.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case r: LogicalRDD => r.rdd
       case p => throw new IllegalArgumentException(
         s"not a checkpoint snapshot: ${p.nodeName}")
     }
+
+  /** Unpersist an RDD by id (blocking); a no-op for one already removed. */
+  def unpersistRdd(sc: SparkContext, id: Int): Unit = sc.unpersistRDD(id, blocking = true)
 
   /** Block until every listener has handled every event posted so far;
     * throws if the bus has not emptied within a minute. */

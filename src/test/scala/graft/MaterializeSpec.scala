@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanShim
 
 /** graft.Materialize: the scalar a checkpoint job folds out of its rows
   * must equal the separate aggregate it replaces, and the helpers built
@@ -17,17 +18,20 @@ class MaterializeSpec extends SparkSpec {
       .select(((col("id") * 7919) % 1000 - 300).as("x"), lit(null).cast("long").as("nul"))
     val empty = full.filter(lit(false))
     for (df <- Seq(full, empty); c <- Seq("x", "nul")) {
-      val exp = df.agg(sum(c), max(c), count(when(col(c) > 100, 1))).head()
+      val exp = df.agg(sum(c), max(c), count(when(col(c) > 100, 1)), count(lit(1)), min(c)).head()
       def opt(i: Int) = if (exp.isNullAt(i)) None else Some(exp.getLong(i))
       val (s1, sm) = Materialize.sumLong(df, c)
       val (s2, mx) = Materialize.maxLong(df, c)
       val i = df.schema.fieldIndex(c)
       val (s3, n) = Materialize.count(df)(r => !r.isNullAt(i) && r.getLong(i) > 100)
+      val (s4, red) = Materialize.reduceLongs(df,
+        (None, Math.addExact), (Some(c), math.min), (Some(c), math.max))
       assert(sm == opt(0), s"sum($c)")
       assert(mx == opt(1), s"max($c)")
       assert(n == exp.getLong(2), s"count($c > 100)")
+      assert(red == Seq(opt(3).filter(_ > 0), opt(4), opt(1)), s"count(*), min($c), max($c)")
       // the snapshots hold the frame's rows
-      Seq(s1, s2, s3).foreach(snap => assert(rows(snap) == rows(df)))
+      Seq(s1, s2, s3, s4).foreach(snap => assert(rows(snap) == rows(df)))
     }
   }
 
@@ -80,24 +84,67 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("q211 and a multi-round connectedComponents leave only their final snapshots persisted") {
-    val sc = spark.sparkContext
-    def pinnedBy[A](body: => A): (A, Set[Int]) = {
-      val before = sc.getPersistentRDDs.keySet
-      val out = body
-      (out, sc.getPersistentRDDs.keySet.toSet -- before)
-    }
     // the edge table and four peel-round snapshots released; the two the
     // result reads stay (the host ranking and the final degree table)
-    val (_, q211) = pinnedBy(SparkEntry.queries("q211_kcore")(spark, sf).collect())
-    assert(q211.size <= 2, s"q211 left ${q211.size} persisted RDDs")
+    val (_, q211) = Materialize.scope(SparkEntry.queries("q211_kcore")(spark, sf).collect())
+    assert(q211 <= 2, s"q211 held $q211 snapshots")
     // a 16-node path takes several pointer-jumping rounds
     import spark.implicits._
     val nodes = (0L until 16L).toDF("id")
     val edges = (0L until 15L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("a", "b")
-    val (comps, cc) =
-      pinnedBy(ops.Dedup.connectedComponents(nodes, edges).select("comp").as[Long].collect().toSeq)
+    val (comps, cc) = Materialize.scope(
+      ops.Dedup.connectedComponents(nodes, edges).select("comp").as[Long].collect().toSeq)
     assert(comps == Seq.fill(16)(0L))
-    assert(cc.size <= 1, s"connectedComponents left ${cc.size} persisted RDDs")
+    assert(cc <= 1, s"connectedComponents held $cc snapshots")
+  }
+
+  // scope tests: a strong reference to each frame keeps its RDD out of
+  // the ContextCleaner's reach, so "not persisted" below means released
+  private def snap(): DataFrame = Materialize.snapshot(spark.range(0, 100, 1, 2).toDF("x"))
+  private def id(df: DataFrame): Int = PlanShim.checkpointRdd(df).id
+  private def persisted(df: DataFrame): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(id(df))
+
+  test("scope: the held count is exact whatever the driver's GC has collected") {
+    val (kept, held) = Materialize.scope {
+      (1 to 3).foreach(_ => snap()) // no reference survives the loop
+      System.gc()
+      val released = snap()
+      Materialize.release(released)
+      snap()
+    }
+    assert(held == 4)
+    assert(!persisted(kept))
+  }
+
+  test("scope: a body that throws still releases its snapshots") {
+    var made: DataFrame = null
+    val e = intercept[IllegalStateException](Materialize.scope {
+      made = snap()
+      assert(persisted(made))
+      throw new IllegalStateException("boom")
+    })
+    assert(e.getMessage == "boom")
+    assert(!persisted(made))
+  }
+
+  test("scope: a nested scope releases only its own snapshots") {
+    val ((outer, inner, innerHeld), outerHeld) = Materialize.scope {
+      val outer = snap()
+      val (inner, innerHeld) = Materialize.scope(snap())
+      assert(persisted(outer) && !persisted(inner))
+      (outer, inner, innerHeld)
+    }
+    assert(innerHeld == 1 && outerHeld == 1)
+    assert(!persisted(outer) && !persisted(inner))
+  }
+
+  test("scope: a snapshot made outside any scope is not recorded") {
+    val outside = snap()
+    val (inside, held) = Materialize.scope(snap())
+    assert(held == 1 && !persisted(inside))
+    assert(persisted(outside))
+    Materialize.release(outside)
   }
 
   test("job-count pins: q212 and q312 at sf0.01") {

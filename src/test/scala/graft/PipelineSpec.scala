@@ -120,4 +120,23 @@ class PipelineSpec extends SparkSpec {
     assert(tolerant.collect().map(_.getString(0)).toSeq
       == Seq("a.xml"), "good archive read, corrupt one skipped")
   }
+
+  test("hostile ingest: empty, non-UTF-8 junk and XML-less entries land as error rows or skips") {
+    val raw = Files.createTempDirectory("graft-rawhostile").toString
+    // bytes 0x80-0xFF: invalid UTF-8 (latin-1 fallback) and not XML
+    val junk = Array.tabulate[Byte](256)(i => (0x80 + i % 128).toByte)
+    makeZip(s"$raw/hostile.zip",
+      "empty.xml" -> Array.emptyByteArray,
+      "junk.xml" -> junk,
+      "ok.xml" -> tedXml.getBytes("UTF-8"))
+    makeZip(s"$raw/noxml.zip",
+      "readme.txt" -> "no".getBytes("UTF-8"),
+      "data.bin" -> junk)
+    val ext = sources.FatXml.extract(ZipXml.zipEntriesV2(spark, raw),
+      Seq("source_zip", "source_xml_file"))
+    val got = ext.select("source_xml_file", "parse_error").collect()
+      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+    val bad = Some("unparseable_or_unknown_form")
+    assert(got == Map("empty.xml" -> bad, "junk.xml" -> bad, "ok.xml" -> None))
+  }
 }

@@ -120,14 +120,36 @@ class PlanAuditSpec extends SparkSpec {
     "q74_curation_funnel" -> "scalar-scalar join: the 1-row raw-doc count crosses the 1-row fused funnel aggregate into the 4-row stage report (round-13 report fusion)",
     "q313_dedup_store_audit" -> "scalar-scalar joins: the four 1-row per-relation metric aggregates (dec / before / after+checksum / scratch checksum) cross-combine into the 10-row stack report (round-13 report fusion); every data-scale leg is a collapsing count over band-key equi-joins")
 
+  // queries that plan a window with no partition spec (one partition
+  // holds every row it windows); ROADMAP item 4 gives each one's bound
+  private val globalWindowAllowed: Set[String] = Set(
+    "q95_token_budget", "q125_hybrid_rrf", "q140_training_build", "q149_vocab_growth",
+    "q185_rfm_segments", "q188_conversion_delay", "q190_id_continuity",
+    "q192_seasonal_decomp", "q196_skyline", "q202_quantile_norm",
+    "q207_peak_concurrency", "q208_equidepth_hist", "q210_monetary_unit_sample",
+    "q213_priority_sample", "q226_stump_split", "q240_rolling_backtest",
+    "q249_kaplan_meier", "q253_bh_fdr", "q262_gains_lift", "q265_bradley_terry",
+    "q266_t_closeness", "q268_brier_decomp", "q269_threshold_sweep", "q272_pass_at_k",
+    "q280_logrank", "q281_qini_uplift", "q289_wilcoxon_signed_rank",
+    "q290_kruskal_wallis", "q302_spearman")
+
   test("no query plans a cartesian product or an unbounded nested-loop join") {
+    val sc = spark.sparkContext
+    val globalWindows = Set.newBuilder[String]
     val offenders = SparkEntry.registry.flatMap { q =>
       // plans executed EAGERLY while a query builds (checkpoints) never
       // appear in its final executedPlan; the build's record holds them,
       // so a checkpoint cannot hide a cartesian from the audit
-      val (finalPlan, rec) =
-        try Obs.measure(spark, q.name)(q.fn(spark, sf).queryExecution.executedPlan.toString)
+      val before = sc.getPersistentRDDs.keySet
+      val (((finalPlan, rec), windowWarnings), _) =
+        try Materialize.scope(globalWindowWarnings(
+          Obs.measure(spark, q.name)(q.fn(spark, sf).queryExecution.executedPlan.toString)))
         catch { case e: Throwable => fail(s"${q.name} failed to plan: $e") }
+      // the scope released every snapshot the build made: nothing it
+      // created is left pinned
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"${q.name} left persisted RDDs ${left.toSeq.sorted}")
+      if (windowWarnings > 0) globalWindows += q.name
       val plans = rec.plans.map(_.mkString(" ")) :+ finalPlan
       val cartesian = plans.exists(_.contains("CartesianProduct"))
       val nlj = plans.exists(_.contains("BroadcastNestedLoopJoin")) &&
@@ -138,6 +160,34 @@ class PlanAuditSpec extends SparkSpec {
       else None
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+    val found = globalWindows.result()
+    assert(found == globalWindowAllowed,
+      s"single-partition windows: unlisted ${(found -- globalWindowAllowed).toSeq.sorted}, " +
+        s"listed but gone ${(globalWindowAllowed -- found).toSeq.sorted}")
+  }
+
+  /** `body` and how many times planning logged Spark's "No Partition
+    * Defined for Window operation" warning (a WindowExec with an empty
+    * partition spec moves all its rows to one partition), eager
+    * checkpoint plans included. */
+  private def globalWindowWarnings[A](body: => A): (A, Int) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val log = LogManager.getLogger(
+      classOf[org.apache.spark.sql.execution.window.WindowExec]).asInstanceOf[Logger]
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new AbstractAppender("global-window", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.startsWith("No Partition Defined")) n.incrementAndGet()
+    }
+    counter.start()
+    val level = log.getLevel
+    log.addAppender(counter)
+    log.setLevel(Level.WARN)
+    try (body, n.get)
+    finally { log.removeAppender(counter); log.setLevel(level); counter.stop() }
   }
 
   test("no query falls back to a non-codegen RDD scan of collected rows") {
@@ -145,8 +195,7 @@ class PlanAuditSpec extends SparkSpec {
     // driver-side collect crept into the dataflow (literals/lookup
     // arrays are fine — they stay tiny and broadcast)
     SparkEntry.registry.foreach { q =>
-      val df = q.fn(spark, sf)
-      val analyzed = df.queryExecution.analyzed.toString
+      val (analyzed, _) = Materialize.scope(q.fn(spark, sf).queryExecution.analyzed.toString)
       assert(!analyzed.contains("ExternalRDD"),
         s"${q.name}: dataflow routes through a driver-collected RDD")
     }

@@ -515,7 +515,11 @@ class StreamingSpec extends SparkSpec {
     val landing = twoFileLanding()
     val root = Files.createTempDirectory("graft-lshj").toString
     val persisted = sc.getPersistentRDDs.keySet
-    val (q, rec) = Obs.measure(spark, "lsh drain")(lshDrain(landing, root, s"$root/ckpt"))
+    // batches snapshot on the stream's own thread and release what they
+    // make there; the caller's scope sees what the drain made on its thread
+    val ((q, rec), held) =
+      Materialize.scope(Obs.measure(spark, "lsh drain")(lshDrain(landing, root, s"$root/ckpt")))
+    assert(held == 0, s"the drain held $held snapshots")
     // every job of batch b runs under the tag `lsh admit <query id>-b`
     val perBatch = (0 to 1).map(b => rec.jobs.count(_.contains(s"lsh admit ${q.id}-$b")))
     info(s"jobs per micro-batch: $perBatch")

@@ -120,4 +120,15 @@ class TablesCanarySpec extends SparkSpec {
     assert(l.getLong(0) == micros, s"legacy nanos branch: ${l.getLong(0)}")
     assert(n.getLong(0) == micros, s"NTZ branch: ${n.getLong(0)}")
   }
+
+  test("events loaders read the session's nanosAsLong setting and leave it alone") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(spark.conf.get(key) == "true", "graft.Session reads TIMESTAMP(NANOS) as epoch-nanos")
+    withConf(key -> "false") {
+      // the fixture's timestamp[us] events load under either setting
+      assert(Tables.events(spark, sf).schema("ts").dataType == TimestampType)
+      assert(streaming.Streaming.eventsStream(spark, sf).isStreaming)
+      assert(spark.conf.get(key) == "false")
+    }
+  }
 }
