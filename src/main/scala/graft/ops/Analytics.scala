@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Materialize, Q, Tables}
+import graft.{Materialize, Q, Rank, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -1823,11 +1823,9 @@ object Analytics {
     * points; `n_points` says how many). Deterministic by construction:
     * fixed key order, integer point grid from the corpus total.
     *
-    * Scale: the global running sum over orders uses q95's two-level
-    * spelling — orderkey-chunk subtotals (cells) give each chunk its
-    * exact starting offset via a window over CHUNK cells, then the
-    * within-chunk running sum is windowed per chunk in parallel; no
-    * global row sort. The interval scalar is a 1-row broadcast. */
+    * Scale: the global running sum over orders is graft.Rank's (range
+    * partitions in parallel, no single-task window), and the interval
+    * is a literal from the total Rank returns. */
   val q210MonetaryUnitSample: Q = Q(
     "q210_monetary_unit_sample",
     """WITH o AS (
@@ -1846,23 +1844,11 @@ object Analytics {
       |FROM c CROSS JOIN iv
       |WHERE cum // iv.i > (cum - cents) // iv.i
       |ORDER BY o_orderkey""") { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     val o = Tables.orders(s, d).select(col("o_orderkey").as("k"),
       (dec(col("o_totalprice")) * 100).cast("long").as("cents"))
-    val iv = o.agg(sum("cents").as("t")).select(expr("t div 200").as("i"))
-    // two-level global running sum (q95): chunk offsets over CELLS,
-    // then a per-chunk window — orderkey chunks are themselves ordered
-    val chunked = o.withColumn("chunk", expr("k div 4096"))
-    val wChunk = Window.orderBy("chunk").rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = chunked.groupBy("chunk").agg(sum("cents").as("chunk_cents"))
-      .withColumn("base", coalesce(sum("chunk_cents").over(wChunk), lit(0L)))
-      .select("chunk", "base")
-    val wIn = Window.partitionBy("chunk").orderBy("k")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    chunked.join(broadcast(offsets), "chunk")
-      .withColumn("cum", col("base") + sum("cents").over(wIn))
-      .crossJoin(broadcast(iv)) // 1-row interval scalar
-      .withColumn("before", col("cum") - col("cents"))
+    val (c, tot) = Rank(o, "before", Seq(col("k")), weight = Some("cents"))
+    c.withColumn("cum", col("before") + col("cents"))
+      .withColumn("i", lit(tot.values.sum / 200)) // the sampling interval
       .filter(expr("cum div i > before div i"))
       .select(col("k").as("o_orderkey"), col("cents"), col("cum").as("cum_cents"),
         expr("cum div i - before div i").as("n_points"),

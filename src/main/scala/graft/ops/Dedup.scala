@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Materialize, Q, Tables}
+import graft.{Materialize, Q, Rank, Tables}
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1035,7 +1035,7 @@ object Dedup {
     * at levenshtein ≤ 2. The definition is inherently sequential
     * ("slide a window down the sorted file"); the distributed spelling
     * is: parallel global rank (range partition + partition offsets —
-    * Graph.rankIds, no single-task window), then block adjacency —
+    * graft.Rank, no single-task window), then block adjacency —
     * each row joins its rank-block and the next (rb−ra ≤ w spans at
     * most 2 w-blocks), an EQUI-join, then the exact rank-gap filter.
     *
@@ -1064,15 +1064,7 @@ object Dedup {
       when(col("c_custkey") % 4 === 0,
         regexp_replace(col("c_name"), "#000", "#"))
         .otherwise(col("c_name")).as("nm"))
-    // composite sort key is unique by construction (name + zero-padded
-    // key) and orders exactly like (nm, k): the '!' separator (0x21)
-    // sorts below every character that appears in a name, so a name
-    // that is a strict prefix of another still ranks first — a
-    // separator above '0' would invert those pairs vs the oracle
-    val ranked = Graph.rankIds(
-      noisy.withColumn("srt", concat(col("nm"), lit("!"),
-        lpad(col("k").cast("string"), 12, "0"))), "srt", "rk")._1
-      .select(col("k"), col("nm"), col("rk"))
+    val ranked = Rank(noisy, "rk", Seq(col("nm"), col("k")))._1
     val left = ranked.select(col("k").as("a_key"), col("nm").as("a_nm"),
       col("rk").as("ra"), (col("rk") / w).cast("long").as("blk"))
     val right = ranked.select(col("k").as("b_key"), col("nm").as("b_nm"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Materialize, Q, Tables}
+import graft.{Materialize, Q, Rank, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,55 +17,6 @@ import org.apache.spark.sql.functions._
   * DuckDB oracle replays the iteration bit-for-bit.
   */
 object Graph {
-
-  /** `ROW_NUMBER() OVER (ORDER BY key) - 1` without the single-task
-    * global window (round-6 VERDICT item 5): range-partition by `key`,
-    * sort within partitions, then number rows in parallel. Range
-    * partitions are themselves in key order, so partition-local offsets
-    * plus a per-partition base yield exactly the global ascending rank
-    * whatever the boundaries are; at 10⁷+ hosts this scales where the
-    * empty-frame window funnels all rows through one task.
-    *
-    * `monotonically_increasing_id()` evaluated above the range exchange
-    * is `partitionId << 33 | rowOffsetInPartition`, with the offset
-    * following the sorted row order. The sorted frame is checkpointed
-    * through [[Materialize.fold]], whose one job also returns each
-    * partition's (partition id, row count); the driver turns those into
-    * base offsets, and the id is a projection over the snapshot with the
-    * bases as a literal array — no second pass over the rows, no join.
-    * Every id comes from that one snapshot, so no plan re-runs the range
-    * exchange (whose boundary sampling is seeded by the RDD id, so two
-    * runs can partition differently — q205 once got duplicate ranks
-    * when exchange reuse failed between two readers of the sort).
-    *
-    * Returns the ranked frame and its row count.
-    *
-    * PRECONDITION (keep this helper library-internal): `key` must be
-    * globally distinct and non-null — callers pass groupBy output or a
-    * composite key made unique by construction (q205's name|custkey).
-    * With duplicate keys the within-partition order of ties (and hence
-    * their ranks) would be arbitrary; nulls would sort first. */
-  private[graft] def rankIds(df: DataFrame, key: String, idCol: String): (DataFrame, Long) = {
-    val n = Q.shufflePartitions(df.sparkSession)
-    val sorted = df.repartitionByRange(n, col(key)).sortWithinPartitions(key)
-      .withColumn("_mid", monotonically_increasing_id())
-    val mi = sorted.schema.fieldIndex("_mid")
-    // (partition id, rows) per non-empty partition
-    val (snap, sizes) = Materialize.fold(sorted) { it =>
-      if (!it.hasNext) None
-      else { val pid = it.next().getLong(mi) >>> 33; Some((pid, 1L + it.size)) }
-    }
-    val counts = sizes.flatten.sortBy(_._1)
-    // bases(pid) = rows in all lower partitions
-    val bases = Array.fill(counts.lastOption.fold(0)(_._1.toInt + 1))(0L)
-    counts.foldLeft(0L) { case (base, (pid, rows)) => bases(pid.toInt) = base; base + rows }
-    val ranked = snap
-      .withColumn(idCol, element_at(typedLit(bases.toSeq),
-          (shiftright(col("_mid"), 33) + 1).cast("int"))
-        + col("_mid").bitwiseAND(lit((1L << 33) - 1)))
-      .drop("_mid")
-    (ranked, counts.map(_._2).sum)
-  }
 
   /** Damped PageRank power iteration in integer micro-units:
     * r'(h) = 150000 + (850 * Σ_{g→h} w(g,h)·(r(g) div outdeg(g))) div 1000,
@@ -140,13 +91,7 @@ object Graph {
          |FROM hosts h JOIN r3 r USING (hid)
          |ORDER BY rank_micro DESC, host"""
     }) { (s, d) =>
-    val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val (hosts, nh) = rankIds(
-      docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-    val links = docs
-      .join(broadcast(hosts.select("source", "hid")), "source")
-      .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
+    val (hosts, links, _) = hostLinkGraph(s, d)
     val edges = links.groupBy("src", "dst").agg(count(lit(1)).as("w"))
     val deg = hosts.select(col("hid"), (col("n_docs") * 3).as("outdeg"))
     val ranks = powerIterate(hosts.select("hid"), edges, deg, iters = 3)
@@ -218,13 +163,7 @@ object Graph {
       |SELECT h.source AS host, CAST(COALESCE(c.n_triangles, 0) AS BIGINT) AS n_triangles
       |FROM hosts h LEFT JOIN credit c USING (hid)
       |ORDER BY host""") { (s, d) =>
-    val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val (hosts, nh) = rankIds(
-      docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-    val links = docs
-      .join(broadcast(hosts.select("source", "hid")), "source")
-      .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
+    val (hosts, links, _) = hostLinkGraph(s, d)
     // edge-cardinality tables referenced multiply below — materialize
     // once (ue feeds degree + orientation; o feeds both wedge legs and
     // the closing-edge probe)
@@ -430,13 +369,7 @@ object Graph {
          |FROM hosts h JOIN d3 r USING (hid)
          |ORDER BY host"""
     }) { (s, d) =>
-    val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val (hosts, nh) = rankIds(
-      docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-    val links = docs
-      .join(broadcast(hosts.select("source", "hid")), "source")
-      .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
+    val (hosts, links, _) = hostLinkGraph(s, d)
     val edges = links.distinct()
     var dist = hosts.filter(col("hid") % 7 === 0)
       .select(col("hid"), lit(0L).as("dist"))
@@ -506,13 +439,7 @@ object Graph {
       |    ELSE CAST(FLOOR((n*sxy - sx*sx) * 1000.0 / (n*sxx - sx*sx)) AS BIGINT)
       |  END AS assortativity_milli
       |FROM m""") { (s, d) =>
-    val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val (hosts, nh) = rankIds(
-      docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-    val links = docs
-      .join(broadcast(hosts.select("source", "hid")), "source")
-      .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
+    val (hosts, links, _) = hostLinkGraph(s, d)
     val ue = links.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -537,23 +464,24 @@ object Graph {
             .cast("long")).as("assortativity_milli"))
   }
 
-  /** The q128 host link graph, shared by the round-8 graph additions:
-    * hosts = distinct `source` values ranked to dense ids, links = 3
-    * md5-derived directed edges per document (multi-edges kept — callers
-    * dedup as their semantics require). The ONLY corpus-cardinality
-    * stage is the link-extraction scan; hosts are broadcast and the host
-    * count is a literal (rankIds returns it). Identical construction to q128/q160/q198/q209 (kept
-    * inline there — their oracles were written against it first). */
+  /** The q128 host link graph, shared by every host-graph query: hosts
+    * (source, n_docs, hid) = distinct `source` values ranked to dense
+    * ids, links (src, dst) = 3 md5-derived directed edges per document
+    * (multi-edges kept — callers dedup as their semantics require), and
+    * the host count. The ONLY corpus-cardinality stage is the
+    * link-extraction scan; hosts are broadcast and the host count is a
+    * literal (Rank returns it). */
   private def hostLinkGraph(s: org.apache.spark.sql.SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, Long) = {
     val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val (hosts, nh) = rankIds(
-      docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
+    val (hosts, tot) = Rank(
+      docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "hid", Seq(col("source")))
+    val nh = tot.values.sum
     val links = docs
       .join(broadcast(hosts.select("source", "hid")), "source")
       .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
         conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
-    (hosts, links)
+    (hosts, links, nh)
   }
 
   /** The shared oracle CTE prefix deriving hosts + links (see q128). */
@@ -628,7 +556,7 @@ object Graph {
          |JOIN hosts h ON h.hid = a4.v
          |ORDER BY host"""
     }) { (s, d) =>
-    val (hosts, links) = hostLinkGraph(s, d)
+    val (hosts, links, _) = hostLinkGraph(s, d)
     val ue = links.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -742,7 +670,7 @@ object Graph {
        |LEFT JOIN a2 ON a2.hid = hs.hid
        |LEFT JOIN h2 ON h2.hid = hs.hid
        |ORDER BY auth_ppm DESC, host""".stripMargin) { (s, d) =>
-    val (hosts, links) = hostLinkGraph(s, d)
+    val (hosts, links, _) = hostLinkGraph(s, d)
     val edges = links.filter(col("src") =!= col("dst")).distinct()
       .transform(Materialize.snapshot) // read by all four half-rounds
     hitsScores(hosts.select("hid"), edges, rounds = 2)
@@ -1085,13 +1013,7 @@ object Graph {
          |FROM hosts h JOIN r3 r USING (hid)
          |ORDER BY ppr_micro DESC, host"""
     }) { (s, d) =>
-    val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val (hosts, nh) = rankIds(
-      docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "source", "hid")
-    val links = docs
-      .join(broadcast(hosts.select("source", "hid")), "source")
-      .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
+    val (hosts, links, nh) = hostLinkGraph(s, d)
     val edges = links.groupBy("src", "dst").agg(count(lit(1)).as("w"))
       .transform(Materialize.snapshot) // host-graph cells: every round reads it
     val deg = hosts.select(col("hid"), (col("n_docs") * 3).as("outdeg"))

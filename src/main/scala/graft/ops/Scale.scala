@@ -1,7 +1,7 @@
 package graft.ops
 
-import graft.{Materialize, Q, Tables}
-import org.apache.spark.sql.DataFrame
+import graft.{Materialize, Q, Rank, Tables}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -139,19 +139,8 @@ object Scale {
     * The per-language rank is the scale problem: `ROW_NUMBER() OVER
     * (PARTITION BY lang ...)` funnels each language through ONE task —
     * with a handful of languages over 100 TB that is a handful of
-    * straggler reducers. Spelled here as a grouped extension of
-    * Graph.rankIds: range-partition by the full (lang, ord, doc_id)
-    * composite (a language spans many partitions, each partition holds
-    * a contiguous slice of one-or-more languages), sort within
-    * partitions, then reconstruct the within-language rank from tiny
-    * per-(partition, language) stats — count and first-row offset, at
-    * most partitions x languages rows. The sorted frame is checkpointed
-    * through Materialize.fold, whose one job also returns those
-    * stats; the driver cumulates them per language and the rank is a
-    * broadcast join of that small table onto the snapshot. Both the
-    * stats and the ranks come from the one snapshot, so no plan re-runs
-    * the range exchange (whose boundary sampling could partition a
-    * second run differently). Rows never move twice.
+    * straggler reducers. graft.Rank spreads each language over many
+    * range partitions instead and returns each language's row count.
     * Ties are impossible: doc_id is in the sort key on both engines. */
   val q146StratifiedSplit: Q = Q(
     "q146_stratified_split",
@@ -170,42 +159,19 @@ object Scale {
       |       WHEN rk * 10 < tot * 9 THEN 'val'
       |       ELSE 'test' END AS split
       |FROM ranked ORDER BY lang, doc_id""") { (s, d) =>
-    import s.implicits._
     val keyed = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
         graft.functions.TextFunctions.hex32(
           concat(lit("split_"), col("doc_id").cast("string"))).as("ord"))
-    val n = Q.shufflePartitions(s)
-    val sortedDf = keyed
-      .repartitionByRange(n, col("lang"), col("ord"), col("doc_id"))
-      .sortWithinPartitions("lang", "ord", "doc_id")
-      .withColumn("_mid", monotonically_increasing_id())
-      .withColumn("_pid", shiftright(col("_mid"), 33))
-      .withColumn("_off", col("_mid").bitwiseAND(lit((1L << 33) - 1)))
-    val Seq(li, pi, oi) = Seq("lang", "_pid", "_off").map(sortedDf.schema.fieldIndex)
-    // per partition, one (partition id, lang, rows, first offset) per
-    // language: a language's rows are contiguous in a sorted partition
-    val (sorted, stats) = Materialize.fold(sortedDf) { it =>
-      val runs = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
-      it.foreach { r =>
-        val lang = if (r.isNullAt(li)) null else r.getUTF8String(li).toString
-        if (runs.isEmpty || runs.last._2 != lang) runs += ((r.getLong(pi), lang, 1L, r.getLong(oi)))
-        else runs(runs.length - 1) = runs.last.copy(_3 = runs.last._3 + 1)
-      }
-      runs.toArray
-    }
-    val bases = stats.flatten.toSeq.groupBy(_._2).toSeq.flatMap { case (lang, rs) =>
-      val sortedRuns = rs.sortBy(_._1)
-      val tot = sortedRuns.map(_._3).sum
-      sortedRuns.scanLeft(0L)(_ + _._3).zip(sortedRuns).map { case (base, (pid, _, _, minOff)) =>
-        (pid, lang, base, minOff, tot) }
-    }.toDF("_pid", "lang", "_base", "_minoff", "_tot")
-    sorted
-      .join(broadcast(bases), Seq("_pid", "lang"))
-      .withColumn("rank_in_lang", col("_base") + col("_off") - col("_minoff"))
+    val (ranked, tot) = Rank(keyed, "rank_in_lang", Seq(col("ord"), col("doc_id")),
+      group = Seq(col("lang")))
+    // each row's language total, NULL-safe on lang (a handful of languages)
+    val n = tot.foldLeft(lit(null).cast("long")) { case (c, (Row(lang), t)) =>
+      when(col("lang") <=> lit(lang), t).otherwise(c) }
+    ranked
       .select(col("lang"), col("doc_id"), col("rank_in_lang"),
-        when(col("rank_in_lang") * 10 < col("_tot") * 8, "train")
-          .when(col("rank_in_lang") * 10 < col("_tot") * 9, "val")
+        when(col("rank_in_lang") * 10 < n * 8, "train")
+          .when(col("rank_in_lang") * 10 < n * 9, "val")
           .otherwise("test").as("split"))
       .orderBy("lang", "doc_id")
   }
@@ -740,15 +706,15 @@ object Scale {
     * deletions, planted here as `event_id % 997 = 0`) WITHOUT the
     * single-partition global window the textbook islands query needs.
     * q181's two-level move applied to sequences: ids bucket into 4096-id
-    * chunks, islands form inside each chunk in parallel, then the
-    * boundary pass re-merges islands that touch across chunk edges —
-    * island fragments are orders of magnitude fewer than ids, so the one
-    * global window left runs over FRAGMENTS. Gaps are the complements of
-    * consecutive merged islands.
+    * chunks, and islands form inside each chunk in parallel as (lo, hi)
+    * fragments. graft.Rank numbers the fragments in id order, and an
+    * equi-join on rank pairs each with the next: a pair that does not
+    * touch (next lo > hi + 1) brackets a gap, and a pair that touches
+    * is one island split at a chunk edge.
     *
-    * Scale: the chunk size is the parallelism lever (bigger chunks →
-    * fewer fragments for the merge window); ids never leave their chunk
-    * partition until they've collapsed to (min, max) fragment rows. */
+    * Scale: ids never leave their chunk partition until they've
+    * collapsed to fragment rows, and no step funnels the fragments
+    * through one task. */
   val q190IdContinuity: Q = Q(
     "q190_id_continuity",
     """WITH ids AS (
@@ -785,18 +751,13 @@ object Scale {
       .withColumn("g", sum("brk").over(wcRun))
       .groupBy("chunk", "g")
       .agg(min("id").as("lo"), max("id").as("hi"))
-    // islands touching across a chunk edge merge: same gap rule, gap 0
-    val wf = Window.orderBy("lo") // fragments only — ≪ ids
-    val wfRun = wf.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val merged = frags
-      .withColumn("brk",
-        when(col("lo") - lag("hi", 1).over(wf) === 1, 0).otherwise(1))
-      .withColumn("g2", sum("brk").over(wfRun))
-      .groupBy("g2")
-      .agg(min("lo").as("lo"), max("hi").as("hi"))
-    merged
-      .withColumn("nxt", lead("lo", 1).over(Window.orderBy("lo")))
-      .filter(col("nxt").isNotNull && col("nxt") > col("hi") + 1)
+    // consecutive fragments in id order pair up by rank; fragments that
+    // touch across a chunk edge belong to one island, any other pair
+    // brackets a gap
+    val ranked = Rank(frags.select("lo", "hi"), "i", Seq(col("lo")))._1
+    ranked.select(col("i"), col("hi"))
+      .join(ranked.select((col("i") - 1).as("i"), col("lo").as("nxt")), "i")
+      .filter(col("nxt") > col("hi") + 1)
       .select((col("hi") + 1).as("gap_start"), (col("nxt") - 1).as("gap_end"),
         (col("nxt") - col("hi") - 1).cast("long").as("gap_len"))
       .orderBy("gap_start")

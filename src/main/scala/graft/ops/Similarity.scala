@@ -1294,7 +1294,7 @@ object Similarity {
     // avoids the O(corpus) single-partition Window/sort — the one
     // scale-killer round 12's audit flagged. SimilaritySpec pins
     // bit-equality of the two spellings on the fixture.
-    if (docsBytes(s, d) <= rankSmallBytes(s)) q125RankGlobal(s, d)
+    if (docsBytes(s, d) <= RankSmallBytes) q125RankGlobal(s, d)
     else q125RankDistributed(s, d)
   }
 
@@ -1375,13 +1375,11 @@ object Similarity {
     }).longValue()
 
   /** Corpus-size threshold (bytes of compressed documents parquet) below
-    * which q125 keeps the short global-window rank plan. Parameterised
-    * (guide §1.2 config note: scale-dependent knobs stay conf-driven
-    * with local defaults); 64 MiB of compressed text ≈ a few hundred MB
-    * raw — far above any fixture tree, far below a production corpus,
-    * where the distributed spelling must engage. */
-  private def rankSmallBytes(s: SparkSession): Long =
-    s.conf.get("spark.graft.rank.smallBytes", (64L << 20).toString).toLong
+    * which q125 keeps the short global-window rank plan: 64 MiB of
+    * compressed text ≈ a few hundred MB raw — far above any fixture
+    * tree, far below a production corpus, where the distributed spelling
+    * must engage. */
+  private val RankSmallBytes: Long = 64L << 20
 
   /** q125's scored legs: (doc_id, s1000) BM25 text scores and
     * (vec_id, cos_ppm) cosine scores — shared by the registered query

@@ -1899,7 +1899,6 @@ object Text {
       |  CAST(SUM(p3) OVER () // COUNT(p3) OVER () AS BIGINT) AS mean_pass3_ppm
       |FROM est
       |ORDER BY task""") { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     import graft.functions.TextFunctions.hex32
     val att = Tables.documents(s, d)
       .select((col("doc_id") - col("doc_id") % 5).as("task"),
@@ -1917,11 +1916,12 @@ object Text {
           .otherwise(expr(
             "1000000 - (n - c) * (n - c - 1) * (n - c - 2) * 1000000 div (n * (n - 1) * (n - 2))"))
           .as("p3"))
-    val wAll = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    est.select(col("task"), col("n"), col("c"),
+    val means = est.agg(expr("sum(p1) div count(p1)").as("mean_pass1_ppm"),
+      expr("sum(p3) div count(p3)").as("mean_pass3_ppm"))
+    est.crossJoin(broadcast(means)) // 1-row corpus scalars
+      .select(col("task"), col("n"), col("c"),
         col("p1").as("pass1_ppm"), col("p2").as("pass2_ppm"), col("p3").as("pass3_ppm"),
-        expr("sum(p1) over () div count(p1) over ()").as("mean_pass1_ppm"),
-        expr("sum(p3) over () div count(p3) over ()").as("mean_pass3_ppm"))
+        col("mean_pass1_ppm"), col("mean_pass3_ppm"))
       .orderBy("task")
   }
 

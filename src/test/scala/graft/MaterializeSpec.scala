@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanShim
 
 /** graft.Materialize: the scalar a checkpoint job folds out of its rows
   * must equal the separate aggregate it replaces, and the helpers built
-  * on it (rankIds, q146, connectedComponents) must not depend on how
+  * on it (Rank, q146, connectedComponents) must not depend on how
   * Spark happens to execute the plan. */
 class MaterializeSpec extends SparkSpec {
 
@@ -45,16 +45,42 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
-  test("rankIds equals row_number() - 1 with exchange reuse off and with AQE off") {
-    val df = spark.range(0, 1000, 1, 7).select(((col("id") * 7919) % 1000).cast("string").as("k"))
-    val exp = rows(df.withColumn("rk",
-      row_number().over(Window.orderBy("k")) - 1))
-    for (conf <- Seq("spark.sql.exchange.reuse" -> "false",
-        "spark.sql.adaptive.enabled" -> "false")) withConf(conf) {
-      val (ranked, n) = ops.Graph.rankIds(df, "k", "rk")
-      assert(n == 1000L, conf)
-      assert(rows(ranked.select("k", "rk")) == exp, conf)
+  test("Rank equals Spark's running-sum window with reuse off and with AQE off") {
+    val base = spark.range(0, 1000, 1, 7).select(
+      ((col("id") * 7919) % 1000).cast("string").as("k"), // unique
+      when(col("id") % 5 === 0, lit(null)).otherwise(col("id") % 3).as("g"),
+      (col("id") % 4).as("a"), col("id").as("b"),
+      when(col("id") % 11 === 0, lit(null)).otherwise((col("id") * 31) % 97 - 20).as("w"))
+    // (case, input, group, order, weight)
+    val cases = Seq[(String, DataFrame, Seq[String], Seq[Column], Option[String])](
+      ("a global order", base, Nil, Seq(col("k")), None),
+      ("groups with a NULL group", base, Seq("g"), Seq(col("k")), None),
+      ("a two-column order, one desc", base, Nil, Seq(col("a"), col("b").desc), None),
+      ("a weighted sum", base, Seq("g"), Seq(col("b")), Some("w")),
+      ("an empty input", base.filter(lit(false)), Nil, Seq(col("k")), None),
+      ("a single input partition", base.coalesce(1), Seq("a"), Seq(col("k")), Some("w")))
+    for (conf <- Seq("spark.sql.exchange.reuse" -> "false", "spark.sql.adaptive.enabled" -> "false");
+        (name, df, g, o, w) <- cases) withConf(conf) {
+      val wc = w.fold(lit(1L))(col)
+      val frame = Window.partitionBy(g.map(col): _*).orderBy(o: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val (ranked, tot) = Rank(df, "rk", o, g.map(col), w)
+      assert(rows(ranked) == rows(df.withColumn("rk", sum(wc).over(frame) - wc)), s"$name, $conf")
+      val exp = df.groupBy(g.map(col): _*).agg(sum(wc).as("t")).filter(col("t").isNotNull)
+        .collect().map(r => Row.fromSeq(r.toSeq.init) -> r.getLong(g.size)).toMap
+      assert(tot == exp, s"$name totals, $conf")
     }
+  }
+
+  test("Rank throws on a duplicate (group, order) key") {
+    val df = spark.range(0, 1000, 1, 7).select((col("id") % 2).as("g"), col("id").as("id"))
+    // unique per group, though the order column repeats across groups
+    Rank(df.select(col("g"), (col("id") / 2).cast("long").as("o")), "rk", Seq(col("o")), Seq(col("g")))
+    val e = intercept[Exception](
+      Rank(df.select(col("g"), (col("id") / 4).cast("long").as("o")), "rk", Seq(col("o")), Seq(col("g"))))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.isInstanceOf[IllegalArgumentException] && c.getMessage.contains("duplicate key")),
+      e.toString)
   }
 
   test("q146 gives the same rows with exchange reuse off") {

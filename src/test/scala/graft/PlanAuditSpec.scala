@@ -58,7 +58,6 @@ class PlanAuditSpec extends SparkSpec {
     "q204_mutual_nn" -> "brute bipartite scoring baseline: one population broadcasts, the other streams once (q32/q54 banded-LSH/IVF are the sublinear candidate path); the mutual gate is two argmax folds + an id equi-join",
     "q206_share_of_parent" -> "scalar join: the 1-row grand-total broadcasts into the ≤(1+|regions|+|nations|)-row cell report",
     "q208_equidepth_hist" -> "corpus-scalar join: the 1-row row-total broadcasts into the value-domain cell bucketing",
-    "q210_monetary_unit_sample" -> "corpus-scalar join: the 1-row sampling-interval scalar broadcasts into the selection scan",
     "q213_priority_sample" -> "scalar join: the 1-row τ = (k+1)-th priority broadcasts into the k-row kept sample's Horvitz-Thompson estimates",
     "q216_linear_interp" -> "calendar-spine cross: the generated day sequence broadcasts against the |types|-row key set (q52's shape); interpolation windows run on (type, day) cells",
     "q218_sketch_algebra" -> "sketch-pair cross: both sides are the |sources|-row 64-int KMV synopsis table — pairwise algebra never rescans the corpus",
@@ -92,6 +91,7 @@ class PlanAuditSpec extends SparkSpec {
     "q257_ndcg_eval" -> "q250's shape: the 20 query vectors broadcast; corpus streams once; the |labels|-cell relevant-count table broadcasts back",
     "q265_bradley_terry" -> "cell-table joins: the |types|² pair spine is a broadcast self-cross of the |types|-row type list; each MM round broadcasts |types| strength cells and a 1-row normalizer",
     "q268_brier_decomp" -> "corpus-scalar join: the 1-row (N, K, Σsq) totals broadcast into the ≤10 decile cells (q166's ECE shape)",
+    "q272_pass_at_k" -> "corpus-scalar join: the 1-row pass@1/pass@3 means broadcast into the task-cardinality estimate cells",
     "q271_fairness_audit" -> "corpus-scalar join: the 1-row global confusion reference broadcasts into the |nations| group cells",
     "q273_partition_agree" -> "scalar-scalar joins: three 1-row pair-count folds cross-combine into the single metrics row",
     "q275_cuped" -> "corpus-scalar joins: the 1-row midpoint, theta, and variance-ratio scalars broadcast into user-cell scans",
@@ -124,12 +124,12 @@ class PlanAuditSpec extends SparkSpec {
   // holds every row it windows); ROADMAP item 4 gives each one's bound
   private val globalWindowAllowed: Set[String] = Set(
     "q95_token_budget", "q125_hybrid_rrf", "q140_training_build", "q149_vocab_growth",
-    "q185_rfm_segments", "q188_conversion_delay", "q190_id_continuity",
+    "q185_rfm_segments", "q188_conversion_delay",
     "q192_seasonal_decomp", "q196_skyline", "q202_quantile_norm",
-    "q207_peak_concurrency", "q208_equidepth_hist", "q210_monetary_unit_sample",
+    "q207_peak_concurrency", "q208_equidepth_hist",
     "q213_priority_sample", "q226_stump_split", "q240_rolling_backtest",
     "q249_kaplan_meier", "q253_bh_fdr", "q262_gains_lift", "q265_bradley_terry",
-    "q266_t_closeness", "q268_brier_decomp", "q269_threshold_sweep", "q272_pass_at_k",
+    "q266_t_closeness", "q268_brier_decomp", "q269_threshold_sweep",
     "q280_logrank", "q281_qini_uplift", "q289_wilcoxon_signed_rank",
     "q290_kruskal_wallis", "q302_spearman")
 

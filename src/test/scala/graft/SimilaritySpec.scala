@@ -70,8 +70,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("q125: the distributed rank spelling is row-identical to the global one") {
     // round 13: the registered query picks a spelling by corpus size
-    // (global windows below spark.graft.rank.smallBytes, two-level/top-K
-    // above). This pins bit-equality of the two plans on the fixture,
+    // (global windows below Similarity.RankSmallBytes, 64 MiB of
+    // compressed documents, two-level/top-K above). This pins bit-equality of the two plans on the fixture,
     // so the gate can never change results — the two-level offset
     // algebra (rank_before(cell) + within-cell row_number) and the
     // top-100 TakeOrdered must reproduce the global row_number exactly.
