@@ -8,6 +8,9 @@
 # an order-dependent fold, a first() without a frame) shows up as a diff.
 #
 # Usage: scripts/determinism.sh [sfDir] [outA] [outB]
+# With SPARK_GRAFT_ONLY=q1,q2 set, both Verify runs dump only those
+# queries and exactly those are compared; otherwise every registered one.
+# A query missing from either run (it failed there) counts as a diff.
 set -euo pipefail
 SF_DIR="${1:-/root/testdata/sf0.1}"
 OUT_A="${2:-/tmp/det_a}"
@@ -21,12 +24,14 @@ SPARK_GRAFT_CPUS=5 sbt -batch "runMain graft.Verify $SF_DIR $OUT_B" 2>&1 | grep 
 
 echo "== diff =="
 python3 - "$OUT_A" "$OUT_B" <<'EOF'
-import json, sys
+import json, os, sys
 import duckdb
 
 out_a, out_b = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
-names = sorted(json.load(open(f"{out_a}/oracle_sql.json")))
+# graft.Verify's filter: unset, it selects every query
+only = {n.strip() for n in os.environ.get("SPARK_GRAFT_ONLY", "").split(",")} - {""}
+names = sorted(only or json.load(open(f"{out_a}/oracle_sql.json")))
 
 
 def canon(path):

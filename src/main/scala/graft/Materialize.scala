@@ -4,17 +4,20 @@ import scala.collection.mutable
 import scala.reflect.ClassTag
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graft.PlanShim
 import org.apache.spark.sql.types.LongType
 
-/** The engine's one door to eager checkpoints; the [[scope]] a snapshot
-  * is made in releases it. A scalar read right after a checkpoint (a
-  * convergence sum, a per-round max, a row count) would otherwise cost
-  * a second job over rows the checkpoint job had just visited: [[fold]]
-  * has each partition fold its own rows while they are cached and the
-  * driver combine the few results (REPOSE's local-then-global pattern).
+/** The engine's one door to eager checkpoints and to driver collects
+  * ([[bounded]]); the [[scope]] a snapshot is made in releases it. A
+  * scalar read right after a checkpoint (a convergence sum, a per-round
+  * max, a row count) would otherwise cost a second job over rows the
+  * checkpoint job had just visited: [[fold]] has each partition fold
+  * its own rows while they are cached and the driver combine the few
+  * results (REPOSE's local-then-global pattern).
   *
   * The per-partition results come from `runJob`, which keeps exactly
   * one result per partition however often a task is retried — an
@@ -27,6 +30,35 @@ object Materialize {
     val (snap, parts) = PlanShim.checkpointFold(df, f)
     scopes.get.headOption.foreach(_(PlanShim.checkpointRdd(snap).id) = df.sparkSession.sparkContext)
     (snap, parts)
+  }
+
+  /** All of `df`'s rows on the driver from one collect (plus AQE's
+    * shuffle map stages), for a table whose row count its domain bounds
+    * (hosts, dimensions, histogram cells), not its data. More than
+    * `maxRows` rows throws IllegalStateException naming the cap: the
+    * domain outgrew the driver-side algorithm, which must not go on
+    * with part of the table. */
+  def bounded(df: DataFrame, maxRows: Int): Array[Row] = {
+    // Dataset.collect's plan, one runJob under one SQL execution id, but
+    // each task stops after maxRows + 1 rows and the driver keeps a
+    // partition's rows only while the running total is within the cap
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      val rdd = qe.executedPlan.execute()
+      val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
+      var total = 0L
+      df.sparkSession.sparkContext.runJob(rdd,
+        (it: Iterator[InternalRow]) => it.take(maxRows + 1).map(_.copy()).toArray,
+        (i: Int, part: Array[InternalRow]) => {
+          total += part.length
+          if (total <= maxRows) parts(i) = part
+        })
+      if (total > maxRows) throw new IllegalStateException(
+        s"bounded collect: more than $maxRows rows, the cap for this domain-bounded table")
+      parts.flatten
+    }
+    val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+    rows.map(toRow)
   }
 
   /** Eager local checkpoint of `df`, for when no scalar is wanted. */

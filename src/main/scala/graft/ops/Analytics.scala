@@ -45,11 +45,10 @@ object Analytics {
         when(col(cName) >= lo(i) && col(cName) <= hi(i),
           expr(s"($cName - ${lo(i)}L) div ${wd}L")).otherwise(lit(null))
       }
-      val cells = v
+      val cells = Materialize.bounded(v
         .select(posexplode(array(bucketCols: _*)).as(Seq("ti", "b")), w.as("w"))
         .filter(col("b").isNotNull)
-        .groupBy("ti", "b").agg(sum(col("w")).as("n"))
-        .collect()
+        .groupBy("ti", "b").agg(sum(col("w")).as("n")), (open.size * B).toInt)
         .groupBy(_.getInt(0))
         .map { case (ti, rows) =>
           ti -> rows.map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1) }
@@ -1620,19 +1619,19 @@ object Analytics {
       }
       while (hi - lo >= 65536L) {
         val width = (hi - lo) / 65536L + 1L
-        val counts = df.filter(col(c) >= lo && col(c) <= hi)
+        val counts = Materialize.bounded(df.filter(col(c) >= lo && col(c) <= hi)
           .groupBy(expr(s"($c - $lo) div $width").as("b"))
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+          .agg(count(lit(1)).as("n")), 65536)
+          .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
         val (b, rem) = cellPick(counts)
         kk = rem
         val newLo = lo + b * width
         hi = math.min(hi, newLo + width - 1)
         lo = newLo
       }
-      val exact = df.filter(col(c) >= lo && col(c) <= hi)
-        .groupBy(col(c)).agg(count(lit(1)).as("n"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+      val exact = Materialize.bounded(df.filter(col(c) >= lo && col(c) <= hi)
+        .groupBy(col(c)).agg(count(lit(1)).as("n")), 65536) // range width < 65536
+        .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
       (cellPick(exact)._1, n)
     }
     val cells = Tables.orders(s, d)

@@ -1,8 +1,13 @@
 package graft.ops
 
-import graft.{Materialize, Q, Rank, Tables}
-import org.apache.spark.sql.DataFrame
+import java.lang.Math.{addExact, multiplyExact, subtractExact}
+
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.{Materialize, Q, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Link-graph centrality for corpus curation — the host-rank weighting
   * step of a web-scale pipeline (crawl frontiers and pretraining
@@ -11,32 +16,30 @@ import org.apache.spark.sql.functions._
   * at 100 TB: the ONLY big-data stage is the corpus scan that extracts
   * per-doc outlinks and partially aggregates them into a host→host
   * weighted edge list (map-side combine leaves ≤ hosts² rows per task
-  * in the shuffle); the power iteration itself runs on the tiny host
-  * graph (hosts ≪ docs at any scale) with broadcast joins only. All
-  * rank arithmetic is integer (micro-units, floor division) so the
-  * DuckDB oracle replays the iteration bit-for-bit.
+  * in the shuffle). The host graph's size is bounded by its domain
+  * (hosts ≪ docs at any scale), so [[hostGraph]] collects it in two
+  * capped collects and the seven host-graph queries (q128, q160, q198,
+  * q209, q211, q212, q274) run their rounds on the driver in exact
+  * `Long` arithmetic — each round there costs microseconds where a
+  * distributed round costs a stage — and return a one-partition local
+  * relation. All rank arithmetic is integer (micro-units, floor
+  * division; an overflow throws, as ANSI BIGINT arithmetic does) so the
+  * DuckDB oracle replays every round bit-for-bit. The document-graph
+  * queries (q173, q227, q244, q284, q294) have a node per document and
+  * stay distributed.
   */
 object Graph {
 
-  /** Damped PageRank power iteration in integer micro-units:
-    * r'(h) = 150000 + (850 * Σ_{g→h} w(g,h)·(r(g) div outdeg(g))) div 1000,
-    * starting from r = 1_000_000, run `iters` rounds (statically
-    * unrolled into the plan — no driver loop over data). `hosts` is
-    * (hid), `edges` (src, dst, w), `deg` (hid, outdeg); all three are
-    * host-cardinality (tiny), hence the explicit broadcasts. */
-  def powerIterate(hosts: DataFrame, edges: DataFrame, deg: DataFrame,
-      iters: Int): DataFrame = {
-    var r = hosts.select(col("hid"), lit(1000000L).as("r"))
+  /** Damped PageRank rounds in integer micro-units from ranks `r0`:
+    * r'(h) = base(h) + (850 · Σ_{g→h} w·(r(g) div outdeg(g))) div 1000
+    * over weighted edges (src, dst, w), hosts indexed by hid. */
+  def powerIterate(r0: IndexedSeq[Long], edges: Seq[(Int, Int, Long)],
+      outdeg: IndexedSeq[Long], iters: Int)(base: Int => Long): IndexedSeq[Long] = {
+    var r = r0
     (1 to iters).foreach { _ =>
-      val contrib = edges
-        .join(broadcast(r.select(col("hid").as("src"), col("r").as("pr"))), "src")
-        .join(broadcast(deg.select(col("hid").as("src"), col("outdeg"))), "src")
-        .groupBy("dst")
-        .agg(sum(expr("w * (pr div outdeg)")).as("c"))
-      r = hosts.select("hid")
-        .join(contrib.select(col("dst").as("hid"), col("c")), Seq("hid"), "left")
-        .select(col("hid"),
-          expr("CAST(150000 AS BIGINT) + (850 * coalesce(c, CAST(0 AS BIGINT))) div 1000").as("r"))
+      val c = new Array[Long](r.length)
+      edges.foreach { case (g, h, w) => c(h) = addExact(c(h), multiplyExact(w, r(g) / outdeg(g))) }
+      r = r.indices.map(h => addExact(base(h), multiplyExact(850L, c(h)) / 1000))
     }
     r
   }
@@ -91,13 +94,9 @@ object Graph {
          |FROM hosts h JOIN r3 r USING (hid)
          |ORDER BY rank_micro DESC, host"""
     }) { (s, d) =>
-    val (hosts, links, _) = hostLinkGraph(s, d)
-    val edges = links.groupBy("src", "dst").agg(count(lit(1)).as("w"))
-    val deg = hosts.select(col("hid"), (col("n_docs") * 3).as("outdeg"))
-    val ranks = powerIterate(hosts.select("hid"), edges, deg, iters = 3)
-    hosts.join(ranks, "hid")
-      .select(col("source").as("host"), col("n_docs"), col("r").as("rank_micro"))
-      .orderBy(col("rank_micro").desc, col("host"))
+    val g = hostGraph(s, d)
+    val r = powerIterate(IndexedSeq.fill(g.n)(1000000L), g.links, g.outdeg, iters = 3)(_ => 150000L)
+    local(s, descending(r).map(h => (g.source(h), g.nDocs(h), r(h))), "host", "n_docs", "rank_micro")
   }
 
   /** q160 — triangle counting on the q128 host graph (undirected,
@@ -113,10 +112,10 @@ object Graph {
     * the oriented edge set — rank order guarantees the closure edge is
     * oriented (v1, v2), so one equi-join suffices.
     *
-    * Scale: rank/degree tables are node-cardinality (broadcast); the
-    * wedge join is the only super-linear step and the orientation bound
-    * is precisely what keeps it feasible — that bound is the operator.
-    * Oracle replays the same construction relationally. */
+    * Scale: the wedge enumeration is the only super-linear step and the
+    * orientation bound is precisely what keeps it feasible — that bound
+    * is the operator. It runs on the driver over [[hostGraph]]; the
+    * oracle replays the same construction relationally. */
   val q160TriangleCount: Q = Q(
     "q160_triangle_count",
     """WITH d AS (
@@ -163,39 +162,18 @@ object Graph {
       |SELECT h.source AS host, CAST(COALESCE(c.n_triangles, 0) AS BIGINT) AS n_triangles
       |FROM hosts h LEFT JOIN credit c USING (hid)
       |ORDER BY host""") { (s, d) =>
-    val (hosts, links, _) = hostLinkGraph(s, d)
-    // edge-cardinality tables referenced multiply below — materialize
-    // once (ue feeds degree + orientation; o feeds both wedge legs and
-    // the closing-edge probe)
-    val ue = links.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .transform(Materialize.snapshot)
-    val degv = ue.select(col("a").as("v")).unionAll(ue.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("dg"))
-    val rk = degv.select(col("v"), (col("dg") * 1000000000L + col("v")).as("r"))
-    val o = ue
-      .join(broadcast(rk.select(col("v").as("a"), col("r").as("ra"))), "a")
-      .join(broadcast(rk.select(col("v").as("b"), col("r").as("rb"))), "b")
-      .select(
-        when(col("ra") < col("rb"), col("a")).otherwise(col("b")).as("src"),
-        when(col("ra") < col("rb"), col("b")).otherwise(col("a")).as("dst"),
-        greatest(col("ra"), col("rb")).as("dst_r"))
-      .transform(Materialize.snapshot)
-    val w = o.as("x").join(o.as("y"),
-        col("x.src") === col("y.src") && col("x.dst_r") < col("y.dst_r"))
-      .select(col("x.dst").as("v1"), col("y.dst").as("v2"), col("x.src").as("u"))
-    val tri = w.join(o.select(col("src").as("v1"), col("dst").as("v2")),
-      Seq("v1", "v2"), "left_semi")
-    val credit = tri.select(col("u").as("hid"))
-      .unionAll(tri.select(col("v1").as("hid")))
-      .unionAll(tri.select(col("v2").as("hid")))
-      .groupBy("hid").agg(count(lit(1)).as("n_triangles"))
-    hosts.join(credit, Seq("hid"), "left")
-      .select(col("source").as("host"),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
-      .orderBy("host")
+    val g = hostGraph(s, d)
+    val ue = g.undirected
+    val dg = degrees(g.n, ue)
+    // the oracle's rank dg·10⁹ + v, as a (degree, id) comparison
+    def below(a: Int, b: Int) = dg(a) < dg(b) || dg(a) == dg(b) && a < b
+    val o = ue.map { case (a, b) => if (below(a, b)) (a, b) else (b, a) }
+    val closing = o.toSet
+    val nTri = new Array[Long](g.n)
+    for ((u, out) <- o.groupMap(_._1)(_._2); v1 <- out; v2 <- out
+        if below(v1, v2) && closing((v1, v2)))
+      Seq(u, v1, v2).foreach(x => nTri(x) += 1)
+    local(s, (0 until g.n).map(h => (g.source(h), nTri(h))), "host", "n_triangles")
   }
 
   /** q173 — community detection by synchronous label propagation, on a
@@ -317,16 +295,14 @@ object Graph {
     * a deterministic fixture stand-in for a curated whitelist).
     * Each round relaxes the frontier through the edge list and folds
     * with MIN — d_{i+1}(v) = min(d_i(v), 1 + min over in-edges) — so a
-    * node keeps its earliest discovery; 3 rounds are statically
-    * unrolled into the plan (no driver loop over data) — the depth is
+    * node keeps its earliest discovery; 3 rounds run — the depth is
     * the SEMANTIC radius ("within 3 hops"), not a convergence budget:
     * the answer is complete at any diameter by definition — and the oracle
     * replays them as chained CTEs.
     *
     * Scale: same posture as q128 — the only corpus-cardinality stage is
     * the link-extraction scan; distances and frontiers are
-    * host-cardinality, every iteration joins edges against a BROADCAST
-    * distance table, and the per-round fold is a host-keyed MIN. Hosts
+    * host-cardinality and relax on the driver over [[hostGraph]]. Hosts
     * not reached within 3 hops are absent (inner join), matching the
     * oracle. */
   val q198MultiSourceBfs: Q = Q(
@@ -369,19 +345,13 @@ object Graph {
          |FROM hosts h JOIN d3 r USING (hid)
          |ORDER BY host"""
     }) { (s, d) =>
-    val (hosts, links, _) = hostLinkGraph(s, d)
-    val edges = links.distinct()
-    var dist = hosts.filter(col("hid") % 7 === 0)
-      .select(col("hid"), lit(0L).as("dist"))
+    val g = hostGraph(s, d)
+    var dist = (0 until g.n).filter(_ % 7 == 0).map(_ -> 0L).toMap
     (1 to 3).foreach { _ =>
-      val relaxed = edges
-        .join(broadcast(dist.select(col("hid").as("src"), col("dist"))), "src")
-        .select(col("dst").as("hid"), (col("dist") + 1L).as("dist"))
-      dist = dist.unionByName(relaxed).groupBy("hid").agg(min("dist").as("dist"))
+      val relaxed = g.links.flatMap { case (a, b, _) => dist.get(a).map(x => b -> (x + 1)) }
+      dist = (dist.toSeq ++ relaxed).groupMapReduce(_._1)(_._2)(math.min)
     }
-    hosts.join(dist, "hid")
-      .select(col("source").as("host"), col("dist").as("hops"))
-      .orderBy("host")
+    local(s, dist.toSeq.sorted.map { case (h, hops) => (g.source(h), hops) }, "host", "hops")
   }
 
   /** q209 — degree assortativity of the host link graph: the Pearson
@@ -395,9 +365,8 @@ object Graph {
     * integer ratio under the FLOOR-milli pattern.
     *
     * Scale: q160's link extraction is the only corpus-cardinality
-    * stage; degrees are node-cardinality (broadcast into the edge
-    * list), and the moment rollup is one collapsing aggregate over
-    * edges. */
+    * stage; the degrees and the moment rollup over the edges run on the
+    * driver over [[hostGraph]]. */
   val q209Assortativity: Q = Q(
     "q209_assortativity",
     """WITH d AS (
@@ -439,50 +408,96 @@ object Graph {
       |    ELSE CAST(FLOOR((n*sxy - sx*sx) * 1000.0 / (n*sxx - sx*sx)) AS BIGINT)
       |  END AS assortativity_milli
       |FROM m""") { (s, d) =>
-    val (hosts, links, _) = hostLinkGraph(s, d)
-    val ue = links.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .transform(Materialize.snapshot) // edge table read by the degree agg and both joins
-    val degv = ue.select(col("a").as("v")).unionByName(ue.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("dg"))
-    val withDeg = ue
-      .join(broadcast(degv.select(col("v").as("a"), col("dg").as("da"))), "a")
-      .join(broadcast(degv.select(col("v").as("b"), col("dg").as("db"))), "b")
-    val pts = withDeg.select(col("da").as("x"), col("db").as("y"))
-      .unionByName(withDeg.select(col("db").as("x"), col("da").as("y")))
-    val m = pts.agg(count(lit(1)).as("n"), sum("x").as("sx"),
-      sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y")).as("sxy"))
-    m.select(expr("n div 2").as("n_edges"),
-        floor(col("sx").cast("double") * 1000 / col("n")).cast("long")
-          .as("mean_end_degree_milli"),
-        when(col("n") * col("sxx") - col("sx") * col("sx") === 0,
-          lit(null).cast("long"))
-          .otherwise(floor((col("n") * col("sxy") - col("sx") * col("sx")) *
-            lit(1000.0) / (col("n") * col("sxx") - col("sx") * col("sx")))
-            .cast("long")).as("assortativity_milli"))
+    val g = hostGraph(s, d)
+    val ue = g.undirected
+    val dg = degrees(g.n, ue)
+    // both orientations of every edge: Σx = Σy and Σx² = Σy²
+    val n = 2L * ue.size
+    val (sx, sxx, sxy) = ue.foldLeft((0L, 0L, 0L)) { case ((sx, sxx, sxy), (a, b)) =>
+      val (x, y) = (dg(a), dg(b))
+      (addExact(sx, x + y),
+        addExact(sxx, addExact(multiplyExact(x, x), multiplyExact(y, y))),
+        addExact(sxy, multiplyExact(2L, multiplyExact(x, y))))
+    }
+    // as SQL: no edge leaves every moment NULL
+    val den = subtractExact(multiplyExact(n, sxx), multiplyExact(sx, sx))
+    val mean = Option.when(n > 0)(math.floor(sx.toDouble * 1000 / n).toLong)
+    val assort = Option.when(n > 0 && den != 0)(math.floor(
+      subtractExact(multiplyExact(n, sxy), multiplyExact(sx, sx)).toDouble * 1000.0 / den).toLong)
+    local(s, Seq((n / 2, mean, assort)),
+      "n_edges", "mean_end_degree_milli", "assortativity_milli")
   }
 
-  /** The q128 host link graph, shared by every host-graph query: hosts
-    * (source, n_docs, hid) = distinct `source` values ranked to dense
-    * ids, links (src, dst) = 3 md5-derived directed edges per document
-    * (multi-edges kept — callers dedup as their semantics require), and
-    * the host count. The ONLY corpus-cardinality stage is the
-    * link-extraction scan; hosts are broadcast and the host count is a
-    * literal (Rank returns it). */
-  private def hostLinkGraph(s: org.apache.spark.sql.SparkSession, d: String)
-      : (DataFrame, DataFrame, Long) = {
-    val docs = Tables.documents(s, d).select(col("source"), md5(col("text")).as("hx"))
-    val (hosts, tot) = Rank(
-      docs.groupBy("source").agg(count(lit(1)).as("n_docs")), "hid", Seq(col("source")))
-    val nh = tot.values.sum
-    val links = docs
-      .join(broadcast(hosts.select("source", "hid")), "source")
-      .select(col("hid").as("src"), explode(array((0 until 3).map(j =>
-        conv(substring(col("hx"), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
-    (hosts, links, nh)
+  /** The q128 host link graph on the driver. Host `hid` is `source(hid)`
+    * with `nDocs(hid)` documents, hids in the oracle's `ROW_NUMBER()
+    * OVER (ORDER BY source)` order, so hid order is host order; `links`
+    * holds each (src, dst, w) cell: w of the 3 md5-derived links per
+    * document go from src's documents to dst. A NULL source is a host
+    * without out-links, and a NULL text gives no link, as the oracle's
+    * inner join and NULL link target drop them. */
+  private[graft] final case class HostGraph(source: IndexedSeq[String],
+      nDocs: IndexedSeq[Long], links: Seq[(Int, Int, Long)]) {
+    def n: Int = source.length
+    /** 3 links per document. */
+    def outdeg: IndexedSeq[Long] = nDocs.map(multiplyExact(3L, _))
+    /** The distinct loop-free directed edges. */
+    def arcs: Seq[(Int, Int)] = links.collect { case (a, b, _) if a != b => (a, b) }
+    /** The distinct loop-free undirected edges (a, b), a < b. */
+    def undirected: Seq[(Int, Int)] = arcs.map { case (a, b) => (a min b, a max b) }.distinct
   }
+
+  /** Most rows either [[hostGraph]] collect may bring to the driver: the
+    * hosts, then the link cells, at most hosts × min(hosts, 256) (a link
+    * target is one md5 byte mod the host count). Every graph of up to
+    * 256 hosts fits. */
+  private val HostGraphCap = 1 << 16
+
+  /** The oracle's host order: UTF-8 bytes (Spark's and DuckDB's string
+    * order; Java's `String.compareTo` compares UTF-16 units), NULL last
+    * as in DuckDB's ORDER BY. */
+  private[graft] val HostOrder: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      if (a == null || b == null) java.lang.Boolean.compare(a == null, b == null)
+      else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+  }
+
+  /** The q128 host graph from two bounded collects: the per-`source`
+    * document counts, which give the hids and the host count, then the
+    * link cells with the host count as a literal. The md5 link
+    * extraction is the ONLY corpus-cardinality stage; it stays
+    * distributed and its (source, dst) cells collapse map-side. */
+  private[graft] def hostGraph(s: SparkSession, d: String): HostGraph = {
+    val docs = Tables.documents(s, d)
+    val hosts = Materialize.bounded(docs.groupBy("source").agg(count(lit(1))), HostGraphCap)
+      .map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)(HostOrder)
+    val nh = hosts.length
+    val hid = hosts.indices.filter(hosts(_)._1 != null).map(h => hosts(h)._1 -> h).toMap
+    val cells = docs.filter(col("source").isNotNull)
+      .select(col("source"), explode(array((0 until 3).map(j =>
+        conv(substring(md5(col("text")), 2 * j + 1, 2), 16, 10).cast("long") % nh): _*)).as("dst"))
+      .filter(col("dst").isNotNull)
+      .groupBy("source", "dst").agg(count(lit(1)))
+    val links = Materialize.bounded(cells, HostGraphCap)
+      .map(r => (hid(r.getString(0)), r.getLong(1).toInt, r.getLong(2))).toSeq
+    HostGraph(hosts.map(_._1).toIndexedSeq, hosts.map(_._2).toIndexedSeq, links)
+  }
+
+  /** Each node's degree over undirected edges. */
+  private def degrees(n: Int, ue: Seq[(Int, Int)]): Array[Long] = {
+    val dg = new Array[Long](n)
+    ue.foreach { case (a, b) => dg(a) += 1; dg(b) += 1 }
+    dg
+  }
+
+  /** Hids by `score` descending, then by host (hid order is host order). */
+  private def descending(score: IndexedSeq[Long]): Seq[Int] =
+    score.indices.sortBy(h => (score(h), h))(Ordering.Tuple2(Ordering.Long.reverse, Ordering.Int))
+
+  /** A host-graph query's rows as a one-partition local relation, so a
+    * write of it makes one file. */
+  private def local[A <: Product : TypeTag](s: SparkSession, rows: Seq[A],
+      names: String*): DataFrame =
+    s.createDataFrame(rows).toDF(names: _*).coalesce(1)
 
   /** The shared oracle CTE prefix deriving hosts + links (see q128). */
   private val hostGraphSql: String =
@@ -507,8 +522,7 @@ object Graph {
     * filter behind spam-farm isolation and community-seed selection
     * (a node's coreness is a robustness measure its raw degree isn't:
     * a hub wired only to leaves peels away at k=2). Four peel rounds
-    * are statically unrolled (no driver loop over data) and
-    * kcoreSurvivors ASSERTS the fixpoint on the final degree table —
+    * run and kcoreSurvivors ASSERTS the fixpoint on the final degree table —
     * every survivor ≥ k, the exact k-core condition — so the answer is
     * provably the true 3-core at any scale: a graph whose peel depth
     * exceeds the unroll fails loud instead of returning a superset.
@@ -516,10 +530,8 @@ object Graph {
     *
     * Scale posture: q128's — the corpus scan that extracts links is
     * the only big-data stage; the alive set and per-round degree
-    * tables are host-cardinality, so every round is two BROADCAST
-    * semi-joins of the edge list against the alive set plus one
-    * host-keyed count. Edges are localCheckpoint'd once and reused by
-    * all rounds. */
+    * tables are host-cardinality and peel on the driver over
+    * [[hostGraph]]. */
   val q211KCore: Q = Q(
     "q211_kcore",
     {
@@ -556,62 +568,31 @@ object Graph {
          |JOIN hosts h ON h.hid = a4.v
          |ORDER BY host"""
     }) { (s, d) =>
-    val (hosts, links, _) = hostLinkGraph(s, d)
-    val ue = links.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    // edge table read by every peel round; the result no longer needs it
-    val und = Materialize.snapshot(ue.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(ue.select(col("b").as("u"), col("a").as("v"))))
-    val core =
-      try kcoreSurvivors(hosts.select(col("hid").as("v")), und, k = 3, rounds = 4)
-      finally Materialize.release(und)
-    core.join(hosts.select(col("hid").as("v"), col("source")), "v")
-      .select(col("source").as("host"), col("core_degree"))
-      .orderBy("host")
+    val g = hostGraph(s, d)
+    val und = g.undirected.flatMap { case (a, b) => Seq((a, b), (b, a)) }
+    val core = kcoreSurvivors(0 until g.n, und, k = 3, rounds = 4)
+    local(s, core.toSeq.sorted.map { case (h, dg) => (g.source(h), dg) }, "host", "core_degree")
   }
 
-  /** Bounded k-core peeling: from `nodes` (v) over undirected edges
-    * `und` (u, v — BOTH directions present), delete every node with
-    * fewer than k surviving neighbors, `rounds` times; returns the
-    * survivors with their induced degree (v, core_degree). Alive sets
-    * are node-cardinality → broadcast; `und` is scanned once per round
-    * (callers snapshot it). Only the returned frame stays persisted.
+  /** Bounded k-core peeling: from `nodes` over undirected edges `und`
+    * (u, v — BOTH directions present), delete every node with fewer
+    * than k surviving neighbors, `rounds` times; returns the survivors
+    * with their induced degree (v → core_degree).
     *
     * Convergence guard (round-8 VERDICT item 6): the k-core FIXPOINT
     * is exactly "every survivor's induced degree ≥ k", and the final
     * degree table is computed anyway — so the helper asserts it and
     * FAILS LOUD when the unroll was too shallow for the graph's peel
     * depth (a 100x-diameter graph at the fixture's round budget),
-    * instead of silently returning a non-core superset. The count is
-    * folded into the final degree table's checkpoint job: no extra job,
-    * no extra peel round. */
-  private[graft] def kcoreSurvivors(nodes: DataFrame, und: DataFrame,
-      k: Int, rounds: Int): DataFrame = {
-    def aliveDeg(alive: DataFrame): DataFrame = und
-      .join(broadcast(alive.select(col("v").as("u"))), "u")
-      .join(broadcast(alive), "v")
-      .groupBy("u").agg(count(lit(1)).as("dg"))
-    var alive = nodes.select("v")
-    (1 to rounds).foreach { r =>
-      // snapshot each round's alive set (round 12, q212's fix applied
-      // here too): aliveDeg references `alive` TWICE (u- and v-side
-      // broadcasts), so a lazy chain re-evaluates round r-1 twice per
-      // reference — ~2^rounds evaluations of round 1 by the fixpoint
-      // guard. The set is host-cardinality; the snapshot is the
-      // per-iteration staging any iterative graph algorithm needs, and
-      // round r-1's is released once round r's has materialized.
-      val next = Materialize.snapshot(
-        aliveDeg(alive).filter(col("dg") >= k).select(col("u").as("v")))
-      if (r > 1) Materialize.release(alive)
-      alive = next
-    }
-    // the guard's count comes out of fin's own checkpoint job
-    val finDeg = aliveDeg(alive).select(col("u").as("v"), col("dg").as("core_degree"))
-    val di = finDeg.schema.fieldIndex("core_degree")
-    val (fin, stray) = Materialize.count(finDeg)(_.getLong(di) < k)
-    if (rounds > 0) Materialize.release(alive)
+    * instead of silently returning a non-core superset. */
+  private[graft] def kcoreSurvivors(nodes: Seq[Int], und: Seq[(Int, Int)],
+      k: Int, rounds: Int): Map[Int, Long] = {
+    def aliveDeg(alive: Set[Int]): Map[Int, Long] =
+      und.filter { case (u, v) => alive(u) && alive(v) }.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    var alive = nodes.toSet
+    (1 to rounds).foreach(_ => alive = aliveDeg(alive).filter(_._2 >= k).keySet)
+    val fin = aliveDeg(alive)
+    val stray = fin.count(_._2 < k)
     if (stray != 0) throw new IllegalStateException(
       s"k-core peel not at fixpoint after $rounds rounds: $stray survivors " +
         s"still below degree $k — raise the round budget for this graph")
@@ -631,9 +612,8 @@ object Graph {
     * identical four half-rounds as chained CTEs.
     *
     * Scale posture: link extraction is the only corpus-cardinality
-    * stage; score tables are host-cardinality and BROADCAST into the
-    * edge list; each half-round's max comes back from its checkpoint
-    * job and enters the rescale as a literal. */
+    * stage; score tables are host-cardinality and the half-rounds run
+    * on the driver over [[hostGraph]]. */
   val q212Hits: Q = Q(
     "q212_hits",
     s"""WITH d AS (
@@ -670,53 +650,33 @@ object Graph {
        |LEFT JOIN a2 ON a2.hid = hs.hid
        |LEFT JOIN h2 ON h2.hid = hs.hid
        |ORDER BY auth_ppm DESC, host""".stripMargin) { (s, d) =>
-    val (hosts, links, _) = hostLinkGraph(s, d)
-    val edges = links.filter(col("src") =!= col("dst")).distinct()
-      .transform(Materialize.snapshot) // read by all four half-rounds
-    hitsScores(hosts.select("hid"), edges, rounds = 2)
-      .join(hosts.select(col("hid"), col("source")), "hid")
-      .select(col("source").as("host"), col("auth_ppm"), col("hub_ppm"))
-      .orderBy(col("auth_ppm").desc, col("host"))
+    val g = hostGraph(s, d)
+    val (auth, hub) = hitsScores(g.n, g.arcs, rounds = 2)
+    local(s, descending(auth).map(h => (g.source(h), auth(h), hub(h))),
+      "host", "auth_ppm", "hub_ppm")
   }
 
-  /** Max-normalized integer HITS: from `hosts` (hid) over directed
-    * `edges` (src, dst — distinct, loop-free; callers localCheckpoint),
-    * run `rounds` full rounds of a(v) = Σ h(u), rescale to ppm of max,
-    * h(u) = Σ a(v), rescale — returning (hid, auth_ppm, hub_ppm) with
-    * 0 for hosts no edge reaches. Score tables are node-cardinality →
-    * broadcast into the edge list. */
-  private[graft] def hitsScores(hosts: DataFrame, edges: DataFrame,
-      rounds: Int): DataFrame = {
-    // One max-normalized half-round: fold `score` through the edge list
-    // in direction (from → to), checkpoint the raw sums — the same job
-    // returns their max — then rescale to ppm of that max as a
-    // projection over the snapshot, with the max as a literal. The
-    // checkpoint makes every score table a one-shot input to the next
-    // round instead of re-deriving the whole chain per reference (on a
-    // cluster: a per-iteration checkpoint of a host-cardinality table,
-    // standard iterative-algorithm hygiene, as in connectedComponents).
-    // Each half-round's plan embeds the previous max as a literal, so
-    // the four plans differ in that constant and compile separately.
-    def halfRound(score: DataFrame, from: String, to: String): DataFrame = {
-      val raw = edges
-        .join(broadcast(score.withColumnRenamed("hid", from)), from)
-        .groupBy(col(to).as("hid")).agg(sum("x").as("raw"))
-      val (snap, mx) = Materialize.maxLong(raw, "raw")
-      snap.select(col("hid"),
-        mx.fold(lit(null).cast("long"))(m => expr(s"raw * 1000000 div $m")).as("x"))
+  /** Max-normalized integer HITS over nodes 0 until n and distinct
+    * loop-free directed `arcs` (src, dst): `rounds` full rounds of
+    * a(v) = Σ h(u), rescale to ppm of max, h(u) = Σ a(v), rescale —
+    * returning (auth_ppm, hub_ppm) by node, 0 for a node no arc reaches. */
+  private[graft] def hitsScores(n: Int, arcs: Seq[(Int, Int)],
+      rounds: Int): (IndexedSeq[Long], IndexedSeq[Long]) = {
+    // One half-round: fold `score` along each arc from → to (a node gets
+    // a sum iff an arc reaches it from a scored node), then rescale.
+    def half(score: Map[Int, Long], from: ((Int, Int)) => Int, to: ((Int, Int)) => Int) = {
+      val raw = arcs.flatMap(e => score.get(from(e)).map(to(e) -> _))
+        .groupMapReduce(_._1)(_._2)(addExact)
+      val mx = raw.values.maxOption.getOrElse(1L)
+      raw.map { case (v, x) => v -> multiplyExact(x, 1000000L) / mx }
     }
-    var h = hosts.select(col("hid"), lit(1000000L).as("x"))
-    var a: DataFrame = null
+    var h = (0 until n).map(_ -> 1000000L).toMap
+    var a = Map.empty[Int, Long]
     (1 to rounds).foreach { _ =>
-      a = halfRound(h, "src", "dst")
-      h = halfRound(a, "dst", "src")
+      a = half(h, _._1, _._2)
+      h = half(a, _._2, _._1)
     }
-    hosts.select("hid")
-      .join(a.withColumnRenamed("x", "a"), Seq("hid"), "left")
-      .join(h.withColumnRenamed("x", "h"), Seq("hid"), "left")
-      .select(col("hid"),
-        coalesce(col("a"), lit(0L)).as("auth_ppm"),
-        coalesce(col("h"), lit(0L)).as("hub_ppm"))
+    (IndexedSeq.tabulate(n)(a.getOrElse(_, 0L)), IndexedSeq.tabulate(n)(h.getOrElse(_, 0L)))
   }
 
   /** q227 — Newman modularity of the q173 labeling: the one-number
@@ -962,9 +922,8 @@ object Graph {
     * convention and the two rank columns are directly comparable —
     * 3 unrolled damped rounds, oracle as chained CTEs.
     *
-    * Scale: identical to q128 — edges are host-graph cardinality, each
-    * round is one equi-join + host-cell fold with broadcast rank/degree
-    * tables; rounds extend by re-running the same plan. */
+    * Scale: identical to q128 — edges are host-graph cardinality and
+    * the rounds run on the driver over [[hostGraph]]. */
   val q274PersonalizedPr: Q = Q(
     "q274_personalized_pr",
     {
@@ -1013,28 +972,13 @@ object Graph {
          |FROM hosts h JOIN r3 r USING (hid)
          |ORDER BY ppr_micro DESC, host"""
     }) { (s, d) =>
-    val (hosts, links, nh) = hostLinkGraph(s, d)
-    val edges = links.groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      .transform(Materialize.snapshot) // host-graph cells: every round reads it
-    val deg = hosts.select(col("hid"), (col("n_docs") * 3).as("outdeg"))
-    var r = hosts.select(col("hid"),
-      when(col("hid") === 0, lit(1000000L) * nh).otherwise(0L).as("r"))
-    (1 to 3).foreach { _ =>
-      val contrib = edges
-        .join(broadcast(r.select(col("hid").as("src"), col("r").as("pr"))), "src")
-        .join(broadcast(deg.select(col("hid").as("src"), col("outdeg"))), "src")
-        .groupBy("dst")
-        .agg(sum(expr("w * (pr div outdeg)")).as("c"))
-      r = hosts.select("hid")
-        .join(contrib.select(col("dst").as("hid"), col("c")), Seq("hid"), "left")
-        .select(col("hid"),
-          (when(col("hid") === 0, lit(150000L) * nh).otherwise(0L)
-            + expr("(850 * coalesce(c, CAST(0 AS BIGINT))) div 1000")).as("r"))
-    }
-    hosts.join(r, "hid")
-      .select(col("source").as("host"), col("n_docs"), col("r").as("ppr_micro"),
-        (col("hid") === 0).as("is_seed"))
-      .orderBy(col("ppr_micro").desc, col("host"))
+    val g = hostGraph(s, d)
+    // the seed (hid 0) holds all n·10⁶ of the mass, as q128's n hosts do
+    def seed(mass: Long)(h: Int) = if (h == 0) multiplyExact(mass, g.n.toLong) else 0L
+    val r = powerIterate(IndexedSeq.tabulate(g.n)(seed(1000000L)), g.links, g.outdeg,
+      iters = 3)(seed(150000L))
+    local(s, descending(r).map(h => (g.source(h), g.nDocs(h), r(h), h == 0)),
+      "host", "n_docs", "ppr_micro", "is_seed")
   }
 
   /** q284 — link-prediction scores over a uniform-degree document

@@ -1781,8 +1781,9 @@ object Similarity {
     // accumulate rounds run locally; the result ships back as a
     // LocalTableScan. Integer division matches both engines' `div`/`//`
     // (truncation toward zero == Java Long division; SimilaritySpec
-    // pins row-identity against the distributed unroll).
-    val covRows = q220Cov(s, d).collect() // d² cells, bounded by DIMENSION
+    // pins row-identity against the distributed unroll), and an overflow
+    // throws, as the distributed BIGINT arithmetic does.
+    val covRows = Materialize.bounded(q220Cov(s, d), Dim * Dim) // bounded by DIMENSION
     val dims = covRows.map(_.getInt(0)).distinct.sorted
     val idx = dims.zipWithIndex.toMap
     val n = dims.length
@@ -1791,13 +1792,14 @@ object Similarity {
     var v = Array.fill(n)(1000000L)
     var raw = new Array[Long](n)
     (1 to 3).foreach { _ =>
-      raw = Array.tabulate(n)(j => (0 until n).iterator.map(k => m(j)(k) * v(k)).sum)
-      val mx = raw.map(math.abs).max
-      v = raw.map(r => r * 1000000L / mx)
+      raw = Array.tabulate(n)(j =>
+        (0 until n).foldLeft(0L)((acc, k) => Math.addExact(acc, Math.multiplyExact(m(j)(k), v(k)))))
+      val mx = raw.map(Math.absExact).max
+      v = raw.map(r => Math.multiplyExact(r, 1000000L) / mx)
     }
-    val mx3 = raw.map(math.abs).max
+    val mx3 = raw.map(Math.absExact).max
     import s.implicits._
-    dims.indices.map(i => (dims(i).toLong, raw(i) * 1000000L / mx3, mx3))
+    dims.indices.map(i => (dims(i).toLong, Math.multiplyExact(raw(i), 1000000L) / mx3, mx3))
       .toDF("dim", "loading_ppm", "iter3_scale")
       .orderBy("dim")
   }
@@ -2047,9 +2049,9 @@ object Similarity {
     // q153 bounded-collect contract) and the greedy argmax replays
     // locally, exactly as SimilaritySpec's replay check always has.
     val (cand, pair) = q237Tables(s, d)
-    val candRows = cand.select("vec_id", "rel").collect()
+    val candRows = Materialize.bounded(cand.select("vec_id", "rel"), Q237K)
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val simRows = pair.collect()
+    val simRows = Materialize.bounded(pair, Q237K * (Q237K - 1))
       .map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
     var selected = Vector.empty[Long]
     val out = scala.collection.mutable.ArrayBuffer
@@ -2079,6 +2081,9 @@ object Similarity {
       .orderBy("round")
   }
 
+  /** q237's candidate count (the oracle's `LIMIT 8`). */
+  private val Q237K = 8
+
   /** q237's distributed front half: the top-8 relevance candidates (one
     * corpus scan + TakeOrdered) and their pairwise cosine cells —
     * shared by the registered query and the [[q237GreedyDistributed]]
@@ -2092,7 +2097,7 @@ object Similarity {
       .filter(col("vec_id") =!= 0)
       .select(col("vec_id"), col("v"), col("v_nrm"),
         cosPpmPre(dot(col("qv"), col("v")), col("qv_nrm"), col("v_nrm")).as("rel"))
-      .orderBy(col("rel").desc, col("vec_id")).limit(8) // TakeOrdered heap cut
+      .orderBy(col("rel").desc, col("vec_id")).limit(Q237K) // TakeOrdered heap cut
       .transform(Materialize.snapshot) // 8 candidate rows: the pair table + the collect
     val pair = cand.as("a")
       .join(broadcast(cand.select(col("vec_id").as("bid"), col("v").as("bv"),

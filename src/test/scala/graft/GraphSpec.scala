@@ -46,11 +46,9 @@ class GraphSpec extends SparkSpec {
   }
 
   test("powerIterate equals the integer formula replayed by hand") {
-    import spark.implicits._
     // A(0) <- B(1) w=2, A <- C(2) w=1; B <- A w=1; C has no in-links
-    val hosts = Seq(0L, 1L, 2L).toDF("hid")
-    val edges = Seq((1L, 0L, 2L), (2L, 0L, 1L), (0L, 1L, 1L)).toDF("src", "dst", "w")
-    val deg = Seq((0L, 1L), (1L, 2L), (2L, 1L)).toDF("hid", "outdeg")
+    val edges = Seq((1, 0, 2L), (2, 0, 1L), (0, 1, 1L))
+    val deg = IndexedSeq(1L, 2L, 1L)
 
     def ref(iters: Int): Map[Long, Long] = {
       val es = Seq((1L, 0L, 2L), (2L, 0L, 1L), (0L, 1L, 1L))
@@ -66,8 +64,8 @@ class GraphSpec extends SparkSpec {
     }
 
     Seq(1, 3).foreach { iters =>
-      val got = Graph.powerIterate(hosts, edges, deg, iters)
-        .collect().map(row => row.getLong(0) -> row.getLong(1)).toMap
+      val got = Graph.powerIterate(IndexedSeq.fill(3)(1000000L), edges, deg, iters)(_ => 150000L)
+        .zipWithIndex.map { case (r, h) => h.toLong -> r }.toMap
       assert(got == ref(iters), s"iteration mismatch at iters=$iters")
     }
     // the hand graph's qualitative truth: A collects both hosts' mass
@@ -122,30 +120,22 @@ class GraphSpec extends SparkSpec {
   }
 
   test("kcoreSurvivors: a peel CASCADE strips the tail, keeps the clique") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
     // 4-clique {0,1,2,3}; 4 hangs off (0,1) plus tail node 5; 5 also
     // links 6. Degrees: 5→? 5-(4,6)=2 <3 peels round 1; that drops 4 to
     // deg 2 → peels round 2; 6 peeled round 1 (deg 1). Fixed point =
     // the clique alone, reached only through the cascade — one pass of
     // "degree >= 3" would have kept node 4 (initial degree 3).
-    val ue = (for { i <- 0 until 4; j <- (i + 1) until 4 } yield (i.toLong, j.toLong)) ++
-      Seq((0L, 4L), (1L, 4L), (4L, 5L), (5L, 6L))
-    val und = ue.toDF("a", "b").select(col("a").as("u"), col("b").as("v"))
-      .unionAll(ue.toDF("a", "b").select(col("b").as("u"), col("a").as("v"))).cache()
-    val nodes = (0L to 6L).toDF("v")
-    val got = Graph.kcoreSurvivors(nodes, und, k = 3, rounds = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(0L -> 3L, 1L -> 3L, 2L -> 3L, 3L -> 3L),
+    val ue = (for { i <- 0 until 4; j <- (i + 1) until 4 } yield (i, j)) ++
+      Seq((0, 4), (1, 4), (4, 5), (5, 6))
+    val und = ue ++ ue.map(_.swap)
+    val got = Graph.kcoreSurvivors(0 to 6, und, k = 3, rounds = 4)
+    assert(got == Map(0 -> 3L, 1 -> 3L, 2 -> 3L, 3 -> 3L),
       s"3-core must be exactly the clique at induced degree 3, got $got")
   }
 
   test("hitsScores equals the integer max-normalized formula replayed by hand") {
-    import spark.implicits._
     // hub 0 → authorities {1, 2}; hub 3 → {1}; 1 also → 2
     val es = Seq((0L, 1L), (0L, 2L), (3L, 1L), (1L, 2L))
-    val hosts = (0L to 3L).toDF("hid")
-    val edges = es.toDF("src", "dst")
 
     def ref(rounds: Int): Map[Long, (Long, Long)] = {
       var h = Map(0L -> 1000000L, 1L -> 1000000L, 2L -> 1000000L, 3L -> 1000000L)
@@ -164,8 +154,8 @@ class GraphSpec extends SparkSpec {
       (0L to 3L).map(n => n -> (a.getOrElse(n, 0L), h.getOrElse(n, 0L))).toMap
     }
 
-    val got = Graph.hitsScores(hosts, edges, rounds = 2)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val (auth, hub) = Graph.hitsScores(4, es.map { case (u, v) => (u.toInt, v.toInt) }, rounds = 2)
+    val got = (0 until 4).map(n => n.toLong -> (auth(n), hub(n))).toMap
     assert(got == ref(2), s"got $got vs ${ref(2)}")
     // qualitative truth: 1 is the top authority (two hubs point at it
     // including the pure hub 0); 0 is the top hub (it hits both
@@ -228,27 +218,59 @@ class GraphSpec extends SparkSpec {
   // ---- round-9 convergence guards (round-8 VERDICT item 6) ----------
 
   test("kcoreSurvivors asserts the fixpoint: shallow unroll fails loud, converged peel passes") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
     // path 0-1-2 at k=2: round 0 is NOT a fixpoint (endpoints have
     // degree 1), so a zero-round 'unroll' must throw instead of
     // returning the whole path as a fake 2-core
-    val nodes = Seq(0L, 1L, 2L).toDF("v")
-    val und = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L)).toDF("u", "v")
-      .localCheckpoint()
+    val nodes = Seq(0, 1, 2)
+    val und = Seq((0, 1), (1, 0), (1, 2), (2, 1))
     val e = intercept[IllegalStateException] {
-      ops.Graph.kcoreSurvivors(nodes, und, k = 2, rounds = 0).collect()
+      ops.Graph.kcoreSurvivors(nodes, und, k = 2, rounds = 0)
     }
     assert(e.getMessage.contains("not at fixpoint"))
     // two peels reach the (empty) fixpoint: endpoints go in round 1,
     // the stranded middle in round 2 — the guard passes
     assert(ops.Graph.kcoreSurvivors(nodes, und, k = 2, rounds = 2).isEmpty)
     // a real core survives the guard intact: 4-clique at k=3
-    val cNodes = (0L to 3L).toDF("v")
-    val cUnd = (for (a <- 0L to 3L; b <- 0L to 3L if a != b) yield (a, b))
-      .toDF("u", "v").localCheckpoint()
-    val core = ops.Graph.kcoreSurvivors(cNodes, cUnd, k = 3, rounds = 1).collect()
-    assert(core.length == 4 && core.forall(_.getAs[Long]("core_degree") == 3L))
+    val cUnd = for (a <- 0 to 3; b <- 0 to 3 if a != b) yield (a, b)
+    val core = ops.Graph.kcoreSurvivors(0 to 3, cUnd, k = 3, rounds = 1)
+    assert(core.size == 4 && core.values.forall(_ == 3L))
+  }
+
+  test("host ids follow the oracle's order: UTF-8 bytes, NULL last") {
+    import spark.implicits._
+    // U+FF61 sorts after U+1F600 as UTF-16 units (0xFF61 > 0xD83D) but
+    // before it as UTF-8 bytes (0xEF < 0xF0). DuckDB 1.0 numbers these
+    // hosts a, U+FF61, U+1F600, NULL: bytes, NULL last, so the seed
+    // hid 0 is "a" and the NULL host is the last hid
+    val (a, ff61, emoji) = ("a", "\uFF61", "\uD83D\uDE00")
+    assert(ff61.compareTo(emoji) > 0)
+    val docs = Seq((emoji, "x"), (null, "y"), (a, "z"), (ff61, "w"), (a, "v"))
+      .toDF("source", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-hosts").toString
+    try {
+      docs.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val g = Graph.hostGraph(spark, dir)
+      assert(g.source == IndexedSeq(a, ff61, emoji, null))
+      assert(g.nDocs == IndexedSeq(2L, 1L, 1L, 1L))
+      // every link leaves a non-NULL host: 3 per document, 12 in all
+      assert(g.links.forall(_._1 < 3) && g.links.map(_._3).sum == 12L)
+      // the outputs sort hosts the same way, NULL last
+      val q198 = Graph.q198MultiSourceBfs.fn(spark, dir).collect().map(_.getString(0)).toSeq
+      assert(q198.head == a && q198 == q198.sortBy(identity)(Graph.HostOrder))
+      val q274 = Graph.q274PersonalizedPr.fn(spark, dir).collect()
+      assert(q274.filter(_.getBoolean(3)).map(_.getString(0)).toSeq == Seq(a))
+    } finally {
+      graft.sources.Versioned.deleteRecursively(java.nio.file.Paths.get(dir))
+    }
+  }
+
+  test("host-graph queries return one partition and hold no snapshot") {
+    val hostQueries = Seq(Graph.q128HostRank, Graph.q160TriangleCount, Graph.q198MultiSourceBfs,
+      Graph.q209Assortativity, Graph.q211KCore, Graph.q212Hits, Graph.q274PersonalizedPr)
+    hostQueries.foreach { q =>
+      val (parts, held) = Materialize.scope(q.fn(spark, sf).rdd.getNumPartitions)
+      assert(parts == 1 && held == 0, s"${q.name}: $parts partitions, $held snapshots held")
+    }
   }
 
   test("connectedComponents pointer-jumps a 1000-node chain in O(log d) rounds; a too-small cap throws") {

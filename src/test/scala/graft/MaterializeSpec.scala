@@ -45,6 +45,27 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  test("bounded under the cap returns every row from one collect") {
+    val df = spark.range(0, 1000, 1, 7).groupBy((col("id") % 50).as("k")).agg(count(lit(1)).as("n"))
+    val (got, rec) = Obs.measure(spark, "bounded-under") {
+      Materialize.bounded(df, 50).map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    }
+    assert(got == (0L until 50L).map(_ -> 20L))
+    // AQE's shuffle map stage, then the one collect
+    assert(rec.jobs.size == 2, rec.jobs)
+    assert(Materialize.bounded(df.filter(lit(false)), 0).isEmpty)
+  }
+
+  test("bounded over the cap throws, naming the cap") {
+    val df = spark.range(0, 1000, 1, 7).toDF("x")
+    // over the cap in one partition and only across partitions
+    for (cap <- Seq(100, 999)) {
+      val e = intercept[IllegalStateException](Materialize.bounded(df, cap))
+      assert(e.getMessage.contains(s"more than $cap rows"), e.getMessage)
+    }
+    assert(Materialize.bounded(df, 1000).length == 1000)
+  }
+
   test("Rank equals Spark's running-sum window with reuse off and with AQE off") {
     val base = spark.range(0, 1000, 1, 7).select(
       ((col("id") * 7919) % 1000).cast("string").as("k"), // unique
@@ -110,10 +131,9 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("q211 and a multi-round connectedComponents leave only their final snapshots persisted") {
-    // the edge table and four peel-round snapshots released; the two the
-    // result reads stay (the host ranking and the final degree table)
+    // q211 peels on the driver over two bounded collects: no snapshot
     val (_, q211) = Materialize.scope(SparkEntry.queries("q211_kcore")(spark, sf).collect())
-    assert(q211 <= 2, s"q211 held $q211 snapshots")
+    assert(q211 == 0, s"q211 held $q211 snapshots")
     // a 16-node path takes several pointer-jumping rounds
     import spark.implicits._
     val nodes = (0L until 16L).toDF("id")
@@ -175,8 +195,9 @@ class MaterializeSpec extends SparkSpec {
 
   test("job-count pins: q212 and q312 at sf0.01") {
     // measured on this 4-core session when each scalar moved into its
-    // checkpoint job (before: q212 50, q312 56)
-    val pins = Seq("q212_hits" -> 29, "q312_dedup_merge" -> 45)
+    // checkpoint job (before: q212 50, q312 56), and for q212 again when
+    // its host graph came to the driver in two bounded collects (29 → 6)
+    val pins = Seq("q212_hits" -> 6, "q312_dedup_merge" -> 45)
     val sf01 = new java.io.File(sf).getParent + "/sf0.01"
     val got = pins.map { case (name, _) =>
       val (_, rec) = Obs.measure(spark, name) {
